@@ -75,28 +75,32 @@ class TrackerProcessor(completionDelayMs: Long = 300000L)
 object TrackerProcessor {
 
   /** State/shuffle width for the tracker query — CONTROL-PLANE sized. The
-    * tracker keys on batchId (live-batch cardinality, not record volume), and
-    * the reference forces its whole tracker chain to parallelism 1
-    * (BaseValidationJob.scala:170). Width matters operationally, not just
-    * aesthetically: `transformWithState` under `TimeMode.ProcessingTime`
+    * tracker keys on batchId (live-batch cardinality, not record volume).
+    * Width 1 matches the reference, which forces its whole tracker chain to
+    * parallelism 1 (BaseValidationJob.scala:170). Width matters
+    * operationally: `transformWithState` under `TimeMode.ProcessingTime`
     * makes every trigger tick runnable (timers may be due), and EVERY tick
-    * snapshots/commits every state partition's RocksDB store — at the data
-    * plane's width (32) those idle-tick commits measurably drain the record
-    * query (StreamBench chunked throughput 2.6× worse). A few partitions
-    * keep timer fan-out without the per-tick tax. */
-  val ControlPlaneShufflePartitions: Int = 4
+    * commits every state partition's RocksDB store — at the data plane's
+    * width (32) those idle-tick commits measurably drain the record query
+    * (StreamBench chunked throughput 2.6× worse). [[controlPlaneSession]]
+    * also turns on RocksDB changelog checkpointing, so a tick writes one
+    * small changelog instead of uploading a snapshot zip and its SST files.
+    *
+    * An existing checkpoint keeps the width it recorded, because Spark pins
+    * a stateful query's partition count from its checkpoint; the width
+    * applies to fresh checkpoints. Changelog checkpointing needs no fresh
+    * checkpoint: a checkpoint written without it restores under it. */
+  val ControlPlaneShufflePartitions: Int = 1
 
   /** A child session sized for control-plane streaming queries: same
     * SparkContext and cache, isolated SQLConf with
-    * [[ControlPlaneShufflePartitions]] and the RocksDB state store provider
-    * (required by transformWithState in Spark 4). Build the tracker's
-    * SOURCES on this session too — a streaming query plans under the session
-    * its sources were created from. Note Spark pins a stateful query's
-    * partition count from its existing checkpoint, so pre-existing
-    * checkpoints keep their recorded width; the sizing applies to fresh
-    * checkpoints. */
-  def controlPlaneSession(spark: org.apache.spark.sql.SparkSession,
-      partitions: Int = ControlPlaneShufflePartitions): org.apache.spark.sql.SparkSession = {
+    * [[ControlPlaneShufflePartitions]], the RocksDB state store provider
+    * (required by transformWithState in Spark 4) and its changelog
+    * checkpointing. Build the tracker's SOURCES on this session too — a
+    * streaming query plans under the session its sources were created
+    * from. */
+  def controlPlaneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession = {
     val s = spark.newSession()
     // newSession() starts from the base SparkConf — carry the caller's
     // runtime overrides (timezone, ANSI, codegen flags) across FIRST so the
@@ -104,9 +108,11 @@ object TrackerProcessor {
     // and notification queries on the parent session; then apply this
     // session's deliberate divergences
     graft.util.SessionConfs.carryInto(spark, s)
-    s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    s.conf.set("spark.sql.shuffle.partitions", ControlPlaneShufflePartitions.toString)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "true")
     s
   }
 

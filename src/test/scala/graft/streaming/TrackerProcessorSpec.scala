@@ -3,7 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.model.{BatchNotification, Status}
 import graft.tracker._
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
@@ -197,55 +197,107 @@ class TrackerProcessorSpec extends AnyFunSuite with SparkSpec with Matchers {
     out should have size 2
   }
 
-  test("checkpoint restore: state and the armed completion timer survive a restart") {
-    val s = spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+  /** Restart one tracker checkpoint from `seed` onto `restore`. Run 1 on
+    * `seed` sees r1's SEND_COMPLETED and both of its counts, so the 5 s
+    * completion timer ARMS there; the run stops well before expiry, so
+    * nothing is emitted yet. Run 2 restarts the checkpoint on `restore`
+    * (its own source over the same two entries, as a retained topic is
+    * re-read) and can only emit r1 from restored state and the restored
+    * timer; `afterSeed` runs between the two. Returns run 1's emissions,
+    * run 2's emissions once the timer has fired and a settle window has
+    * passed, and run 2's state widths. */
+  private def restoreAcross(seed: SparkSession, restore: SparkSession, dir: String,
+      afterSeed: () => Unit = () => ())
+      : (Seq[BatchNotification], Seq[BatchNotification], Seq[Long]) = {
+    val feed = Seq(
+      Seq(TrackerInput.of(
+        NotificationEvent("r1", notif("r1", Status.SendCompleted, expected = 2)))),
+      Seq(TrackerInput.of(CountEvent("r1", true)), TrackerInput.of(CountEvent("r1", true))))
     implicit val enc: org.apache.spark.sql.Encoder[TrackerInput] =
       Encoders.product[TrackerInput]
-    val input = MemoryStream[TrackerInput]
-    val dir = java.nio.file.Files.createTempDirectory("tracker-restore").toString
     // foreachBatch (not the memory sink): the memory sink refuses to recover
     // from an existing checkpoint in Append mode, and recovery is the point
-    def start(name: String): StreamingQuery =
-      TrackerProcessor.track(input.toDS(), completionDelayMs = 5000L)
+    def start(session: SparkSession, name: String): (MemoryStream[TrackerInput], StreamingQuery) = {
+      val input = MemoryStream[TrackerInput](enc, session.sqlContext)
+      val q = TrackerProcessor.track(input.toDS(), completionDelayMs = 5000L)
         .writeStream
         .foreachBatch((batch: org.apache.spark.sql.Dataset[BatchNotification],
             _: Long) => NotifBuffer.add(name, batch.collect().toSeq))
         .option("checkpointLocation", dir)
         .trigger(Trigger.ProcessingTime("50 milliseconds"))
         .start()
+      (input, q)
+    }
     val sink1 = s"restore_a_${System.nanoTime}"
-    val q1 = start(sink1)
-    try {
-      input.addData(TrackerInput.of(
-        NotificationEvent("r1", notif("r1", Status.SendCompleted, expected = 2))))
-      awaitOffset(q1, 0)
-      input.addData(TrackerInput.of(CountEvent("r1", true)),
-        TrackerInput.of(CountEvent("r1", true)))
-      awaitOffset(q1, 1)
+    val (in1, q1) = start(seed, sink1)
+    try feed.zipWithIndex.foreach { case (rows, offset) =>
+      in1.addData(rows)
+      awaitOffset(q1, offset)
     } finally q1.stop()
-    // counts matched in run 1, so the 5 s completion timer ARMED there; the
-    // run stopped well before expiry, so nothing emitted yet
-    NotifBuffer.get(sink1) shouldBe empty
+    afterSeed()
     val sink2 = s"restore_b_${System.nanoTime}"
-    val q2 = start(sink2)
+    val (in2, q2) = start(restore, sink2)
     try {
+      feed.foreach(in2.addData(_)) // offsets 0-1: already committed, not re-read
       // nudge a DIFFERENT key so the engine constructs its first post-restart
       // micro-batch (with no new data and no lastExecution it would idle
-      // forever); the r1 emission can still only come from restored state +
-      // the restored timer firing after its original expiry
-      input.addData(TrackerInput.of(
+      // forever)
+      in2.addData(TrackerInput.of(
         NotificationEvent("nudge", notif("nudge", Status.Started))))
       val deadline = System.currentTimeMillis + 30000
-      while (NotifBuffer.get(sink2).size < 1 &&
+      while (NotifBuffer.get(sink2).isEmpty &&
         System.currentTimeMillis < deadline) Thread.sleep(50)
-      val out = NotifBuffer.get(sink2)
-      out.map(_.status) shouldBe Seq(Status.Completed)
-      out.head.actualRecordCount shouldBe 2 // both pre-restart counts restored
-      out.head.invalidRecordCount shouldBe 0
+      Thread.sleep(1000) // settle: many triggers past the fire, nothing EXTRA (T8)
+      (NotifBuffer.get(sink1), NotifBuffer.get(sink2),
+        q2.recentProgress.toSeq.flatMap(_.stateOperators).map(_.numShufflePartitions).distinct)
     } finally q2.stop()
+  }
+
+  /** RocksDB changelog files under a checkpoint's state directory. */
+  private def changelogs(dir: String): Seq[java.nio.file.Path] = {
+    val state = java.nio.file.Paths.get(dir, "state")
+    if (!java.nio.file.Files.exists(state)) Seq.empty
+    else {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(state)
+      try walk.iterator.asScala.filter(_.getFileName.toString.endsWith(".changelog")).toList
+      finally walk.close()
+    }
+  }
+
+  test("checkpoint restore: state and the armed completion timer survive a restart") {
+    // the production tracker configuration, on both sides of the restart
+    val session = TrackerProcessor.controlPlaneSession(spark)
+    val dir = java.nio.file.Files.createTempDirectory("tracker-restore").toString
+    val (before, after, widths) = restoreAcross(session, session, dir)
+    before shouldBe empty
+    after.map(_.status) shouldBe Seq(Status.Completed)
+    after.head.actualRecordCount shouldBe 2 // both pre-restart counts restored
+    after.head.invalidRecordCount shouldBe 0
+    widths shouldBe Seq(TrackerProcessor.ControlPlaneShufflePartitions.toLong)
+    changelogs(dir) should not be empty
+  }
+
+  test("a checkpoint written at width 4 without changelog restores under the control-plane session") {
+    // the tracker's configuration before it ran at width 1 with changelog
+    // checkpointing: 4 state partitions, a snapshot upload on every commit
+    val old = TrackerProcessor.controlPlaneSession(spark)
+    old.conf.set("spark.sql.shuffle.partitions", "4")
+    old.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "false")
+    val dir = java.nio.file.Files.createTempDirectory("tracker-upgrade").toString
+    val (before, after, widths) = restoreAcross(old,
+      TrackerProcessor.controlPlaneSession(spark), dir,
+      afterSeed = () => changelogs(dir) shouldBe empty)
+    before shouldBe empty
+    // exactly one terminal notification, from restored state and timer
+    after.map(_.status) shouldBe Seq(Status.Completed)
+    after.head.actualRecordCount shouldBe 2
+    after.head.invalidRecordCount shouldBe 0
+    // Spark pins the width the checkpoint recorded ...
+    widths shouldBe Seq(4L)
+    // ... while changelog checkpointing applies to the old checkpoint too
+    changelogs(dir) should not be empty
   }
 
   test("avro state encoding widens a checkpoint written with Int counters to the Long schema") {

@@ -236,6 +236,48 @@ class ValidationStreamSpec extends AnyFunSuite with SparkSpec with Matchers {
     calls.get() shouldBe 1
   }
 
+  test("the miss-scan chunk equals a plain-Scala distinct, hash-ordered take, in one narrow job") {
+    val s = spark
+    import s.implicits._
+    // 3 partitions: "spread" and "two-topic" have records in every one,
+    // "two-topic" under t1 in one and t2 in the others; m-* ids repeat
+    val t1 = "ingest.t1.claims.in"
+    val t2 = "ingest.t2.claims.in"
+    val parts = (0 until 3).map(p =>
+      (0 until 30).filter(_ % 3 == p).flatMap(i => Seq.fill(1 + i % 2)((s"m-$i", t1))) ++
+        Seq(("spread", t1), ("two-topic", if (p == 0) t1 else t2)))
+    val pairs = s.sparkContext.parallelize(parts, 3).flatMap(identity)
+      .toDF("batch_id", "topic")
+    pairs.rdd.getNumPartitions shouldBe 3
+    val rows = parts.flatten
+    val distinctPairs = rows.distinct
+    distinctPairs should have size 33
+    def hash(id: String, salt: Long): Long =
+      new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
+        org.apache.spark.sql.catalyst.expressions.Literal(id),
+        org.apache.spark.sql.catalyst.expressions.Literal(salt)))
+        .eval().asInstanceOf[Long]
+    for (salt <- Seq(0L, 7L); cap <- Seq(1, 5, 32, 33, 34, 64)) {
+      // the two pairs of one id share a hash; id then topic break the tie
+      val referee = distinctPairs
+        .sortBy { case (id, topic) => (hash(id, salt), id, topic) }
+        .take(cap)
+      val group = s"miss-referee-$salt-$cap"
+      s.sparkContext.setJobGroup(group, group)
+      val chunk = try ValidationStream.lowestHashPairs(pairs, salt, cap)
+        finally s.sparkContext.clearJobGroup()
+      withClue(s"salt=$salt cap=$cap: ") {
+        chunk shouldBe referee
+        // resolveMisses' drained rule: a short chunk means an exhaustive scan
+        (chunk.size < cap) shouldBe (distinctPairs.size < cap)
+        val jobs = s.sparkContext.statusTracker.getJobIdsForGroup(group).toSeq
+        jobs should have size 1
+        s.sparkContext.statusTracker.getJobInfo(jobs.head).get.stageIds() should
+          have size 1
+      }
+    }
+  }
+
   test("a restart backlog of >64 legitimate new batches resolves fully in one trigger") {
     val s = spark
     import s.implicits._
@@ -427,6 +469,18 @@ class ValidationStreamSpec extends AnyFunSuite with SparkSpec with Matchers {
         graft.model.Schemas.batchNotification).as("n"))
       .select($"n.*"))
     store.get("b2").map(_.getAs[String]("status")) shouldBe Some(Status.Started)
+  }
+
+  test("the snapshot broadcast is a local relation") {
+    val s = spark
+    val store = new NotificationSnapshot(s, None)
+    store.put("b1", Row("b1", "n", "ingest.t1.claims.in", "claims", Status.Started,
+      null, null, 10, -1, -1, -1, null, null))
+    val snap = store.snapshot()
+    // a LocalRelation needs no Spark job to broadcast, unlike an RDD scan
+    snap.queryExecution.analyzed shouldBe a[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    snap.collect().map(_.getAs[String]("id")) shouldBe Array("b1")
   }
 
   test("snapshot persists across restart (journal + reload)") {
