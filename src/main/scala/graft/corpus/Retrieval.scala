@@ -13,16 +13,17 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (the part that must survive 100 TB): the query set is bounded
   * by construction (an eval suite, a task description sheet, a handful of
-  * seed documents — X22's broadcast justification), so its DISTINCT term
-  * vocabulary broadcasts. The corpus pass prunes postings to that vocabulary
-  * with a broadcast semi-join BEFORE any shuffle — the per-(doc, term)
-  * term-frequency aggregate, the document-frequency table, and the final
-  * per-(query, doc) score sum all operate on the ~|query-vocab| slice of the
-  * postings, never the full corpus token stream. The only corpus-sized work
-  * is the narrow tokenize + length projection feeding that semi-join; corpus
-  * statistics (N, avgdl) collapse to one broadcast row. Nothing is quadratic
-  * in the corpus; candidate fan-out is bounded by how many documents share a
-  * query term (the classic inverted-index posting-list bound).
+  * seed documents — X22's broadcast justification), so it is collected to
+  * the driver and enters every plan as literals. The corpus pass counts each
+  * document's term frequencies inside its own row ([[termFreqs]]) and prunes
+  * them to the sheet vocabulary with one literal map probe per term, BEFORE
+  * any shuffle — the document-frequency window and the per-document score
+  * aggregate operate on the ~|query-vocab| slice of the postings, never the
+  * full corpus token stream. The only corpus-sized work is that narrow
+  * tokenize + count projection; corpus statistics (N, avgdl) collapse to one
+  * broadcast row. Nothing is quadratic in the corpus; candidate fan-out is
+  * bounded by how many documents share a query term (the classic
+  * inverted-index posting-list bound).
   *
   * Determinism / oracle parity: per-term BM25 contributions are rounded to
   * 6 dp then DECIMAL-summed (x19's order-independence trick), so the two
@@ -96,6 +97,10 @@ object Retrieval {
     *
     * Output: (query_id, doc_id, n_terms, score, rank), rank 1..k per query by
     * (score desc, doc_id asc); queries whose terms match nothing emit no rows.
+    *
+    * Construction runs one Spark action: the collect of the query sheet's
+    * distinct (query, term) pairs ([[collectSheet]]). The returned frame is
+    * the scoring pass only.
     */
   def bm25TopK(docs: DataFrame, queryMod: Long = QueryMod,
       k: Int = DefaultTopK): DataFrame = {
@@ -119,32 +124,49 @@ object Retrieval {
       .groupBy(_._1).toSeq
       .map { case (q, rs) => (q, rs.map(r => (r._2, 1L))) }
 
-  /** [[bm25TopK]]'s core over an explicit corpus/sheet split: the shared
-    * pass shape [[rm3TopK]]'s first pass reuses with PRE-COLLECTED corpus
-    * stats (its construction runs two scoring passes, and letting each
+  /** Per-document term frequencies: one row per (document, distinct term),
+    * `(doc_id, dl, w, tf)` with `dl` the document's token count and `tf`
+    * every occurrence of `w` in it. Each distinct term is counted inside
+    * its own document row — `explode(array_distinct(tokens))`, then the
+    * optional `vocab` prune (a literal term map, [[sheetVocabLit]]; None
+    * keeps every term), then the term's count in the token array — so no
+    * (doc, term) shuffle runs. The count is `dl − size(array_remove(tokens,
+    * w))`: `array_remove` is code-generated, where the equivalent
+    * `size(filter(tokens, _ === w))` is an interpreted higher-order function
+    * (sf0.1 documents, all 116,231 (doc, term) rows in one task on a
+    * 4-core host, min-of-5: 0.19–0.22 s vs 0.96–1.10 s, identical rows).
+    *
+    * Precondition: `doc_id` is unique per row. A (doc, term) aggregate
+    * would merge two rows sharing an id; this emits one row per copy. The
+    * driver tables hold it: 500 distinct ids in 500 rows at sf0.01, 5000
+    * in 5000 at sf0.1. */
+  private def termFreqs(docs: DataFrame, vocab: Option[Column]): DataFrame = {
+    val terms = docs
+      .select(col("doc_id"), ws.as("ws"))
+      .select(col("doc_id"), size(col("ws")).as("dl"), col("ws"),
+        explode(array_distinct(col("ws"))).as("w"))
+    vocab.fold(terms)(v => terms.filter(map_contains_key(v, col("w"))))
+      .select(col("doc_id"), col("dl"), col("w"),
+        (col("dl") - size(array_remove(col("ws"), col("w")))).cast("long")
+          .as("tf"))
+  }
+
+  /** [[bm25TopK]]'s core over an explicit corpus/sheet split, also both
+    * scoring passes of [[rm3TopK]] (`rm3Scale` for its weighted second
+    * pass). RM3 passes PRE-COLLECTED corpus stats: letting each pass
     * recompute the one-row (N, avgdl) aggregate re-scanned the corpus once
-    * per pass — the stats literal removes a full narrow corpus scan from
-    * the RM3 chain; values identical by construction, collected from the
-    * same aggregate the lazy crossJoin evaluated). */
+    * per pass; the values are identical by construction, collected from
+    * the same aggregate the lazy crossJoin evaluates. */
   private def bm25TopKOn(corpus: DataFrame,
       sheet: Seq[(Long, Seq[(String, Long)])], k: Int,
-      stats: Option[(Long, Double)]): DataFrame = {
-    // narrow corpus pass: doc length + tokens, pruned to the query
-    // vocabulary BEFORE the tf shuffle — by ONE literal map probe per
-    // token (the sheet is a collected driver artifact, so the prune needs
-    // no broadcast build and no semi join at all; r20, replacing the
-    // ReuseExchange-folded broadcast-semi shape)
-    val ctoks = corpus
-      .select(col("doc_id"), size(ws).as("dl"), explode(ws).as("w"))
-      .filter(map_contains_key(sheetVocabLit(sheet), col("w")))
-    val tf = ctoks.groupBy(col("doc_id"), col("dl"), col("w"))
-      .agg(count(lit(1)).as("tf"))
+      stats: Option[(Long, Double)], rm3Scale: Boolean = false): DataFrame = {
+    val tf = termFreqs(corpus, Some(sheetVocabLit(sheet)))
     // df over the pruned postings = df of exactly the query terms — computed
     // as a COUNT window over the tf stream itself, not a groupBy+join back:
     // the join form duplicates the whole tokenize→prune→tf subtree into a
     // second physical pipeline (measured 2× the query's cost; exchange reuse
-    // does not rescue it through AQE), while the window re-shuffles only the
-    // already-aggregated per-(doc, term) rows on the term key
+    // does not rescue it through AQE), while the window shuffles only the
+    // pruned per-(doc, term) rows on the term key
     val tfd = tf.withColumn("df", count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy(col("w"))))
     val withStats = stats match {
@@ -152,62 +174,71 @@ object Retrieval {
         tfd.withColumn("n", lit(n)).withColumn("avgdl", lit(avgdl))
       case None => tfd.crossJoin(broadcast(corpusStats(corpus)))
     }
-    scoreTail(withStats, sheet, k, rm3Scale = false)
+    scoreTail(withStats, sheet, k, rm3Scale)
   }
 
-  /** The sheet vocabulary as ONE literal map (term → 1) for the pre-tf
-    * token prune: `map_contains_key` is a codegen'd hash probe per token,
-    * identical selectivity to the broadcast left-semi it replaces, with no
+  /** The sheet vocabulary as ONE literal map (term → 1) for the term
+    * prune: `map_contains_key` is a codegen'd hash probe per term, with no
     * broadcast build job and no join in the plan. */
   private def sheetVocabLit(sheet: Seq[(Long, Seq[(String, Long)])]): Column =
     typedLit(sheet.flatMap(_._2.map(_._1)).distinct.map(w => w -> 1).toMap)
 
-  /** Sheet-size bound for the DENSE slot-kernel scoring tail
-    * ([[denseScoreTail]]): up to this many queries, every document
-    * aggregates one fixed-width score/term-count slot pair per query —
-    * 2·|sheet| long buffer columns per group. Past it, the buffer width
-    * (and the generated aggregate) stops being the cheap shape and the
-    * classic sheet-join fan form takes over ([[fanScoreTail]]). The
-    * driver sheet is 32 queries ([[QueryCount]]); 64 leaves headroom
-    * without ever generating a pathological 1000-column aggregate. */
+  /** Chunk width of [[scoreTail]]: every document aggregates one
+    * fixed-width score/term-count slot pair per query — 2·|chunk| long
+    * buffer columns per group — so a wider sheet is scored in chunks of
+    * this many queries rather than generating a pathological 1000-column
+    * aggregate. The driver sheet is 32 queries ([[QueryCount]]); 64 leaves
+    * headroom. */
   val MaxDenseSheetQueries: Int = 64
 
-  /** Shared scoring tail dispatch: input carries (doc_id, dl, w, tf, df,
-    * n, avgdl) pruned to the sheet vocabulary; `sheet` holds per query its
-    * (term, weight) pairs — weight 1 for plain BM25, exact micro units for
-    * RM3 pass 2 (`rm3Scale` adds that path's extra 10⁻⁶ rescale).
+  /** Shared scoring tail: input carries (doc_id, dl, w, tf, df, n, avgdl);
+    * `sheet` holds per query its (term, weight) pairs — weight 1 for plain
+    * BM25, exact micro units for RM3 pass 2 (`rm3Scale` adds that path's
+    * extra 10⁻⁶ rescale). Output: (query_id, doc_id, n_terms, score, rank).
+    *
+    * The queries are sorted by qid and scored by [[denseScoreTail]] in
+    * chunks of [[MaxDenseSheetQueries]]; the chunk results are unioned,
+    * exact because ranking is per query and the chunks' qids are disjoint.
+    * An empty sheet yields an empty frame with the output schema.
+    *
+    * Input precondition: rows pruned to the sheet vocabulary. It is a cost
+    * precondition, not a correctness one: an unpruned row's term misses the
+    * slot-vector maps, `element_at` returns NULL for a missing key (also
+    * under ANSI mode, Spark 4.1.2), and a NULL slot adds nothing to any
+    * score or term count — so such a row scores nothing and pruning only
+    * saves work.
     *
     * WHY a dense kernel (r20, guide §2.3/§2.4 — the round's biggest
-    * single win): the fan form joins every pruned posting against the
-    * sheet, multiplying rows by the queries sharing the term — measured at
-    * sf0.1: 2.70 M fanned rows whose (qid, doc) partial aggregate
-    * collapsed only to 2.06 M (the per-partition key space barely
-    * repeats) while paying avgHashProbe ≈ 160–373 (consecutive ids
-    * cluster in the generated fast hash map) and an 82 MB shuffle. The
-    * dense form never fans: each posting row updates one score slot and
-    * one term-count slot per query in a doc_id-keyed aggregate — rows
-    * through the aggregate = postings (116 k), groups = documents
-    * (4.9 k), shuffle = docs × 2·|sheet| longs (~2.5 MB) — then one
-    * bounded unpivot emits exactly the (qid, doc) pairs the fan form's
-    * final aggregate produced. Slot sums are the SAME long additions in a
-    * different order — commutative, so scores are bit-identical, and the
+    * single win): the sheet-join fan form it replaced multiplied each
+    * pruned posting by the queries sharing its term — measured at sf0.1:
+    * 2.70 M fanned rows whose (qid, doc) partial aggregate collapsed only
+    * to 2.06 M while paying avgHashProbe ≈ 160–373 and an 82 MB shuffle.
+    * The dense form never fans: each posting row updates one score slot
+    * and one term-count slot per query in a doc_id-keyed aggregate — rows
+    * through the aggregate = postings (116 k), groups = documents (4.9 k),
+    * shuffle = docs × 2·|sheet| longs (~2.5 MB) — then one bounded unpivot
+    * emits the (qid, doc) pairs that share a term. Slot sums are exact
+    * long additions, commutative, so scores are order-independent, and
     * (qid, doc) pairs with no shared term carry slot count 0 and are
-    * filtered exactly like the inner join dropped them. */
+    * filtered. */
   private def scoreTail(tfd: DataFrame,
       sheet: Seq[(Long, Seq[(String, Long)])], k: Int,
-      rm3Scale: Boolean): DataFrame =
-    if (sheet.size <= MaxDenseSheetQueries && sheet.nonEmpty)
-      denseScoreTail(tfd, sheet, k, rm3Scale)
-    else fanScoreTail(tfd, sheet, k, rm3Scale)
+      rm3Scale: Boolean): DataFrame = {
+    val chunks = sheet.sortBy(_._1).grouped(MaxDenseSheetQueries).toSeq
+    if (chunks.isEmpty)
+      // a term-less query scores nothing; limit(0) folds to an empty
+      // relation at optimization, so no job runs
+      denseScoreTail(tfd, Seq(0L -> Nil), k, rm3Scale).limit(0)
+    else chunks.map(denseScoreTail(tfd, _, k, rm3Scale)).reduce(_ union _)
+  }
 
-  /** The BM25 per-posting contribution in exact integer MICRO units —
-    * shared by both tail forms so they cannot drift. `term` is already on
-    * the 10⁻⁶ grid, so round(term·10⁶) recovers its exact micro integer
-    * (term ≤ ln(2N)·(k1+1) ≈ 21·2.2 at N = 10⁹, so term·10⁶ ≤ ~5·10⁷
-    * carries ≤ 10⁻⁸ absolute double error — never near the .5 rounding
-    * boundary), and a LONG sum buffer replaces the decimal(24,6) one whose
-    * every add was a BigDecimal allocation (measured: the fan-in
-    * join+partial-agg stage was the plan's hottest, r19 profile). */
+  /** The BM25 per-posting contribution in exact integer MICRO units.
+    * `term` is already on the 10⁻⁶ grid, so round(term·10⁶) recovers its
+    * exact micro integer (term ≤ ln(2N)·(k1+1) ≈ 21·2.2 at N = 10⁹, so
+    * term·10⁶ ≤ ~5·10⁷ carries ≤ 10⁻⁸ absolute double error — never near
+    * the .5 rounding boundary), and a LONG sum buffer replaces the decimal(24,6) one whose
+    * every add was a BigDecimal allocation (r19 profile: the score
+    * aggregate stage was the plan's hottest). */
   private def microTerm: Column = {
     val idf = log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
     val norm = (col("tf") * K1Plus1) /
@@ -235,8 +266,7 @@ object Retrieval {
     * layout keeps generated code identical across runs). A term carrying
     * weight 0 in a query still counts toward that query's n_terms when a
     * posting matches (presence ≠ weight — the RM3 half-up division can
-    * legitimately produce a zero micro weight), exactly like the fan
-    * form's join row with wt = 0. */
+    * legitimately produce a zero micro weight). */
   private def denseScoreTail(tfd: DataFrame,
       sheet: Seq[(Long, Seq[(String, Long)])], k: Int,
       rm3Scale: Boolean): DataFrame = {
@@ -280,48 +310,6 @@ object Retrieval {
         col("score"), col("rank"))
   }
 
-  /** The classic sheet-join fan tail — the > [[MaxDenseSheetQueries]]
-    * fallback (a sheet too wide for per-group slot buffers): expands each
-    * posting by the queries sharing its term, partial-aggregates the
-    * fanned stream, ranks. */
-  private def fanScoreTail(tfd: DataFrame,
-      sheet: Seq[(Long, Seq[(String, Long)])], k: Int,
-      rm3Scale: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import tfd.sparkSession.implicits._
-    val weights = tfd.sparkSession.sparkContext
-      .parallelize(sheet.flatMap { case (q, tws) =>
-        tws.map { case (w, wt) => (q, w, wt) } })
-      .toDF("qid", "w", "wt")
-    // the sheet join EXPANDS each posting by the number of queries sharing
-    // its term (~|queries| on a dense vocabulary) and the partial aggregate
-    // runs in the same stage — compute-bound work that AQE sizes by the tiny
-    // pre-join byte count, coalescing the stage to ONE task (measured: the
-    // whole query serialized through it). An explicit round-robin
-    // repartition to the cluster's core count pins the fan-out stage at
-    // compute parallelism; its input is the already-aggregated per-(doc,
-    // term) table, so the extra exchange is a rounding error at any scale
-    // next to the expansion it parallelizes. The BM25 contribution is
-    // QUERY-independent, so [[microTerm]] computes it once per posting —
-    // NOT after the sheet join, where the identical log/divide/round chain
-    // re-evaluated per (query, posting) fanned row (measured 2.3× on the
-    // whole query; Catalyst does not hoist projections through joins on
-    // its own).
-    val fanIn = tfd
-      .select(col("doc_id"), col("w"), microTerm.as("t"))
-      .repartition(tfd.sparkSession.sparkContext.defaultParallelism)
-    fanIn
-      .join(broadcast(weights), "w")
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-        microScore(sum(col("t") * col("wt")), rm3Scale).as("score"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("doc_id"), col("n_terms"),
-        col("score"), col("rank"))
-  }
-
   /** Corpus-side BM25 index: the FULL corpus vocabulary's document
     * frequencies with the corpus statistics (N, avgdl) denormalized onto
     * every row — the artifact a deployment builds once per corpus snapshot
@@ -353,20 +341,18 @@ object Retrieval {
     * IDENTICAL to the self-contained [[bm25TopK]] (spec-pinned, x51's
     * parity discipline).
     *
-    * Scale: increment tokenizes and prunes narrowly (one literal map probe
-    * per token — the collected sheet, r20), aggregates tf, then
-    * shuffle-joins the index on the term key — with a bucketed index every
-    * exchange is INCREMENT-side and the index reads in place (spec-pinned
-    * plan shape). */
+    * Scale: the increment's tf is counted in-row and pruned narrowly (one
+    * literal map probe per term, [[termFreqs]]), then shuffle-joins the
+    * index on the term key — with a bucketed index every exchange is
+    * INCREMENT-side and the index reads in place (spec-pinned plan shape).
+    *
+    * Construction runs one Spark action: the query-sheet collect
+    * ([[collectSheet]]). The returned frame is the scoring pass only. */
   def bm25TopKAgainst(newDocs: DataFrame, index: DataFrame,
       queryDocs: DataFrame, k: Int = DefaultTopK): DataFrame = {
     val sheet = collectSheet(queryDocs)
-    val tf = newDocs
-      .select(col("doc_id"), size(ws).as("dl"), explode(ws).as("w"))
-      .filter(map_contains_key(sheetVocabLit(sheet), col("w")))
-      .groupBy(col("doc_id"), col("dl"), col("w"))
-      .agg(count(lit(1)).as("tf"))
-    scoreTail(tf.join(index, "w"), sheet, k, rm3Scale = false)
+    scoreTail(termFreqs(newDocs, Some(sheetVocabLit(sheet))).join(index, "w"),
+      sheet, k, rm3Scale = false)
   }
 
   /** Driver-held scoring model for [[bm25IngestGate]]: the frozen corpus
@@ -722,7 +708,7 @@ object Retrieval {
     * such documents still surface on lexical evidence alone.
     *
     * Scale shape: all the N-scale work lives in the two candidate
-    * generators, each already scale-shaped (BM25: broadcast-semi pruned
+    * generators, each already scale-shaped (BM25: literal-map-pruned in-row
     * postings; dense: the pluggable [[DenseCandidates]] generator —
     * [[exactDenseCandidates]] by default, [[ivfDenseCandidates]] /
     * [[ivfAdcDenseCandidates]] at larger N, same contract). The fusion
@@ -792,9 +778,9 @@ object Retrieval {
     * vocabulary, so pass 1's pruned postings cannot supply them); the
     * expanded weight sheet ((|sheet| × (qlen + fbTerms))-bounded) is
     * assembled driver-side and enters the second scoring pass as literals —
-    * the vocabulary prune is one map-contains probe per token and the
-    * scoring is [[scoreTail]]'s dense slot kernel (r20): no sheet join,
-    * no broadcast build, aggregate and rank exactly like [[bm25TopK]].
+    * the same pass as [[bm25TopK]]'s ([[bm25TopKOn]]: in-row tf, one
+    * map-contains probe per term, [[scoreTail]]'s dense slot kernel), with
+    * the RM3 weight rescale.
     *
     * Determinism / oracle parity: RM1 contributions are rounded to 9 dp and
     * DECIMAL-summed (x19's trick), then carried as exact integer NANO-units;
@@ -811,18 +797,18 @@ object Retrieval {
     * contributions are the exact DECIMAL product `bm25_term(14,6) ×
     * wt_micro`, summed exactly, divided by 10⁶ once at the end.
     *
-    * EAGER-SNAPSHOT SEMANTICS (API contract): pass 1 and the weight sheet
-    * run as Spark jobs AT CONSTRUCTION TIME and freeze into plan literals —
-    * the returned frame is pass 2 only. Treat it as single-shot over an
-    * immutable input: if the `docs` source changes between construction and
-    * execution (or the frame is re-executed later over changed data), pass
-    * 2 scores the NEW corpus against the STALE frozen feedback/weights with
+    * EAGER-SNAPSHOT SEMANTICS (API contract): the query-sheet collect, the
+    * one-row corpus stats, pass 1 and the weight sheet run as Spark jobs AT
+    * CONSTRUCTION TIME and freeze into plan literals — the returned frame
+    * is pass 2 only. Treat it as single-shot over an immutable input: if
+    * the `docs` source changes between construction and execution (or the
+    * frame is re-executed later over changed data), pass 2 scores the NEW
+    * corpus against the STALE frozen feedback/weights with
     * no warning. Same contract as every bounded-driver-artifact operator
     * here (centroids, codebooks, [[Similarity.mmrTopK]]'s pool). */
   def rm3TopK(docs: DataFrame, queryMod: Long = QueryMod,
       k: Int = DefaultTopK, fbDocs: Int = Rm3FbDocs,
       fbTerms: Int = Rm3FbTerms): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val isQuery = querySheetCol(queryMod)
     val corpus = docs.filter(!isQuery)
     val sheet1 = collectSheet(docs.filter(isQuery))
@@ -850,29 +836,13 @@ object Retrieval {
     // feedback docs' FULL term distributions (the expansion source): the
     // bounded id list becomes an isin literal the parquet scan pushes down
     val fbIds = fbRows.map(_._2).distinct.toSeq
-    val fbtf = corpus
-      .filter(col("doc_id").isin(fbIds: _*))
-      .select(col("doc_id"), size(ws).as("dl"), explode(ws).as("w"))
-      .groupBy(col("doc_id"), col("dl"), col("w"))
-      .agg(count(lit(1)).as("tf"))
+    val fbtf = termFreqs(corpus.filter(col("doc_id").isin(fbIds: _*)), None)
 
     val wsheet = rm3WeightSheet(fbRows, fbtf,
       origWeights(docs.filter(isQuery)), fbTerms)
 
-    // pass 2: BM25 postings pruned to the expanded vocabulary (one literal
-    // map probe per token — the collected weight sheet, r20), weighted sum.
-    val tf2 = corpus
-      .select(col("doc_id"), size(ws).as("dl"), explode(ws).as("w"))
-      .filter(map_contains_key(sheetVocabLit(wsheet), col("w")))
-      .groupBy(col("doc_id"), col("dl"), col("w"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("w"))))
-    val tf2s = st match {
-      case Some((n, avgdl)) =>
-        tf2.withColumn("n", lit(n)).withColumn("avgdl", lit(avgdl))
-      case None => tf2.crossJoin(broadcast(corpusStats(corpus)))
-    }
-    scoreTail(tf2s, wsheet, k, rm3Scale = true)
+    // pass 2: the BM25 pass under the expanded, weighted sheet
+    bm25TopKOn(corpus, wsheet, k, st, rm3Scale = true)
   }
 
   /** The shared RM3 weight-sheet assembly ([[rm3TopK]] ↔
@@ -880,8 +850,7 @@ object Retrieval {
     * feedback documents' full term distributions, and the original-query
     * term weights, build the interpolated `(qid, w, wt)` micro-unit sheet
     * as a COLLECTED driver artifact — (|sheet| × (qlen + fbTerms))-bounded,
-    * grouped per query for [[scoreTail]]'s dense kernel (the fan fallback
-    * re-distributes it). Per-query score
+    * grouped per query for [[scoreTail]]'s dense kernel. Per-query score
     * normalizers sum exactly in BigDecimal: each score is a
     * DECIMAL(14,6)-cast double, ≤ 14 significant digits, so
     * BigDecimal.valueOf (via Double.toString) recovers the exact decimal
@@ -937,30 +906,23 @@ object Retrieval {
   }
 
   /** Original-query term distribution as exact integer micro half-weights:
-    * `(10⁶·qtf + qlen) div (2·qlen)` — the integer half-up division (x78
-    * discipline; a double `round(qtf/qlen/2, 6)` can land on a half-micro
-    * tie where the engines' rounding disagrees). */
+    * `(10⁶·qtf + qlen) div (2·qlen)` with qtf = [[termFreqs]]' `tf` and
+    * qlen its `dl` — the integer half-up division (x78 discipline; a double
+    * `round(qtf/qlen/2, 6)` can land on a half-micro tie where the engines'
+    * rounding disagrees). */
   private def origWeights(queryDocs: DataFrame): DataFrame =
-    queryDocs
-      .select(col("doc_id").as("qid"), size(ws).as("qlen"),
-        explode(ws).as("w"))
-      .groupBy(col("qid"), col("qlen"), col("w"))
-      .agg(count(lit(1)).as("qtf"))
-      .select(col("qid"), col("w"),
-        expr("(1000000L * qtf + qlen) div (2L * qlen)").as("om"))
+    termFreqs(queryDocs, None)
+      .select(col("doc_id").as("qid"), col("w"),
+        expr("(1000000L * tf + dl) div (2L * dl)").as("om"))
 
   /** Corpus-side BM25 POSTINGS — the classic inverted index: one row per
     * (document, term) with the term frequency and the document's length,
     * the corpus-scale artifact [[rm3TopKAgainst]] probes so that NO RM3
     * pass ever re-tokenizes a corpus the index already digested (the
     * vocabulary-level [[bm25Index]] holds df/N/avgdl but not per-doc tf —
-    * scoring needs both). One corpus pass: narrow tokenize + one
-    * map-side-partial (doc, term) aggregate. */
-  def bm25Postings(corpus: DataFrame): DataFrame =
-    corpus
-      .select(col("doc_id"), size(ws).as("dl"), explode(ws).as("w"))
-      .groupBy(col("doc_id"), col("dl"), col("w"))
-      .agg(count(lit(1)).as("tf"))
+    * scoring needs both). One narrow corpus pass ([[termFreqs]]), no
+    * shuffle. Schema: (doc_id bigint, dl int, w string, tf bigint). */
+  def bm25Postings(corpus: DataFrame): DataFrame = termFreqs(corpus, None)
 
   /** Persist [[bm25Postings]] BUCKETED on the term key (x54's storage
     * contract, [[writeBm25Index]]'s bucket default) so every probe's
@@ -997,7 +959,11 @@ object Retrieval {
     * With both artifacts persisted via [[writeBm25Postings]] /
     * [[writeBm25Index]] at matching bucket counts, every postings↔index
     * join co-locates on the term buckets — the only exchanges left are the
-    * bounded aggregate/rank shuffles (spec-pinned plan shape). */
+    * bounded aggregate/rank shuffles (spec-pinned plan shape).
+    *
+    * Construction runs three Spark actions, the [[rm3TopK]] eager-snapshot
+    * contract: the query-sheet collect, pass 1's feedback collect and the
+    * weight-sheet collect. The returned frame is pass 2 only. */
   def rm3TopKAgainst(postings: DataFrame, index: DataFrame,
       queryDocs: DataFrame, k: Int = DefaultTopK, fbDocs: Int = Rm3FbDocs,
       fbTerms: Int = Rm3FbTerms): DataFrame = {

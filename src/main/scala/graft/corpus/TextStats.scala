@@ -604,8 +604,10 @@ object TextStats {
     // argmax can never pick a different pair (referee-pinned equality on
     // random corpora incl. a forced-distributed run, RetrievalSpec). At a
     // real corpus's vocabulary (≥ millions) the distributed loop below
-    // runs unchanged.
-    val nWords = words.count() // also materializes the lazy checkpoint
+    // runs unchanged. The count stops at localVocabCap + 1 words: the
+    // branch needs no more, and a large vocabulary is never counted in full.
+    val nWords =
+      words.limit(math.min(localVocabCap, Int.MaxValue - 1L).toInt + 1).count()
     if (nWords <= localVocabCap) {
       val local = words.collect().map(r =>
         (r.getSeq[String](0).toArray, r.getLong(1)))

@@ -47,22 +47,9 @@ class NotificationSnapshot(spark: SparkSession, persistDir: Option[String]) exte
           fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))).map(_ -> p)
       }.sortBy(_._1)
 
-  persistDir.foreach { dir =>
-    val versions = journalVersions(dir)
-    versions.lastOption match {
-      case Some((v, p)) =>
-        journalVersion.set(v)
-        spark.read.parquet(p.toString).collect().foreach(r => byId(r.getAs[String]("id")) = r)
-      case None =>
-        // pre-versioning layout compat: a checkpoint dir written before the
-        // journal became versioned holds a single `snapshot.parquet` —
-        // _SUCCESS-gated like the versioned path, so a crash mid-write of the
-        // old layout can't feed a partial snapshot in
-        val legacy = new org.apache.hadoop.fs.Path(dir, "snapshot.parquet")
-        if (fs.exists(new org.apache.hadoop.fs.Path(legacy, "_SUCCESS")))
-          spark.read.parquet(legacy.toString).collect()
-            .foreach(r => byId(r.getAs[String]("id")) = r)
-    }
+  persistDir.flatMap(journalVersions(_).lastOption).foreach { case (v, p) =>
+    journalVersion.set(v)
+    spark.read.parquet(p.toString).collect().foreach(r => byId(r.getAs[String]("id")) = r)
   }
 
   /** Last-write-wins upsert of a notification micro-batch (V2). Rows must carry

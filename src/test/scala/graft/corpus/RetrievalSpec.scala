@@ -90,6 +90,8 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
     // the sheet itself enters as slot literals, not a join: the fan
     // BroadcastHashJoin on the term key is gone
     plan should not include "BroadcastHashJoin"
+    // tf is counted inside each document row: no (doc, dl, term) exchange
+    "hashpartitioning\\(doc_id#\\d+L?, dl#\\d+, w#".r.findFirstIn(plan) shouldBe None
   }
 
   test("tokenizer fertility: sums referee against applyBpe, ratios are " +
@@ -288,10 +290,9 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
       val rendered = finalPlan.toString
       // both artifacts enter as bucketed FileScans with nothing above them
       "SelectedBucketsCount: 4 out of 4".r.findAllIn(rendered).size shouldBe 2
-      // the returned (pass-2) plan's only hash exchanges: the explicit
-      // fan-out repartition is round-robin, so hashpartitioning mentions
-      // are the per-(query, doc) score aggregate and the ranking window —
-      // an artifact-side exchange would add a term-keyed third
+      // the returned (pass-2) plan's only hash exchanges: the dense
+      // per-document slot aggregate and the ranking window — an
+      // artifact-side exchange would add a term-keyed third
       val hashEx = "Exchange hashpartitioning".r.findAllIn(rendered).size
       assert(hashEx <= 2, s"artifact-side exchange crept in:\n$rendered")
       rendered should not include "Exchange hashpartitioning(w#"
@@ -477,6 +478,43 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
     key(viaIndex) shouldBe self
   }
 
+  test("a sheet wider than MaxDenseSheetQueries: bm25 and rm3 against " +
+      "the index equal the union of one-query runs") {
+    val rnd = new scala.util.Random(70)
+    val vocab = Vector.tabulate(24)(i => s"t$i")
+    def text(n: Int) =
+      Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val corpus = docs((1000L until 1120L).map(i =>
+      i -> text(3 + rnd.nextInt(10))): _*)
+    val nq = 70L
+    Retrieval.MaxDenseSheetQueries.toLong should be < nq
+    val queries = docs((0L until nq).map(i => i -> text(1 + rnd.nextInt(3))): _*)
+    val postings = Retrieval.bm25Postings(corpus).localCheckpoint()
+    val index = Retrieval.bm25Index(corpus).localCheckpoint()
+    def key(df: DataFrame) = df.collect().map(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
+        r.getAs[Long]("n_terms"), r.getAs[Double]("score"),
+        r.getAs[Int]("rank"))).toSet
+    // the 2 × 70 one-query runs go four at a time: each is a handful of
+    // small jobs, so a serial loop is all driver-side scheduling
+    def perQuery(run: DataFrame => DataFrame) = {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      try Await.result(Future.traverse((0L until nq).toList)(q =>
+          Future(key(run(queries.filter(col("doc_id") === q))))),
+        scala.concurrent.duration.Duration(10, "min")).reduce(_ ++ _)
+      finally pool.shutdown()
+    }
+    val bm = key(Retrieval.bm25TopKAgainst(corpus, index, queries))
+    // every query matches, so both sides of the 64-query boundary score
+    bm.map(_._1) shouldBe (0L until nq).toSet
+    bm shouldBe perQuery(Retrieval.bm25TopKAgainst(corpus, index, _))
+    val rm = key(Retrieval.rm3TopKAgainst(postings, index, queries))
+    rm.map(_._1) shouldBe (0L until nq).toSet
+    rm shouldBe perQuery(Retrieval.rm3TopKAgainst(postings, index, _))
+  }
+
   test("bm25 increment scoring: unseen terms contribute nothing, seen terms score") {
     // index corpus knows only 'alpha beta'; the increment doc adds 'newterm'
     val corpus = docs(1L -> "alpha beta", 2L -> "beta beta")
@@ -513,12 +551,13 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
       // every bucket participates in the probe join in place
       rendered should include("Bucketed: true")
       rendered should include("SelectedBucketsCount: 4 out of 4")
-      // four hash-exchange mentions, all accounted increment-side: the tf
-      // aggregate, the term-key probe join's increment side, the dense
-      // per-document slot aggregate, and the ranking window (the r20
-      // dense kernel removed the sheet broadcasts and their ReusedExchange
-      // echo); an index-side exchange would make it five
-      "Exchange hashpartitioning".r.findAllIn(rendered).size shouldBe 4
+      // three hash-exchange mentions, all accounted increment-side: the
+      // term-key probe join's increment side, the dense per-document slot
+      // aggregate, and the ranking window (tf is counted in-row, so no
+      // (doc, term) aggregate exchange; the dense kernel has no sheet
+      // broadcasts and no ReusedExchange echo); an index-side exchange
+      // would make it four
+      "Exchange hashpartitioning".r.findAllIn(rendered).size shouldBe 3
       "ReusedExchange".r.findAllIn(rendered).size shouldBe 0
     } finally {
       conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -497,21 +497,4 @@ class ValidationStreamSpec extends AnyFunSuite with SparkSpec with Matchers {
     val reloaded = new NotificationSnapshot(s, Some(dir))
     reloaded.get("b1").map(_.getAs[String]("status")) shouldBe Some(Status.Started)
   }
-
-  test("snapshot reload falls back to the pre-versioning journal layout") {
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("vsnap-legacy").toString
-    // a checkpoint dir written before the journal became versioned: one
-    // snapshot.parquet, no snapshot-v*.parquet
-    Seq(("b-old", Status.SendCompleted)).toDF("id", "status")
-      .select(org.apache.spark.sql.functions.to_json(
-        org.apache.spark.sql.functions.struct($"id", $"status")).as("v"))
-      .select(org.apache.spark.sql.functions.from_json($"v",
-        graft.model.Schemas.batchNotification).as("n"))
-      .select($"n.*")
-      .write.parquet(s"$dir/snapshot.parquet")
-    val store = new NotificationSnapshot(s, Some(dir))
-    store.get("b-old").map(_.getAs[String]("status")) shouldBe Some(Status.SendCompleted)
-  }
 }
