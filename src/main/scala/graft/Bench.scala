@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Fixed-work deterministic spin for the host-speed calibration probe:
@@ -66,30 +65,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.util.LocalSession.cpus
     // calibrate BEFORE the session exists: Spark's own threads must not
     // contend with the probe
-    val (cal1, calN) = calibrate(cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single-row-group testdata cannot split at the scan; see Tables. The
-      // floor is capped at 16: past it, the repartition exchange + per-task
-      // overhead on single-row-group sf0.1 scans costs more than the extra
-      // parallelism returns (measured round 14: floor 32 → 16 cut an
-      // 18-query subset 49.7 → 41.3 s at cpus=32; 8 was within noise of 16)
-      .config(graft.util.Tables.MinScanPartitionsConf,
-        math.min(cpus.toInt, 16).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // local-experiment conf passthrough (k=v;k=v) — the driver never sets it,
-    // so round benches always run the committed session confs above
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k.trim, v.trim)
-      })
+    val (cal1, calN) = calibrate(cpus)
+    val spark = graft.util.LocalSession.withConfPassthrough(graft.util.LocalSession(cpus))
     // warm the session (JVM, codegen, shuffle machinery) so the first measured
     // query isn't charged for one-time initialization; fixed name order so
     // per-query numbers are comparable across rounds

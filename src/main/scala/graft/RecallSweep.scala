@@ -91,14 +91,7 @@ object RecallSweep {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nprobes = (if (args.length > 1) args(1) else "1,2,4,8,16")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     val e = sfDir match {
       case "mog" => mogEmbeddings(spark).localCheckpoint()
       case "moga" => anisoEmbeddings(spark).localCheckpoint()

@@ -222,25 +222,14 @@ object Scaling {
     val scales = (if (args.length > 2) args(2) else "1,3,10")
       .split(",").map(_.trim.toInt).toSeq
     val iters = if (args.length > 3) args(3).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // local-experiment conf passthrough (k=v;k=v) — Bench's convention. The
-    // x80_long cells NEED it: their DP-heavy pairs are tiny in BYTES, so
-    // AQE's byte-sized partition coalescing packs the whole quadratic
-    // verify into ~1 task (measured: 2.8 of 32 cores) — the deployment
-    // lever for compute-dense verifier stages is a smaller advisory
-    // partition size (or disabling coalescing for the stage), documented
-    // in SCALING.md with the cells
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k.trim, v.trim)
-      })
+    val cpus = graft.util.LocalSession.cpus
+    // the x80_long cells NEED the SPARK_GRAFT_CONF passthrough: their
+    // DP-heavy pairs are tiny in BYTES, so AQE's byte-sized partition
+    // coalescing packs the whole quadratic verify into ~1 task (measured: 2.8
+    // of 32 cores) — the deployment lever for compute-dense verifier stages
+    // is a smaller advisory partition size (or disabling coalescing for the
+    // stage), documented in SCALING.md with the cells
+    val spark = graft.util.LocalSession.withConfPassthrough(graft.util.LocalSession(cpus))
     spark.range(1000000).selectExpr("sum(id * 2)").collect() // session warm-up
 
     // optional fixture-build allowlist for targeted ladder extensions

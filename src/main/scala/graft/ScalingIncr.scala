@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.{Semantic, TextDedup}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental / index-probe scaling harness — the companion to [[Scaling]]'s
@@ -66,14 +66,8 @@ object ScalingIncr {
     // duplicating it here with a constant invited the two checks to drift
     require(scales.max < 100,
       s"scales at or above 100 collide with the increment's id range: $scales")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.util.LocalSession.cpus
+    val spark = graft.util.LocalSession(cpus)
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
 
     val embBaseN = Scaling.buildScaledEmbeddings(spark, baseDir, workDir, scales)

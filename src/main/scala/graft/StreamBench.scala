@@ -4,7 +4,7 @@ import graft.model.{BatchNotification, Status}
 import graft.streaming.{NotificationSnapshot, TrackerProcessor, ValidationSinks, ValidationStream}
 import graft.tracker.TrackerInput
 import graft.validation.JsonValidator
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
@@ -57,16 +57,10 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val nRecords = args.headOption.map(_.toInt).getOrElse(200000)
     val nChunks = if (args.length > 1) args(1).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val session = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    session.sparkContext.setLogLevel("WARN")
+    val cpus = graft.util.LocalSession.cpus
+    val session = graft.util.LocalSession(cpus)
+    session.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
     implicit val recEnc: org.apache.spark.sql.Encoder[BenchRec] =
       org.apache.spark.sql.Encoders.product[BenchRec]

@@ -231,10 +231,25 @@ object ValidationJob {
       lookup: Option[BatchLookup] = None,
       lookupRetry: Retry = new Retry(initialBackoffMs = 100, giveUpAfterMs = 2000)): Running = {
     val store = new NotificationSnapshot(spark, Some(checkpointDir))
-    val nq = ValidationStream.startNotificationQuery(notifications, store, checkpointDir)
-    val rq = ValidationStream.startRecordQuery(
-      records, store, validator, sinks, checkpointDir, lookup, lookupRetry)
-    Running(rq, nq, None, store)
+    startingTogether { started =>
+      val nq = started(
+        ValidationStream.startNotificationQuery(notifications, store, checkpointDir))
+      val rq = started(ValidationStream.startRecordQuery(
+        records, store, validator, sinks, checkpointDir, lookup, lookupRetry))
+      Running(rq, nq, None, store)
+    }
+  }
+
+  /** Start a job's queries, each passed through `started`; if a later one
+    * fails to start, stop those already running and rethrow. Otherwise they
+    * would run on half a pipeline (records validated with no tracker), and a
+    * restart would meet them still active under their names. */
+  private def startingTogether(
+      startAll: (StreamingQuery => StreamingQuery) => Running): Running = {
+    val running = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+    try startAll { q => running += q; q }
+    catch { case scala.util.control.NonFatal(e) =>
+      running.foreach(q => scala.util.Try(q.stop())); throw e }
   }
 
   /** Production entry point: Kafka sources/sinks, tracker fed through an
@@ -261,80 +276,82 @@ object ValidationJob {
     val store = new NotificationSnapshot(spark, Some(checkpointDir))
     val countsDir = s"$checkpointDir/counts"
 
-    val nq = ValidationStream.startNotificationQuery(
-      kafkaNotificationSource(spark, brokers, inputTopic,
-        sasl ++ kafkaGroupId(inputTopic, "notifications")), store, checkpointDir)
+    startingTogether { started =>
+      val nq = started(ValidationStream.startNotificationQuery(
+        kafkaNotificationSource(spark, brokers, inputTopic,
+          sasl ++ kafkaGroupId(inputTopic, "notifications")), store, checkpointDir))
 
-    // counts handoff: epoch-keyed parquet files feed the tracker query's file
-    // source — the in-job stand-in for the reference's operator-to-operator
-    // shuffle, made idempotent against foreachBatch's at-least-once replays.
-    // exactlyOnce upgrades the DATA topics from at-least-once to
-    // transactional per-epoch publishes (§7.6 option c) — consumers must
-    // then read `isolation.level=read_committed`
-    val sinks =
-      if (exactlyOnce)
-        transactionalKafkaSinks(brokers, inputTopic, countsHandoff(countsDir), sasl)
-      else kafkaSinks(brokers, inputTopic, countsHandoff(countsDir), sasl)
-    val rq = ValidationStream.startRecordQuery(
-      kafkaRecordSource(spark, brokers, inputTopic,
-        sasl ++ kafkaGroupId(inputTopic, "records")), store, validator, sinks,
-      checkpointDir, mgmtClient)
+      // counts handoff: epoch-keyed parquet files feed the tracker query's file
+      // source — the in-job stand-in for the reference's operator-to-operator
+      // shuffle, made idempotent against foreachBatch's at-least-once replays.
+      // exactlyOnce upgrades the DATA topics from at-least-once to
+      // transactional per-epoch publishes (§7.6 option c) — consumers must
+      // then read `isolation.level=read_committed`
+      val sinks =
+        if (exactlyOnce)
+          transactionalKafkaSinks(brokers, inputTopic, countsHandoff(countsDir), sasl)
+        else kafkaSinks(brokers, inputTopic, countsHandoff(countsDir), sasl)
+      val rq = started(ValidationStream.startRecordQuery(
+        kafkaRecordSource(spark, brokers, inputTopic,
+          sasl ++ kafkaGroupId(inputTopic, "records")), store, validator, sinks,
+        checkpointDir, mgmtClient))
 
-    // the tracker is CONTROL-plane: build its sources and query on a child
-    // session sized to TrackerProcessor.ControlPlaneShufflePartitions — at the
-    // data plane's shuffle width, every ProcessingTime tick commits that many
-    // RocksDB stores and measurably drains the record query (see
-    // TrackerProcessor.controlPlaneSession)
-    val trackerSession = TrackerProcessor.controlPlaneSession(spark)
-    val countEvents = trackerSession.readStream
-      .schema("batchId STRING, validDelta BIGINT, invalidDelta BIGINT")
-      // only the deterministic per-epoch delta files — a countsDir left over
-      // from the pre-delta layout (part-*.parquet, per-record schema) must not
-      // be parsed as deltas
-      .option("pathGlobFilter", "epoch-*.parquet")
-      .parquet(countsDir)
-      .as[graft.model.CountsDelta]
-    val notifEvents = kafkaNotificationSource(trackerSession, brokers, inputTopic,
-        sasl ++ kafkaGroupId(inputTopic, "tracker"))
-      .select(from_json(col("value").cast("string"),
-        graft.model.Schemas.batchNotification).as("n"))
-      .select(col("n.*"))
-      // poison-message guard, the startNotificationQuery twin: malformed JSON
-      // (null struct/id) or an absent Int field would otherwise NPE the
-      // non-nullable encoder fields and crash-loop the tracker query from the
-      // checkpoint. Absent counts default -1, matching
-      // MgmtClient.parseNotification's open-world convention
-      .filter(col("id").isNotNull)
-      .na.fill(-1L, Seq("expectedRecordCount", "actualRecordCount",
-        "invalidRecordCount", "invalidThreshold"))
-      .as[graft.model.BatchNotification]
-    val terminal = TrackerProcessor.track(
-      TrackerProcessor.unionEvents(countEvents, notifEvents), completionDelayMs)
+      // the tracker is CONTROL-plane: build its sources and query on a child
+      // session sized to TrackerProcessor.ControlPlaneShufflePartitions — at the
+      // data plane's shuffle width, every ProcessingTime tick commits that many
+      // RocksDB stores and measurably drains the record query (see
+      // TrackerProcessor.controlPlaneSession)
+      val trackerSession = TrackerProcessor.controlPlaneSession(spark)
+      val countEvents = trackerSession.readStream
+        .schema("batchId STRING, validDelta BIGINT, invalidDelta BIGINT")
+        // only the deterministic per-epoch delta files — a countsDir left over
+        // from the pre-delta layout (part-*.parquet, per-record schema) must not
+        // be parsed as deltas
+        .option("pathGlobFilter", "epoch-*.parquet")
+        .parquet(countsDir)
+        .as[graft.model.CountsDelta]
+      val notifEvents = kafkaNotificationSource(trackerSession, brokers, inputTopic,
+          sasl ++ kafkaGroupId(inputTopic, "tracker"))
+        .select(from_json(col("value").cast("string"),
+          graft.model.Schemas.batchNotification).as("n"))
+        .select(col("n.*"))
+        // poison-message guard, the startNotificationQuery twin: malformed JSON
+        // (null struct/id) or an absent Int field would otherwise NPE the
+        // non-nullable encoder fields and crash-loop the tracker query from the
+        // checkpoint. Absent counts default -1, matching
+        // MgmtClient.parseNotification's open-world convention
+        .filter(col("id").isNotNull)
+        .na.fill(-1L, Seq("expectedRecordCount", "actualRecordCount",
+          "invalidRecordCount", "invalidThreshold"))
+        .as[graft.model.BatchNotification]
+      val terminal = TrackerProcessor.track(
+        TrackerProcessor.unionEvents(countEvents, notifEvents), completionDelayMs)
 
-    val tq = mgmtClient match {
-      case Some(client) =>
-        val apiSink = new MgmtApiSink(client)
-        terminal.writeStream
-          .queryName("graft-tracker")
-          .option("checkpointLocation", s"$checkpointDir/graft-tracker")
-          .trigger(Trigger.ProcessingTime("1 second"))
-          .foreachBatch(apiSink.writeBatch _)
-          .start()
-      case None =>
-        terminal
-          .select(lit(null).cast("binary").as("key"),
-            encode(to_json(struct(col("*"))), "UTF-8").as("value"))
-          .writeStream
-          .queryName("graft-tracker")
-          .option("checkpointLocation", s"$checkpointDir/graft-tracker")
-          .trigger(Trigger.ProcessingTime("1 second"))
-          .format("kafka")
-          .option("kafka.bootstrap.servers", brokers)
-          .option("topic", Topics.notificationTopic(inputTopic))
-          .options(kafkaProducerOptions ++ sasl)
-          .start()
+      val tq = started(mgmtClient match {
+        case Some(client) =>
+          val apiSink = new MgmtApiSink(client)
+          terminal.writeStream
+            .queryName("graft-tracker")
+            .option("checkpointLocation", s"$checkpointDir/graft-tracker")
+            .trigger(Trigger.ProcessingTime("1 second"))
+            .foreachBatch(apiSink.writeBatch _)
+            .start()
+        case None =>
+          terminal
+            .select(lit(null).cast("binary").as("key"),
+              encode(to_json(struct(col("*"))), "UTF-8").as("value"))
+            .writeStream
+            .queryName("graft-tracker")
+            .option("checkpointLocation", s"$checkpointDir/graft-tracker")
+            .trigger(Trigger.ProcessingTime("1 second"))
+            .format("kafka")
+            .option("kafka.bootstrap.servers", brokers)
+            .option("topic", Topics.notificationTopic(inputTopic))
+            .options(kafkaProducerOptions ++ sasl)
+            .start()
+      })
+      Running(rq, nq, Some(tq), store)
     }
-    Running(rq, nq, Some(tq), store)
   }
 
   /** `-x` parsing, extracted for its spec: a DELIVERY-SEMANTICS switch must
@@ -376,8 +393,26 @@ object ValidationJob {
       .appName(s"graft-validation-$inputTopic")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    val running = startKafka(spark, brokers, inputTopic, new JsonValidator,
-      checkpoint, delay, kafkaPassword = password, exactlyOnce = exactlyOnce)
-    running.recordQuery.awaitTermination()
+    // the reference's failure-rate restart (10 failures in 5 min, 10 s apart):
+    // any dead query restarts the whole job from its checkpoints
+    new RestartSupervisor().supervise(() => awaitFirstTermination(
+      startKafka(spark, brokers, inputTopic, new JsonValidator, checkpoint, delay,
+        kafkaPassword = password, exactlyOnce = exactlyOnce)))
+  }
+
+  /** Wait until the first of the job's queries ends, stop the others, and
+    * rethrow what killed it (return if it stopped cleanly). A job whose
+    * tracker or notification query died would otherwise keep validating
+    * records that no batch ever completes. Polls each query rather than
+    * `spark.streams.awaitAnyTermination()`: the tracker runs on the
+    * control-plane child session, whose `StreamingQueryManager` is not the
+    * parent's. */
+  private[jobs] def awaitFirstTermination(running: Running, pollMs: Long = 200L): Unit = {
+    val queries = Seq(running.recordQuery, running.notificationQuery) ++
+      running.trackerQuery
+    try {
+      while (queries.forall(_.isActive)) Thread.sleep(pollMs)
+      queries.filterNot(_.isActive).foreach(_.awaitTermination())
+    } finally queries.foreach(_.stop())
   }
 }

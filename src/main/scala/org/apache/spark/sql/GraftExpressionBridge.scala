@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * moved `Column` onto ColumnNode, so `new Column(expr)` no longer exists; the
   * sanctioned converters live in `classic.ExpressionUtils`, package-private to
   * `org.apache.spark.sql`). Used by `graft.functions` and by corpus-plane
-  * expression-level kernels (e.g. `Classifier.intDiv`). */
+  * expression-level kernels (e.g. `Classifier.intDiv`). Also the way into
+  * the SQL status store and the listener bus for `graft.tools.Diagnose`. */
 object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -45,4 +46,14 @@ object GraftExpressionBridge {
       case _ => ck
     }
   }
+
+  /** The store the UI's SQL tab reads: each execution's final plan graph and
+    * its metrics rendered as the tab shows them (`SharedState` is
+    * package-private). */
+  def sqlStatusStore(spark: SparkSession): execution.ui.SQLAppStatusStore =
+    spark.asInstanceOf[classic.SparkSession].sharedState.statusStore
+
+  /** Block until every listener has handled every event posted so far. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

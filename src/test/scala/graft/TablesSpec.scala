@@ -15,6 +15,8 @@ class TablesSpec extends AnyFunSuite with SparkSpec with Matchers {
     val dir = java.nio.file.Files.createTempDirectory("tables").toString
     (1L to 1000L).map(i => (i, s"t$i")).toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // the shared test session carries the floor (LocalSession); restore it
+    val floor = spark.conf.getOption(Tables.MinScanPartitionsConf)
     try {
       // conf unset: the single-split scan arrives as-is
       spark.conf.unset(Tables.MinScanPartitionsConf)
@@ -28,7 +30,8 @@ class TablesSpec extends AnyFunSuite with SparkSpec with Matchers {
       spark.conf.set(Tables.MinScanPartitionsConf, "1")
       Tables.table(spark, dir, "documents").queryExecution.executedPlan
         .toString should not include "Exchange"
-    } finally spark.conf.unset(Tables.MinScanPartitionsConf)
+    } finally floor.fold(spark.conf.unset(Tables.MinScanPartitionsConf))(
+      spark.conf.set(Tables.MinScanPartitionsConf, _))
   }
 
   test("table() returns a fresh, session-bound DataFrame per call") {

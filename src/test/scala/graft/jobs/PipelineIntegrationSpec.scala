@@ -2,11 +2,11 @@ package graft.jobs
 
 import graft.SparkSpec
 import graft.model.{BatchNotification, Status}
-import graft.streaming.{TrackerProcessor, ValidationSinks}
+import graft.streaming.{RestartSupervisor, TrackerProcessor, ValidationSinks}
 import graft.validation.JsonValidator
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -16,8 +16,13 @@ import scala.collection.mutable.ArrayBuffer
   * notification streams → real validation queries → the idempotent epoch
   * journal → a file-source counts stream → transformWithState tracker (RocksDB
   * state, real completion timer) → terminal COMPLETED. This is the integration
-  * the reference pins with its mini-cluster ValidationJobIntTest. */
+  * the reference pins with its mini-cluster ValidationJobIntTest. Then the
+  * job's lifecycle: `ValidationJob.main` waits on ALL of its queries, so the
+  * first to die takes the job down for `RestartSupervisor` to restart whole,
+  * and a start that fails part-way stops what it started. */
 class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
+  import spark.implicits._
+  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   case class Hdr(key: String, value: Array[Byte])
   case class Rec(key: Array[Byte], value: Array[Byte], headers: Seq[Hdr],
@@ -37,8 +42,6 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("counts flow through the epoch journal into the tracker and COMPLETE the batch") {
     val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
@@ -104,5 +107,67 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally {
       tq.stop(); running.recordQuery.stop(); running.notificationQuery.stop()
     }
+  }
+
+  private def sinks(onCounts: DataFrame => Unit): ValidationSinks = new ValidationSinks {
+    def valid(df: DataFrame, epochId: Long): Unit = ()
+    def invalid(df: DataFrame, epochId: Long): Unit = ()
+    def counts(df: DataFrame, epochId: Long): Unit = onCounts(df)
+  }
+
+  test("a dying counts sink ends the wait with its error and stops the other queries") {
+    val records = MemoryStream[Rec]
+    val dir = java.nio.file.Files.createTempDirectory("await-first").toString
+    val running = ValidationJob.start(spark, records.toDF(), MemoryStream[String].toDF(),
+      new JsonValidator, sinks(_ => throw new IllegalStateException("counts sink died")), dir)
+    try {
+      records.addData(rec(0, "b1", """{"ok":1}"""))
+      val e = intercept[StreamingQueryException](
+        ValidationJob.awaitFirstTermination(running, pollMs = 50L))
+      e.getCause.getMessage should include("counts sink died")
+      running.recordQuery.isActive shouldBe false
+      running.notificationQuery.isActive shouldBe false
+    } finally { running.recordQuery.stop(); running.notificationQuery.stop() }
+  }
+
+  test("a query on the control-plane child session is waited on too") {
+    val trackerIn = MemoryStream[Int](implicitly[org.apache.spark.sql.Encoder[Int]],
+      TrackerProcessor.controlPlaneSession(spark).sqlContext)
+    val dir = java.nio.file.Files.createTempDirectory("await-child").toString
+    val running = ValidationJob.start(spark, MemoryStream[Rec].toDF(),
+      MemoryStream[String].toDF(), new JsonValidator, sinks(_ => ()), dir)
+    val die: (DataFrame, Long) => Unit =
+      (_, _) => throw new IllegalStateException("tracker died")
+    val tracker = trackerIn.toDF().writeStream
+      .option("checkpointLocation", s"$dir/tracker").foreachBatch(die).start()
+    try {
+      trackerIn.addData(1)
+      val e = intercept[StreamingQueryException](ValidationJob.awaitFirstTermination(
+        running.copy(trackerQuery = Some(tracker)), pollMs = 50L))
+      e.getCause.getMessage should include("tracker died")
+      running.recordQuery.isActive shouldBe false
+      running.notificationQuery.isActive shouldBe false
+    } finally {
+      tracker.stop(); running.recordQuery.stop(); running.notificationQuery.stop()
+    }
+  }
+
+  test("a start that fails part-way stops the queries it started; the restart starts cleanly") {
+    val dir = java.nio.file.Files.createTempDirectory("start-partway").toString
+    var attempts = 0
+    var running: Option[ValidationJob.Running] = None
+    try {
+      new RestartSupervisor(delayMs = 0L).supervise { () =>
+        attempts += 1
+        // first attempt: the record query (started after the notification
+        // query) fails to start on a batch DataFrame
+        val records = if (attempts == 1) spark.range(1).toDF() else MemoryStream[Rec].toDF()
+        running = Some(ValidationJob.start(spark, records, MemoryStream[String].toDF(),
+          new JsonValidator, sinks(_ => ()), dir))
+      }
+      attempts shouldBe 2
+      running.get.recordQuery.isActive shouldBe true
+      running.get.notificationQuery.isActive shouldBe true
+    } finally running.foreach { r => r.recordQuery.stop(); r.notificationQuery.stop() }
   }
 }
