@@ -88,7 +88,7 @@ object StreamBench {
     val records = MemoryStream[BenchRec]
     val notifications = MemoryStream[String]
     // the tracker runs control-plane sized (TrackerProcessor
-    // .controlPlaneSession), exactly as ValidationJob.startKafka wires it —
+    // .controlPlaneSession), as ValidationJob.start runs its tracker plane —
     // its MemoryStream source must belong to that session so the query plans
     // under the small state width
     val trackerSession = graft.streaming.TrackerProcessor.controlPlaneSession(session)
@@ -99,12 +99,7 @@ object StreamBench {
     val store = new NotificationSnapshot(session, None)
     val sinks = new CountSinks
     sinks.forward = df => {
-      val agg = df.groupBy("batchId").agg(
-        org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions
-          .when(org.apache.spark.sql.functions.col("isValid"), 1L).otherwise(0L)),
-        org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions
-          .when(org.apache.spark.sql.functions.col("isValid"), 0L).otherwise(1L))).collect()
-      agg.foreach { r =>
+      graft.jobs.ValidationJob.countsDeltas(df).collect().foreach { r =>
         sinks.counted.addAndGet(r.getLong(1) + r.getLong(2))
         trackerIn.addData(TrackerInput.count(
           graft.model.CountsDelta(r.getString(0), r.getLong(1), r.getLong(2))))

@@ -1,10 +1,11 @@
 package graft.jobs
 
 import graft.http.{BatchLookup, MgmtClient, Retry}
+import graft.model.{BatchNotification, CountsDelta}
 import graft.streaming._
 import graft.topics.Topics
 import graft.validation.{JsonValidator, Validator}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -13,12 +14,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * input topic, wire sources → validation → sinks → tracker → terminal sink, and
   * start the coordinated streaming queries.
   *
-  * Three construction modes, mirroring the reference's three constructors:
-  *  - production: Kafka in/out + Mgmt API terminal sink (`:87-104`);
-  *  - no-Mgmt-API: Kafka in/out, terminal notifications written straight back to
-  *    the `*.notification` topic (`:106-113`, used by the standalone CLI);
-  *  - test-injected: caller supplies sources/sinks/lookup (`:128-146`) — this is
-  *    what the specs use, with MemoryStream sources and collecting sinks.
+  * One wiring behind the reference's three constructors: [[start]] runs the
+  * queries for every caller.
+  *  - production (`:87-104`): [[startKafka]] builds Kafka endpoints and a Mgmt
+  *    API terminal sink, then calls [[start]];
+  *  - no-Mgmt-API (`:106-113`, the standalone CLI): the same, with terminal
+  *    notifications written straight back to the `*.notification` topic;
+  *  - test-injected (`:128-146`): the specs call [[start]] with MemoryStream
+  *    sources and collecting sinks.
   *
   * Operational envelope adopted from the reference (BASELINE.md): 1 s trigger
   * cadence (checkpoint interval `:367`), zstd + bounded batch sizes on the Kafka
@@ -100,34 +103,18 @@ object ValidationJob {
     Map("kafka.group.id" -> (if (role == "records") base else s"$base-$role"))
   }
 
-  /** Kafka producer options shared by all sinks — zstd, 16 KB batches, 10 MB max
-    * request, 15 min transaction timeout (reference BaseValidationJob.scala:330-347;
-    * the 1 MB Event Streams message cap is the why). SS's Kafka sink is
-    * at-least-once; exactly-once-equivalence comes from T8 + the 409-tolerant
-    * API sink + offset-keyed dedup downstream (SURVEY.md §7.6). */
+  /** Kafka producer options shared by all producers — zstd, 16 KB batches, 10 MB
+    * max request, 15 min transaction timeout (reference
+    * BaseValidationJob.scala:330-347; the 1 MB Event Streams message cap is the
+    * why). The data topics are exactly-once ([[transactionalKafkaSinks]]); the
+    * terminal sink is at-least-once: a replayed tracker epoch repeats a T8
+    * notification, which the 409-tolerant API sink and last-write-wins
+    * compaction absorb (SURVEY.md §7.6). */
   val kafkaProducerOptions: Map[String, String] = Map(
     "kafka.compression.type" -> "zstd",
     "kafka.batch.size" -> "16384",
     "kafka.max.request.size" -> "10485760",
     "kafka.transaction.timeout.ms" -> "900000")
-
-  /** Kafka-writing ValidationSinks (K1 valid → `*.out`, K2 invalid → `*.invalid`;
-    * counts stay in-job, handed to the tracker via [[countsHandoff]]). */
-  def kafkaSinks(brokers: String, inputTopic: String,
-      countsHandoff: (DataFrame, Long) => Unit,
-      extra: Map[String, String] = Map.empty): ValidationSinks = new ValidationSinks {
-    private def write(df: DataFrame, topic: String): Unit =
-      df.write.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .options(kafkaProducerOptions ++ extra)
-        .save()
-    def valid(df: DataFrame, epochId: Long): Unit =
-      write(validRecordProjection(df), Topics.outputTopic(inputTopic))
-    def invalid(df: DataFrame, epochId: Long): Unit =
-      write(invalidRecordProjection(df), Topics.invalidTopic(inputTopic))
-    def counts(df: DataFrame, epochId: Long): Unit = countsHandoff(df, epochId)
-  }
 
   /** K1/K2 with EXACTLY-ONCE delivery — SURVEY §7.6 option (c), the twin of
     * the reference's `Semantic.EXACTLY_ONCE` FlinkKafkaProducer
@@ -186,6 +173,20 @@ object ValidationJob {
           encode(col("batchId"), "UTF-8").as("value"))))
         .as("headers"))
 
+  /** Terminal-notification Kafka projection (no-Mgmt-API mode, reference
+    * BaseValidationJob.scala:273-286): null key, UTF-8 JSON value, read back
+    * from the `*.notification` topic by [[ValidationStream.parseNotifications]]. */
+  def terminalNotificationProjection(df: DataFrame): DataFrame =
+    df.select(lit(null).cast("binary").as("key"),
+      encode(to_json(struct(col("*"))), "UTF-8").as("value"))
+
+  /** Per-record counts (`batchId`, `isValid`) as one
+    * [[graft.model.CountsDelta]]-shaped row per batch. */
+  def countsDeltas(counts: DataFrame): DataFrame =
+    counts.groupBy(col("batchId")).agg(
+      sum(when(col("isValid"), 1L).otherwise(0L)).as("validDelta"),
+      sum(when(col("isValid"), 0L).otherwise(1L)).as("invalidDelta"))
+
   /** Idempotent counts handoff: pre-aggregate the epoch's per-record counts to
     * one `(batchId, validDelta, invalidDelta)` row per batch, and journal them to
     * a DETERMINISTIC single file `epoch-<id>.parquet`. `foreachBatch` is
@@ -198,9 +199,7 @@ object ValidationJob {
     val target = new org.apache.hadoop.fs.Path(countsDir, f"epoch-$epochId%020d.parquet")
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     if (fs.exists(target)) return // replayed epoch — already journaled
-    val agg = df.groupBy(col("batchId")).agg(
-      sum(when(col("isValid"), 1L).otherwise(0L)).as("validDelta"),
-      sum(when(col("isValid"), 0L).otherwise(1L)).as("invalidDelta"))
+    val agg = countsDeltas(df)
     // single part file so the write+rename is one atomic visibility event for the
     // tailing file source (dot-prefixed temp dirs are invisible to it)
     val tmp = new org.apache.hadoop.fs.Path(countsDir, s".tmp-epoch-$epochId")
@@ -217,10 +216,21 @@ object ValidationJob {
       trackerQuery: Option[StreamingQuery],
       snapshot: NotificationSnapshot)
 
-  /** Test/embedded entry point with injected sources and sinks (the reference's
-    * e2e constructor, BaseValidationJob.scala:128-146). `records` must be a
-    * streaming DataFrame in Schemas.hriRecord shape; `notifications` a streaming
-    * DataFrame with a `value` column of notification JSON. */
+  /** The tracker [[start]] runs when given one: the [[countsHandoff]] journal
+    * in `countsDir` ⊎ `notifications` → [[TrackerProcessor.track]] →
+    * `terminal` (at-least-once), on a 1 s trigger. `notifications` (raw JSON
+    * `value` column) must be built on [[TrackerProcessor.controlPlaneSession]]:
+    * the journal source and the query run on its session. */
+  case class TrackerPlane(
+      notifications: DataFrame,
+      countsDir: String,
+      terminal: (Dataset[BatchNotification], Long) => Unit,
+      completionDelayMs: Long)
+
+  /** Start the notification query, the record query and, given a
+    * [[TrackerPlane]], the tracker. `records` must be a streaming DataFrame in
+    * Schemas.hriRecord shape; `notifications` a streaming DataFrame with a
+    * `value` column of notification JSON. */
   def start(
       spark: SparkSession,
       records: DataFrame,
@@ -229,14 +239,16 @@ object ValidationJob {
       sinks: ValidationSinks,
       checkpointDir: String,
       lookup: Option[BatchLookup] = None,
-      lookupRetry: Retry = new Retry(initialBackoffMs = 100, giveUpAfterMs = 2000)): Running = {
+      lookupRetry: Retry = new Retry(initialBackoffMs = 100, giveUpAfterMs = 2000),
+      tracker: Option[TrackerPlane] = None): Running = {
     val store = new NotificationSnapshot(spark, Some(checkpointDir))
     startingTogether { started =>
       val nq = started(
         ValidationStream.startNotificationQuery(notifications, store, checkpointDir))
       val rq = started(ValidationStream.startRecordQuery(
         records, store, validator, sinks, checkpointDir, lookup, lookupRetry))
-      Running(rq, nq, None, store)
+      val tq = tracker.map(t => started(startTracker(t, checkpointDir)))
+      Running(rq, nq, tq, store)
     }
   }
 
@@ -252,10 +264,43 @@ object ValidationJob {
       running.foreach(q => scala.util.Try(q.stop())); throw e }
   }
 
-  /** Production entry point: Kafka sources/sinks, tracker fed through an
-    * intra-job counts handoff, terminal notifications to the Mgmt API (or back to
-    * the notification topic when `mgmtClient` is None — the reference's
-    * `useMgmtApi=false` mode, BaseValidationJob.scala:273-286). */
+  private def startTracker(t: TrackerPlane, checkpointDir: String): StreamingQuery = {
+    val session = t.notifications.sparkSession
+    import session.implicits._
+    // a file source needs its directory to exist, and on a fresh checkpoint
+    // no epoch has been journaled yet
+    val journal = new org.apache.hadoop.fs.Path(t.countsDir)
+    journal.getFileSystem(session.sparkContext.hadoopConfiguration).mkdirs(journal)
+    val counts = session.readStream
+      .schema("batchId STRING, validDelta BIGINT, invalidDelta BIGINT")
+      // only the deterministic per-epoch delta files — a countsDir left over
+      // from the pre-delta layout (part-*.parquet, per-record schema) must not
+      // be parsed as deltas
+      .option("pathGlobFilter", "epoch-*.parquet")
+      .parquet(t.countsDir)
+      .as[CountsDelta]
+    val notifications = ValidationStream.parseNotifications(t.notifications)
+      // an absent Int field would NPE the non-nullable encoder fields and
+      // crash-loop the tracker from its checkpoint. Absent counts default -1,
+      // matching MgmtClient.parseNotification's open-world convention
+      .na.fill(-1L, Seq("expectedRecordCount", "actualRecordCount",
+        "invalidRecordCount", "invalidThreshold"))
+      .as[BatchNotification]
+    TrackerProcessor.track(
+      TrackerProcessor.unionEvents(counts, notifications), t.completionDelayMs)
+      .writeStream
+      .queryName("graft-tracker")
+      .option("checkpointLocation", s"$checkpointDir/graft-tracker")
+      .trigger(Trigger.ProcessingTime("1 second"))
+      .foreachBatch(t.terminal)
+      .start()
+  }
+
+  /** Production entry point: [[start]] on Kafka sources, the exactly-once data
+    * sinks (consumers read `isolation.level=read_committed`; the
+    * `<base>.txn-markers` topic must exist) and terminal notifications to the
+    * Mgmt API, or back to the notification topic when `mgmtClient` is None
+    * (the reference's `useMgmtApi=false` mode, BaseValidationJob.scala:273-286). */
   def startKafka(
       spark: SparkSession,
       brokers: String,
@@ -264,131 +309,68 @@ object ValidationJob {
       checkpointDir: String,
       completionDelayMs: Long = 300000L,
       mgmtClient: Option[MgmtClient] = None,
-      kafkaPassword: Option[String] = None,
-      exactlyOnce: Boolean = false): Running = {
-    import spark.implicits._
+      kafkaPassword: Option[String] = None): Running = {
     Topics.validate(inputTopic)
     val sasl = kafkaSaslOptions(kafkaPassword)
-    // the RocksDB provider transformWithState needs is set on the CONTROL
-    // PLANE child session (TrackerProcessor.controlPlaneSession) — the only
-    // session running a stateful query. Setting it here too would mutate
-    // the caller's session for their own later stateful queries.
-    val store = new NotificationSnapshot(spark, Some(checkpointDir))
+    def notificationSource(session: SparkSession, role: String): DataFrame =
+      kafkaNotificationSource(session, brokers, inputTopic,
+        sasl ++ kafkaGroupId(inputTopic, role))
     val countsDir = s"$checkpointDir/counts"
-
-    startingTogether { started =>
-      val nq = started(ValidationStream.startNotificationQuery(
-        kafkaNotificationSource(spark, brokers, inputTopic,
-          sasl ++ kafkaGroupId(inputTopic, "notifications")), store, checkpointDir))
-
-      // counts handoff: epoch-keyed parquet files feed the tracker query's file
-      // source — the in-job stand-in for the reference's operator-to-operator
-      // shuffle, made idempotent against foreachBatch's at-least-once replays.
-      // exactlyOnce upgrades the DATA topics from at-least-once to
-      // transactional per-epoch publishes (§7.6 option c) — consumers must
-      // then read `isolation.level=read_committed`
-      val sinks =
-        if (exactlyOnce)
-          transactionalKafkaSinks(brokers, inputTopic, countsHandoff(countsDir), sasl)
-        else kafkaSinks(brokers, inputTopic, countsHandoff(countsDir), sasl)
-      val rq = started(ValidationStream.startRecordQuery(
-        kafkaRecordSource(spark, brokers, inputTopic,
-          sasl ++ kafkaGroupId(inputTopic, "records")), store, validator, sinks,
-        checkpointDir, mgmtClient))
-
-      // the tracker is CONTROL-plane: build its sources and query on a child
-      // session sized to TrackerProcessor.ControlPlaneShufflePartitions — at the
-      // data plane's shuffle width, every ProcessingTime tick commits that many
-      // RocksDB stores and measurably drains the record query (see
-      // TrackerProcessor.controlPlaneSession)
-      val trackerSession = TrackerProcessor.controlPlaneSession(spark)
-      val countEvents = trackerSession.readStream
-        .schema("batchId STRING, validDelta BIGINT, invalidDelta BIGINT")
-        // only the deterministic per-epoch delta files — a countsDir left over
-        // from the pre-delta layout (part-*.parquet, per-record schema) must not
-        // be parsed as deltas
-        .option("pathGlobFilter", "epoch-*.parquet")
-        .parquet(countsDir)
-        .as[graft.model.CountsDelta]
-      val notifEvents = kafkaNotificationSource(trackerSession, brokers, inputTopic,
-          sasl ++ kafkaGroupId(inputTopic, "tracker"))
-        .select(from_json(col("value").cast("string"),
-          graft.model.Schemas.batchNotification).as("n"))
-        .select(col("n.*"))
-        // poison-message guard, the startNotificationQuery twin: malformed JSON
-        // (null struct/id) or an absent Int field would otherwise NPE the
-        // non-nullable encoder fields and crash-loop the tracker query from the
-        // checkpoint. Absent counts default -1, matching
-        // MgmtClient.parseNotification's open-world convention
-        .filter(col("id").isNotNull)
-        .na.fill(-1L, Seq("expectedRecordCount", "actualRecordCount",
-          "invalidRecordCount", "invalidThreshold"))
-        .as[graft.model.BatchNotification]
-      val terminal = TrackerProcessor.track(
-        TrackerProcessor.unionEvents(countEvents, notifEvents), completionDelayMs)
-
-      val tq = started(mgmtClient match {
-        case Some(client) =>
-          val apiSink = new MgmtApiSink(client)
-          terminal.writeStream
-            .queryName("graft-tracker")
-            .option("checkpointLocation", s"$checkpointDir/graft-tracker")
-            .trigger(Trigger.ProcessingTime("1 second"))
-            .foreachBatch(apiSink.writeBatch _)
-            .start()
-        case None =>
-          terminal
-            .select(lit(null).cast("binary").as("key"),
-              encode(to_json(struct(col("*"))), "UTF-8").as("value"))
-            .writeStream
-            .queryName("graft-tracker")
-            .option("checkpointLocation", s"$checkpointDir/graft-tracker")
-            .trigger(Trigger.ProcessingTime("1 second"))
-            .format("kafka")
-            .option("kafka.bootstrap.servers", brokers)
-            .option("topic", Topics.notificationTopic(inputTopic))
-            .options(kafkaProducerOptions ++ sasl)
-            .start()
-      })
-      Running(rq, nq, Some(tq), store)
+    val terminal: (Dataset[BatchNotification], Long) => Unit = mgmtClient match {
+      case Some(client) => new MgmtApiSink(client).writeBatch
+      case None => (ds, _) =>
+        terminalNotificationProjection(ds.toDF()).write.format("kafka")
+          .option("kafka.bootstrap.servers", brokers)
+          .option("topic", Topics.notificationTopic(inputTopic))
+          .options(kafkaProducerOptions ++ sasl)
+          .save()
     }
+    start(spark,
+      kafkaRecordSource(spark, brokers, inputTopic, sasl ++ kafkaGroupId(inputTopic, "records")),
+      notificationSource(spark, "notifications"),
+      validator,
+      transactionalKafkaSinks(brokers, inputTopic, countsHandoff(countsDir), sasl),
+      checkpointDir,
+      lookup = mgmtClient,
+      tracker = Some(TrackerPlane(
+        notificationSource(TrackerProcessor.controlPlaneSession(spark), "tracker"),
+        countsDir, terminal, completionDelayMs)))
   }
 
-  /** `-x` parsing, extracted for its spec: a DELIVERY-SEMANTICS switch must
-    * fail loudly on malformed usage — a bare `-x` (no value, or another flag
-    * where the value belongs) silently falling back to at-least-once while
-    * the operator believes the transactional path is active is exactly the
-    * duplicate-delivery class the flag exists to eliminate. */
-  private[jobs] def parseExactlyOnceFlag(args: Array[String]): Boolean =
-    if (!args.contains("-x")) false
-    else {
-      val v = args.dropWhile(_ != "-x").drop(1).headOption
-        .filterNot(_.startsWith("-"))
-        .getOrElse(throw new IllegalArgumentException(
-          "-x requires an explicit true/false value"))
-      v.toBooleanOption.getOrElse(throw new IllegalArgumentException(
-        s"-x requires true or false, got '$v'"))
+  private val CliFlags = Set("-b", "-i", "-d", "-c", "-p")
+
+  /** The CLI's `(flag, value)` pairs. A value may start with `-` (an API key
+    * can). An odd-length list, an unknown or repeated flag, or a missing `-b`
+    * / `-i` throws, so a mistyped command line never runs on a default. */
+  private[jobs] def parseArgs(args: Array[String]): Map[String, String] = {
+    def fail(msg: String) = throw new IllegalArgumentException(
+      s"$msg; usage: -b brokers -i input.topic.in [-d delayMs] [-c ckptDir] [-p apiKey]")
+    if (args.length % 2 != 0) fail("every flag needs a value")
+    val pairs = args.toSeq.grouped(2).map(p => p.head -> p(1)).toSeq
+    pairs.map(_._1).find(f => !CliFlags(f)).foreach {
+      case "-x" => fail("-x is no longer a flag: delivery is now always exactly-once")
+      case f => fail(s"unknown flag $f")
     }
+    val opts = pairs.toMap
+    if (opts.size < pairs.size) fail("a flag is given twice")
+    Seq("-b", "-i").filterNot(opts.contains).foreach(f => fail(s"missing required flag $f"))
+    opts
+  }
 
   /** Standalone CLI (the reference's JsonValidationJob.main,
     * jobtest/JsonValidationJob.scala:25-73): `-b` brokers, `-i` input topic,
     * `-d` completion delay ms, `-c` checkpoint dir, `-p` Kafka API-key password
     * (enables SASL_SSL, like the reference's `--password`); JSON well-formedness
-    * validation, terminal notifications to the notification topic. `-x true`
-    * selects the exactly-once transactional data sinks (§7.6 option c). */
+    * validation, exactly-once data topics, terminal notifications to the
+    * notification topic. */
   def main(args: Array[String]): Unit = {
-    def arg(flag: String, default: String = null): String =
-      args.sliding(2).collectFirst { case Array(`flag`, v) => v }
-        .getOrElse(Option(default).getOrElse(
-          throw new IllegalArgumentException(s"missing required arg $flag")))
-    val brokers = arg("-b")
+    val opts = parseArgs(args)
     // fail-fast on a bad topic BEFORE building a session, like the reference's
     // constructor-time validation (BaseValidationJob.scala:56-75)
-    val inputTopic = Topics.validate(arg("-i"))
-    val delay = arg("-d", "300000").toLong
-    val checkpoint = arg("-c", "/tmp/graft-checkpoint")
-    val password = Option(arg("-p", "")).filter(_.nonEmpty)
-    val exactlyOnce = parseExactlyOnceFlag(args)
+    val inputTopic = Topics.validate(opts("-i"))
+    val delay = opts.getOrElse("-d", "300000").toLong
+    val checkpoint = opts.getOrElse("-c", "/tmp/graft-checkpoint")
+    val password = opts.get("-p").filter(_.nonEmpty)
     val spark = SparkSession.builder()
       .appName(s"graft-validation-$inputTopic")
       .config("spark.sql.session.timeZone", "UTC")
@@ -396,8 +378,8 @@ object ValidationJob {
     // the reference's failure-rate restart (10 failures in 5 min, 10 s apart):
     // any dead query restarts the whole job from its checkpoints
     new RestartSupervisor().supervise(() => awaitFirstTermination(
-      startKafka(spark, brokers, inputTopic, new JsonValidator, checkpoint, delay,
-        kafkaPassword = password, exactlyOnce = exactlyOnce)))
+      startKafka(spark, opts("-b"), inputTopic, new JsonValidator, checkpoint, delay,
+        kafkaPassword = password)))
   }
 
   /** Wait until the first of the job's queries ends, stop the others, and

@@ -118,6 +118,18 @@ trait ValidationSinks extends Serializable {
   */
 object ValidationStream {
 
+  /** Raw notification JSON (a Kafka-shaped `value` column) as
+    * Schemas.batchNotification columns — the parse the snapshot query and the
+    * tracker share. Poison-message guard: malformed or id-less JSON yields a
+    * null id, which would fail the micro-batch and CRASH-LOOP the control
+    * plane (the checkpoint replays the same message on every restart); every
+    * consumer keys on the id, so such a message is dropped. */
+  def parseNotifications(notifications: DataFrame): DataFrame =
+    notifications
+      .select(from_json(col("value").cast("string"), Schemas.batchNotification).as("n"))
+      .select(col("n.*"))
+      .filter(col("id").isNotNull)
+
   /** Start the notification-compaction query. `notifications` must be a streaming
     * DataFrame of raw JSON `value` bytes/strings (Kafka shape). */
   def startNotificationQuery(
@@ -126,16 +138,7 @@ object ValidationStream {
       checkpointDir: String,
       queryName: String = "graft-notifications",
       trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    notifications
-      .select(from_json(col("value").cast("string"), Schemas.batchNotification).as("n"))
-      .select(col("n.*"))
-      // poison-message guard: malformed JSON (or JSON without an id) makes
-      // from_json yield a null struct / null id. Unfiltered, the null key
-      // would NPE the snapshot upsert, fail the micro-batch, and CRASH-LOOP
-      // the control plane forever — the checkpoint replays the same corrupt
-      // message on every restart. An id-less notification is meaningless
-      // (V2 compaction and V3 lookup key on it), so drop it here
-      .filter(col("id").isNotNull)
+    parseNotifications(notifications)
       .writeStream
       .queryName(queryName)
       .option("checkpointLocation", s"$checkpointDir/$queryName")

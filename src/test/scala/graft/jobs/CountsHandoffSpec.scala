@@ -45,19 +45,4 @@ class CountsHandoffSpec extends AnyFunSuite with SparkSpec with Matchers {
       .toSeq shouldBe Seq(("b1", 1L, 1L))
     new java.io.File(dir).listFiles().count(_.getName.startsWith("epoch-")) shouldBe 2
   }
-
-  test("-x delivery-semantics flag: explicit values only, malformed usage throws") {
-    import ValidationJob.parseExactlyOnceFlag
-    parseExactlyOnceFlag(Array("-b", "x:9092")) shouldBe false
-    parseExactlyOnceFlag(Array("-x", "true")) shouldBe true
-    parseExactlyOnceFlag(Array("-x", "false", "-b", "x:9092")) shouldBe false
-    // a bare -x must never silently mean at-least-once
-    intercept[IllegalArgumentException] { parseExactlyOnceFlag(Array("-x")) }
-    intercept[IllegalArgumentException] {
-      parseExactlyOnceFlag(Array("-x", "-b", "x:9092")) // flag where value belongs
-    }
-    intercept[IllegalArgumentException] {
-      parseExactlyOnceFlag(Array("-x", "yes"))
-    }
-  }
 }

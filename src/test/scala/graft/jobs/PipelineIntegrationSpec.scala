@@ -4,22 +4,24 @@ import graft.SparkSpec
 import graft.model.{BatchNotification, Status}
 import graft.streaming.{RestartSupervisor, TrackerProcessor, ValidationSinks}
 import graft.validation.JsonValidator
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import scala.collection.mutable.ArrayBuffer
 
-/** The startKafka wiring end-to-end MINUS the broker: scripted record and
+/** The job's one wiring end-to-end MINUS the broker: `ValidationJob.start`
+  * with the tracker plane `startKafka` hands it, fed by scripted record and
   * notification streams → real validation queries → the idempotent epoch
-  * journal → a file-source counts stream → transformWithState tracker (RocksDB
-  * state, real completion timer) → terminal COMPLETED. This is the integration
-  * the reference pins with its mini-cluster ValidationJobIntTest. Then the
-  * job's lifecycle: `ValidationJob.main` waits on ALL of its queries, so the
-  * first to die takes the job down for `RestartSupervisor` to restart whole,
-  * and a start that fails part-way stops what it started. */
+  * journal → the tracker's file-source counts stream ⊎ its own notification
+  * stream → transformWithState tracker (RocksDB state on the control-plane
+  * session, real completion timer) → terminal COMPLETED. This is the
+  * integration the reference pins with its mini-cluster ValidationJobIntTest.
+  * Then the job's lifecycle: `ValidationJob.main` waits on ALL of its queries,
+  * so the first to die takes the job down for `RestartSupervisor` to restart
+  * whole, and a start that fails part-way stops what it started. */
 class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
   import spark.implicits._
   private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -36,53 +38,42 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
     s"""{"id":"$id","name":"n-$id","topic":"ingest.t1.claims.in","dataType":"claims",""" +
       s""""status":"$status","expectedRecordCount":$expected,"invalidThreshold":-1}"""
 
-  private def notif(id: String, status: String, expected: Int): BatchNotification =
-    BatchNotification(id, s"n-$id", "ingest.t1.claims.in", "claims", status,
-      null, null, expected, -1, -1, -1, null, null)
+  /** A tracker plane over a MemoryStream of notification JSON on the
+    * control-plane session, its terminal notifications collected. */
+  private def trackerPlane(countsDir: String, completionDelayMs: Long)
+      : (MemoryStream[String], ArrayBuffer[BatchNotification], ValidationJob.TrackerPlane) = {
+    val in = MemoryStream[String](Encoders.STRING,
+      TrackerProcessor.controlPlaneSession(spark).sqlContext)
+    val out = ArrayBuffer.empty[BatchNotification]
+    val terminal: (Dataset[BatchNotification], Long) => Unit =
+      (ds, _) => out.synchronized { out ++= ds.collect() }
+    (in, out, ValidationJob.TrackerPlane(in.toDF(), countsDir, terminal, completionDelayMs))
+  }
 
   test("counts flow through the epoch journal into the tracker and COMPLETE the batch") {
-    val s = spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
     val dir = java.nio.file.Files.createTempDirectory("pipeline-int").toString
+    // no mkdirs: the tracker's journal source must start on a fresh checkpoint
     val countsDir = s"$dir/counts"
-    new java.io.File(countsDir).mkdirs()
-
-    // validation plane: MemoryStream sources, counts through the REAL handoff
     val records = MemoryStream[Rec]
     val notifications = MemoryStream[String]
     val sinks = new ValidationSinks {
-      val validRows = ArrayBuffer.empty[Row]
-      def valid(df: DataFrame, epochId: Long): Unit =
-        validRows.synchronized { validRows ++= df.collect() }
+      def valid(df: DataFrame, epochId: Long): Unit = ()
       def invalid(df: DataFrame, epochId: Long): Unit = ()
       def counts(df: DataFrame, epochId: Long): Unit =
         ValidationJob.countsHandoff(countsDir)(df, epochId)
     }
-    val running = ValidationJob.start(
-      s, records.toDF(), notifications.toDF(), new JsonValidator, sinks, dir)
-
-    // tracker plane: the startKafka wiring — file-source deltas ⊎ notifications
-    val countEvents = s.readStream
-      .schema("batchId STRING, validDelta BIGINT, invalidDelta BIGINT")
-      .option("pathGlobFilter", "epoch-*.parquet")
-      .parquet(countsDir)
-      .as[graft.model.CountsDelta]
-    val notifEvents = MemoryStream[BatchNotification]
-    val terminal = TrackerProcessor.track(
-      TrackerProcessor.unionEvents(countEvents, notifEvents.toDS()),
-      completionDelayMs = 200L)
-    val sink = s"pipeline_terminal_${System.nanoTime}"
-    val tq = terminal.writeStream.format("memory").queryName(sink)
-      .option("checkpointLocation", s"$dir/tracker")
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .start()
+    val (trackerIn, terminal, plane) = trackerPlane(countsDir, completionDelayMs = 200L)
+    val running = ValidationJob.start(spark, records.toDF(), notifications.toDF(),
+      new JsonValidator, sinks, dir, tracker = Some(plane))
     try {
-      // announce the batch on both planes (snapshot for validation, tracker event)
+      running.trackerQuery.map(_.name) shouldBe Some("graft-tracker")
+      // announce the batch on both planes (two consumers of one topic in
+      // production); the tracker's stream also carries a malformed and an
+      // id-less message, which its parse must drop without failing
       notifications.addData(notifJson("b1", Status.SendCompleted, expected = 2))
       running.notificationQuery.processAllAvailable()
-      notifEvents.addData(notif("b1", Status.SendCompleted, expected = 2))
+      trackerIn.addData("{not json", """{"name":"no-id","status":"completed"}""",
+        notifJson("b1", Status.SendCompleted, expected = 2))
 
       records.addData(
         rec(0, "b1", """{"ok":1}"""),
@@ -90,24 +81,28 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
       running.recordQuery.processAllAvailable()
 
       // the handoff journaled exactly one delta row for the epoch
-      val deltas = s.read.parquet(countsDir).collect()
+      val deltas = spark.read.parquet(countsDir).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       deltas shouldBe Array(("b1", 1L, 1L))
 
       // 2 counted == expected 2 → timer (200 ms) → terminal COMPLETED
       val deadline = System.currentTimeMillis + 30000
-      while (s.table(sink).count() < 1 && System.currentTimeMillis < deadline)
+      while (terminal.synchronized(terminal.isEmpty) && System.currentTimeMillis < deadline)
         Thread.sleep(100)
-      val out = s.table(sink).as[BatchNotification].collect()
+      Thread.sleep(1500) // one more tracker trigger: nothing else may follow
+      running.trackerQuery.get.exception shouldBe None
+      val out = terminal.synchronized(terminal.toList)
       out should have size 1
       out.head.id shouldBe "b1"
       out.head.status shouldBe Status.Completed
       out.head.actualRecordCount shouldBe 2
       out.head.invalidRecordCount shouldBe 1
-    } finally {
-      tq.stop(); running.recordQuery.stop(); running.notificationQuery.stop()
-    }
+    } finally stopAll(running)
   }
+
+  private def stopAll(running: ValidationJob.Running): Unit =
+    (Seq(running.recordQuery, running.notificationQuery) ++ running.trackerQuery)
+      .foreach(_.stop())
 
   private def sinks(onCounts: DataFrame => Unit): ValidationSinks = new ValidationSinks {
     def valid(df: DataFrame, epochId: Long): Unit = ()
@@ -131,25 +126,43 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("a query on the control-plane child session is waited on too") {
-    val trackerIn = MemoryStream[Int](implicitly[org.apache.spark.sql.Encoder[Int]],
-      TrackerProcessor.controlPlaneSession(spark).sqlContext)
     val dir = java.nio.file.Files.createTempDirectory("await-child").toString
-    val running = ValidationJob.start(spark, MemoryStream[Rec].toDF(),
-      MemoryStream[String].toDF(), new JsonValidator, sinks(_ => ()), dir)
-    val die: (DataFrame, Long) => Unit =
+    val (trackerIn, _, plane) = trackerPlane(s"$dir/counts", 0L)
+    val die: (Dataset[BatchNotification], Long) => Unit =
       (_, _) => throw new IllegalStateException("tracker died")
-    val tracker = trackerIn.toDF().writeStream
-      .option("checkpointLocation", s"$dir/tracker").foreachBatch(die).start()
+    val running = ValidationJob.start(spark, MemoryStream[Rec].toDF(),
+      MemoryStream[String].toDF(), new JsonValidator, sinks(_ => ()), dir,
+      tracker = Some(plane.copy(terminal = die)))
     try {
-      trackerIn.addData(1)
-      val e = intercept[StreamingQueryException](ValidationJob.awaitFirstTermination(
-        running.copy(trackerQuery = Some(tracker)), pollMs = 50L))
+      trackerIn.addData(notifJson("b1", Status.Started, expected = 1))
+      val e = intercept[StreamingQueryException](
+        ValidationJob.awaitFirstTermination(running, pollMs = 50L))
       e.getCause.getMessage should include("tracker died")
       running.recordQuery.isActive shouldBe false
       running.notificationQuery.isActive shouldBe false
-    } finally {
-      tracker.stop(); running.recordQuery.stop(); running.notificationQuery.stop()
-    }
+    } finally stopAll(running)
+  }
+
+  test("a tracker that fails to start stops the validation queries already started") {
+    val dir = java.nio.file.Files.createTempDirectory("tracker-start").toString
+    val trackerCheckpoint = new java.io.File(dir, "graft-tracker")
+    def startJob(): ValidationJob.Running = ValidationJob.start(spark,
+      MemoryStream[Rec].toDF(), MemoryStream[String].toDF(), new JsonValidator,
+      sinks(_ => ()), dir, tracker = Some(trackerPlane(s"$dir/counts", 0L)._3))
+    // a plain file where the tracker's checkpoint directory belongs: the
+    // tracker, started last, fails on it
+    trackerCheckpoint.createNewFile() shouldBe true
+    intercept[Exception](startJob())
+    spark.streams.active.map(_.name) should contain noneOf(
+      "graft-records", "graft-notifications")
+    // nothing left running under the job's names: the restart starts whole
+    trackerCheckpoint.delete() shouldBe true
+    val running = startJob()
+    try {
+      running.recordQuery.isActive shouldBe true
+      running.notificationQuery.isActive shouldBe true
+      running.trackerQuery.exists(_.isActive) shouldBe true
+    } finally stopAll(running)
   }
 
   test("a start that fails part-way stops the queries it started; the restart starts cleanly") {

@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.SparkSpec
-import graft.model.InvalidRecord
+import graft.model.{BatchNotification, InvalidRecord, Status}
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -68,6 +68,22 @@ class SerializerSpec extends AnyFunSuite with SparkSpec with Matchers {
 
     out(1).get(2).asInstanceOf[AnyRef] shouldBe null // D5: missing batchId -> no header at all
     new String(out(1).getAs[Array[Byte]](1), "UTF-8") should include(""""offset":7""")
+  }
+
+  test("terminal notifications round-trip through the notification topic's parse") {
+    import spark.implicits._
+    spark.conf.get("spark.sql.session.timeZone") shouldBe "UTC"
+    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2026-03-04T05:06:07.891Z"))
+    val te = java.sql.Timestamp.from(java.time.Instant.parse("2026-03-04T23:59:59.001Z"))
+    val terminal = Seq(
+      BatchNotification("b-ok", "batch ok", "ingest.t1.di.in", "claims", Status.Completed,
+        ts, te, 2, 2, 0, -1, null, null),
+      BatchNotification("b-中", null, "ingest.t1.di.in", "claims", Status.Failed,
+        ts, te, 2, 3, 1, 0, "Failing batch: b-中, received too many records", """{"k":"v"}"""))
+    val out = ValidationJob.terminalNotificationProjection(terminal.toDF())
+    out.collect().foreach(_.isNullAt(0) shouldBe true) // null key
+    graft.streaming.ValidationStream.parseNotifications(out).as[BatchNotification]
+      .collect().toSeq shouldBe terminal
   }
 
   test("kafkaSaslOptions: SASL_SSL exactly when a password is set; JAAS-escaped") {

@@ -116,9 +116,8 @@ class TrackerProcessorSpec extends AnyFunSuite with SparkSpec with Matchers {
   private def runStream(feed: Seq[Seq[TrackerEvent]], expectEmissions: Int,
       delayMs: Long = 0L, sinkName: String = s"tracker_out_${System.nanoTime}")
       : Seq[BatchNotification] = {
-    val s = spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // the production tracker session; its sink table is registered there too
+    val s = TrackerProcessor.controlPlaneSession(spark)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     implicit val enc: org.apache.spark.sql.Encoder[TrackerInput] =
       Encoders.product[TrackerInput]
@@ -301,64 +300,56 @@ class TrackerProcessorSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("avro state encoding widens a checkpoint written with Int counters to the Long schema") {
-    val s = spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val encKey = "spark.sql.streaming.stateStore.encodingFormat"
-    val prevEnc = s.conf.getOption(encKey)
+    // a control-plane session of its own: the encoding set below stays on it
+    val s = TrackerProcessor.controlPlaneSession(spark)
+    s.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     implicit val enc: org.apache.spark.sql.Encoder[TrackerInput] =
       Encoders.product[TrackerInput]
     implicit val bnEnc: org.apache.spark.sql.Encoder[BatchNotification] =
       Encoders.product[BatchNotification]
     implicit val kEnc: org.apache.spark.sql.Encoder[String] = Encoders.STRING
+    val input = MemoryStream[TrackerInput]
+    val dir = java.nio.file.Files.createTempDirectory("tracker-widen").toString
+    // run 1: the PRE-WIDENING processor — identical state names and timer
+    // plumbing, but BatchState counters as Int (the old on-disk schema)
+    val sink1 = s"widen_a_${System.nanoTime}"
+    val q1 = input.toDS().groupByKey(_.batchId)
+      .transformWithState(new IntStateSeedProcessor(),
+        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
+        org.apache.spark.sql.streaming.OutputMode.Append())
+      .writeStream.format("memory").queryName(sink1)
+      .option("checkpointLocation", dir)
+      .trigger(Trigger.ProcessingTime("50 milliseconds"))
+      .start()
     try {
-      s.conf.set(encKey, "avro")
-      val input = MemoryStream[TrackerInput]
-      val dir = java.nio.file.Files.createTempDirectory("tracker-widen").toString
-      // run 1: the PRE-WIDENING processor — identical state names and timer
-      // plumbing, but BatchState counters as Int (the old on-disk schema)
-      val sink1 = s"widen_a_${System.nanoTime}"
-      val q1 = input.toDS().groupByKey(_.batchId)
-        .transformWithState(new IntStateSeedProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .writeStream.format("memory").queryName(sink1)
-        .option("checkpointLocation", dir)
-        .trigger(Trigger.ProcessingTime("50 milliseconds"))
-        .start()
-      try {
-        input.addData(TrackerInput.of(
-          NotificationEvent("w1", notif("w1", Status.SendCompleted, expected = 2))))
-        input.addData(TrackerInput.of(CountEvent("w1", true)))
-        awaitOffset(q1, 1)
-      } finally q1.stop()
-      // run 2: the REAL processor (Long counters) restores the Int-written
-      // checkpoint — Avro's int→long widening is what makes this legal; the
-      // default UnsafeRow encoding would reject the schema change. foreachBatch
-      // because the memory sink refuses checkpoint recovery in Append mode.
-      val sink2 = s"widen_b_${System.nanoTime}"
-      val q2 = TrackerProcessor.track(input.toDS(), completionDelayMs = 0L)
-        .writeStream
-        .foreachBatch((batch: org.apache.spark.sql.Dataset[BatchNotification],
-            _: Long) => NotifBuffer.add(sink2, batch.collect().toSeq))
-        .option("checkpointLocation", dir)
-        .trigger(Trigger.ProcessingTime("50 milliseconds"))
-        .start()
-      try {
-        input.addData(TrackerInput.of(CountEvent("w1", true)))
-        val deadline = System.currentTimeMillis + 30000
-        while (NotifBuffer.get(sink2).size < 1 &&
-          System.currentTimeMillis < deadline) Thread.sleep(50)
-        val out = NotifBuffer.get(sink2)
-        out.map(_.status) shouldBe Seq(Status.Completed)
-        // actual = 2 proves the Int-written count of 1 widened and survived
-        out.head.actualRecordCount shouldBe 2
-      } finally q2.stop()
-    } finally prevEnc match {
-      case Some(v) => s.conf.set(encKey, v)
-      case None => s.conf.unset(encKey)
-    }
+      input.addData(TrackerInput.of(
+        NotificationEvent("w1", notif("w1", Status.SendCompleted, expected = 2))))
+      input.addData(TrackerInput.of(CountEvent("w1", true)))
+      awaitOffset(q1, 1)
+    } finally q1.stop()
+    // run 2: the REAL processor (Long counters) restores the Int-written
+    // checkpoint — Avro's int→long widening is what makes this legal; the
+    // default UnsafeRow encoding would reject the schema change. foreachBatch
+    // because the memory sink refuses checkpoint recovery in Append mode.
+    val sink2 = s"widen_b_${System.nanoTime}"
+    val q2 = TrackerProcessor.track(input.toDS(), completionDelayMs = 0L)
+      .writeStream
+      .foreachBatch((batch: org.apache.spark.sql.Dataset[BatchNotification],
+          _: Long) => NotifBuffer.add(sink2, batch.collect().toSeq))
+      .option("checkpointLocation", dir)
+      .trigger(Trigger.ProcessingTime("50 milliseconds"))
+      .start()
+    try {
+      input.addData(TrackerInput.of(CountEvent("w1", true)))
+      val deadline = System.currentTimeMillis + 30000
+      while (NotifBuffer.get(sink2).size < 1 &&
+        System.currentTimeMillis < deadline) Thread.sleep(50)
+      val out = NotifBuffer.get(sink2)
+      out.map(_.status) shouldBe Seq(Status.Completed)
+      // actual = 2 proves the Int-written count of 1 widened and survived
+      out.head.actualRecordCount shouldBe 2
+    } finally q2.stop()
   }
 
   test("the tracker input stream has a real column schema, not a Kryo blob") {

@@ -314,8 +314,6 @@ class ValidationStreamSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("timed replay: a record after TERMINATED is dropped and no terminal notification duplicates " +
       "(reference ValidationJobIntTest.scala:220-279)") {
     val s = spark
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     implicit val tiEnc: org.apache.spark.sql.Encoder[graft.tracker.TrackerInput] =
@@ -324,15 +322,18 @@ class ValidationStreamSpec extends AnyFunSuite with SparkSpec with Matchers {
       org.apache.spark.sql.Encoders.product[BatchNotification]
     val records = MemoryStream[Rec]
     val notifications = MemoryStream[String]
-    val trackerIn = MemoryStream[graft.tracker.TrackerInput]
+    // the tracker runs on the control-plane session, as in production
+    val trackerIn = MemoryStream[graft.tracker.TrackerInput](tiEnc,
+      TrackerProcessor.controlPlaneSession(s).sqlContext)
     val trackerOut = ArrayBuffer.empty[BatchNotification]
     val dir = java.nio.file.Files.createTempDirectory("vreplay").toString
 
     def intOr(r: Row, f: String, dflt: Int): Int =
       if (r.isNullAt(r.fieldIndex(f))) dflt else r.getAs[Int](f)
-    // ONE notification source feeds BOTH planes, like production: the
-    // compaction query updates the validation snapshot AND forwards each
-    // notification into the tracker's event stream
+    // ONE notification source feeds BOTH planes here (production reads the
+    // topic with two consumers, one per plane): the compaction query updates
+    // the validation snapshot AND forwards each notification into the
+    // tracker's event stream
     val store = new NotificationSnapshot(s, Some(dir)) {
       override def update(df: DataFrame): Unit = {
         super.update(df)
@@ -352,12 +353,7 @@ class ValidationStreamSpec extends AnyFunSuite with SparkSpec with Matchers {
     val sinks = new CollectingSinks {
       override def counts(df: DataFrame, epochId: Long): Unit = {
         super.counts(df, epochId)
-        val deltas = df.groupBy(org.apache.spark.sql.functions.col("batchId")).agg(
-          org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions
-            .when($"isValid", 1L).otherwise(0L)).as("v"),
-          org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions
-            .when($"isValid", 0L).otherwise(1L)).as("i")).collect()
-        deltas.foreach(r => trackerIn.addData(graft.tracker.TrackerInput.count(
+        graft.jobs.ValidationJob.countsDeltas(df).collect().foreach(r => trackerIn.addData(graft.tracker.TrackerInput.count(
           graft.model.CountsDelta(r.getString(0), r.getLong(1), r.getLong(2)))))
       }
     }
