@@ -59,6 +59,8 @@ object StreamBench {
     val nChunks = if (args.length > 1) args(1).toInt else 20
     val cpus = graft.util.LocalSession.cpus
     val session = graft.util.LocalSession(cpus)
+    // the streaming-kNN cell's complete-mode top-k aggregate is stateful
+    // and runs on this session (the tracker has its own control plane)
     session.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
@@ -208,7 +210,7 @@ object StreamBench {
     // so a scheme-qualified or non-local sfDir (file:/, hdfs:, s3a:)
     // would make existing data look absent under a raw File probe and the
     // cells would silently report -1 instead of running (r18 advice —
-    // the Scaling.x1Count fix, applied to both probes here)
+    // the Scaling.x1Count fix of commit 5156bae, applied to both probes here)
     def haveTable(name: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
       p.getFileSystem(session.sparkContext.hadoopConfiguration).exists(p)

@@ -330,11 +330,11 @@ object Curation {
   }
 
   /** The RETIRED one-window [[packSequences]] (pre-r16), kept as the ONE
-    * referee definition the skew-ladder contrast cell
-    * (`Scaling.x31_pack_skew_window`) and the bit-equality spec
-    * (`BandedPrefixSpec`) both measure/pin against — a drifting copy in
-    * either place would make the cell benchmark something the spec no
-    * longer proves equal. NOT for production use: the per-source window
+    * referee definition the bit-equality spec (`BandedPrefixSpec`) pins
+    * against; the skew-ladder contrast cell that priced it
+    * (`Scaling.x31_pack_skew_window`) was retired after commit 5156bae
+    * (`git show 5156bae:src/main/scala/graft/Scaling.scala`). NOT for
+    * production use: the per-source window
     * serializes a mega-source through one task (the r16 rewrite's whole
     * point). */
   private[graft] def packSequencesOneWindow(docs: DataFrame,
@@ -1141,14 +1141,6 @@ object Curation {
             lit("trainingOrder: missing rank offset for band "), col("band"))))
           .otherwise(col("off")) + row_number().over(localW)).as("position"))
   }
-
-  /** Persist [[unigramLm]] BUCKETED on the token so every later scoring
-    * probe ([[unigramLogProbAgainst]]'s LEFT join) re-shuffles only the
-    * probing increment while the LM reads in place — the x54/x60 persisted
-    * storage contract applied to the quality-scoring plane. */
-  def writeUnigramLm(lm: DataFrame, tableName: String,
-      buckets: Int = 16): Unit =
-    graft.util.BucketedTable.write(lm, tableName, buckets, "w")
 
   /** Score documents against a FROZEN unigram LM ([[unigramLm]]) — the
     * deployment shape of CCNet's quality scoring, where the LM is trained

@@ -207,8 +207,8 @@ object Quantization {
   }
 
   /** Deterministic random orthonormal matrix: Gram-Schmidt on a seeded
-    * Gaussian matrix — shared by the anisotropic sweep fixture
-    * (`graft.RecallSweep.anisoEmbeddings`'s hidden orientation) and
+    * Gaussian matrix — shared by the anisotropic test fixture
+    * (`OpqSpec.anisoEmbeddings`'s hidden orientation) and
     * [[fixedRotation]] so the construction cannot drift. Rows are the
     * orthonormal basis; `y = R·x` rotates. */
   def orthonormal(dim: Int, rnd: scala.util.Random): Array[Array[Double]] = {
@@ -298,9 +298,10 @@ object Quantization {
     * anisotropic and misaligned with the subspace grid (real embeddings:
     * decaying spectra under arbitrary orientation). On an isotropic
     * residual (the spherical MoG fixture) every rotation is statistically
-    * identical and OPQ measurably buys ~nothing — run the
-    * [[graft.RecallSweep]] gate before adopting, exactly like the ADC tier
-    * itself (SCALING.md round 18). */
+    * identical and OPQ measurably buys ~nothing — measure recall with
+    * [[graft.corpus.Similarity.denseRecallEval]] before adopting, exactly
+    * like the ADC tier itself (SCALING.md round 18; the sweep that measured
+    * it, `graft.RecallSweep`, was last at commit 5156bae). */
   def opqRotation(emb: DataFrame, m: Int = DefaultSubspaces,
       ksub: Int = DefaultCodewords, rounds: Int = 8,
       innerRounds: Int = 2, dim: Int = DefaultDim): Array[Array[Double]] = {

@@ -643,7 +643,8 @@ object Retrieval {
     * IS the corpus, which is the point.
     *
     * SIZING RULE — pick this tier by MEASUREMENT, never by name (the r16
-    * `graft.RecallSweep` verdict, SCALING.md "the audit that said NO"): a
+    * recall-sweep verdict, SCALING.md "the audit that said NO"; the sweep's
+    * `graft.RecallSweep` main was last at commit 5156bae): a
     * PQ code ranks with m·log₂(ksub) bits, and whether that supports your
     * top-k depends on how much neighbor structure survives the dim/m-dim
     * subspace quantization. On the structure-less 64-dim fixture (8
@@ -653,8 +654,8 @@ object Retrieval {
     * to 0.49 as the probe widened (misscored impostors displace true
     * neighbors) — the right generator there was [[ivfDenseCandidates]]
     * (0.85–1.0, monotone in nprobe). Real embeddings on low-dim manifolds
-    * quantize far better — so run [[Similarity.denseRecallEval]] (or the
-    * `graft.RecallSweep` sweep) on an audit slice FIRST, and adopt this
+    * quantize far better — so run [[Similarity.denseRecallEval]] at the
+    * probe budgets you would deploy on an audit slice FIRST, and adopt this
     * tier only when the measured shortlist survival clears your recall
     * bar; when codes-only scanning is mandatory anyway, keep nprobe small
     * and the shortlist (kCand) deep.

@@ -194,7 +194,9 @@ object ValidationJob {
     * counts are never double-applied (the reference gets the same guarantee from
     * Flink's exactly-once checkpointed shuffle, BaseValidationJob.scala:367-370).
     * Pre-aggregation also shrinks the handoff from record volume to live-batch
-    * cardinality — at 100 TB the journal stays KB-sized per epoch. */
+    * cardinality — at 100 TB the journal stays KB-sized per epoch. A write that
+    * leaves no `epoch-*` file throws, so `foreachBatch` retries the epoch
+    * instead of committing counts the tracker never sees. */
   private[jobs] def countsHandoff(countsDir: String)(df: DataFrame, epochId: Long): Unit = {
     val target = new org.apache.hadoop.fs.Path(countsDir, f"epoch-$epochId%020d.parquet")
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
@@ -205,7 +207,9 @@ object ValidationJob {
     val tmp = new org.apache.hadoop.fs.Path(countsDir, s".tmp-epoch-$epochId")
     agg.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val parts = fs.globStatus(new org.apache.hadoop.fs.Path(tmp, "part-*"))
-    if (parts.nonEmpty) fs.rename(parts.head.getPath, target)
+    if (parts.isEmpty || !fs.rename(parts.head.getPath, target))
+      throw new java.io.IOException(
+        s"counts handoff: epoch $epochId's deltas did not reach $target")
     fs.delete(tmp, true)
   }
 

@@ -286,9 +286,10 @@ object CorpusQueries {
     // pipeline 3x (the x85 localCheckpoint hygiene). At sf0.1 this is
     // cost-neutral (~5.3 s either way — the tokenize pass is cheap next to
     // the three scoring joins); the 3-scans-to-1 cut is the 100 TB
-    // argument, and the persisted-parquet path (ScalingIncr's flat ~2.5 s
-    // probe) is what a deployment actually runs. The two checkpoint
-    // materializations are independent tokenize passes — they build on
+    // argument, and the persisted-parquet path (the flat ~2.5 s probe of
+    // ScalingIncr, last at commit 5156bae) is what a deployment actually
+    // runs. The two checkpoint materializations are independent tokenize
+    // passes — they build on
     // concurrent dedicated driver threads (DriverPar, the r17 x49
     // pattern), closing most of the wall-vs-compute gap the r17 profile
     // measured on this query (the two collects INSIDE rm3TopKAgainst are

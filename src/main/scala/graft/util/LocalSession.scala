@@ -35,8 +35,8 @@ object LocalSession {
   }
 
   /** Set the session confs `SPARK_GRAFT_CONF` (`k=v;k=v`) names, for a local
-    * experiment. Only the experiment mains (`Bench`, `Scaling`,
-    * `tools.Diagnose`) apply it: the correctness dump and the tests always
+    * experiment. Only the experiment mains (`Bench`, `tools.Diagnose`)
+    * apply it: the correctness dump and the tests always
     * run the committed confs, and recorded bench rounds leave it unset. */
   def withConfPassthrough(spark: SparkSession): SparkSession = {
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))

@@ -63,9 +63,7 @@ object Tables {
     * cache the relation — a policy choice outside this loader.
     *
     * No current writer overwrites a path previously read through [[table]]
-    * in the same session — the scaling harness's replica writers
-    * (`Scaling`/`ScalingIncr`) read their freshly written dirs via raw
-    * `spark.read.parquet`, bypassing these memos. A future writer that does
+    * in the same session. A future writer that does
     * overwrite such a path must call [[invalidate]] after writing, or the
     * memoized schema/split decision goes stale. */
   private val schemaMemo =

@@ -1,6 +1,7 @@
 package graft.corpus
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -48,7 +49,7 @@ class OpqSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("opqRotation returns an orthogonal matrix and rotateEmbeddings " +
       "preserves norms and pairwise cosines") {
-    val e = graft.RecallSweep.anisoEmbeddings(spark, n = 300)
+    val e = OpqSpec.anisoEmbeddings(spark, n = 300)
     val r = Quantization.opqRotation(e, rounds = 2, innerRounds = 1)
     // R·Rᵀ = I
     (0 until dim).foreach { i =>
@@ -76,7 +77,7 @@ class OpqSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("on an anisotropic corpus the OPQ rotation strictly reduces PQ " +
       "distortion vs identically-trained codebooks without it " +
       "(the referee measures both)") {
-    val e = graft.RecallSweep.anisoEmbeddings(spark, n = 600)
+    val e = OpqSpec.anisoEmbeddings(spark, n = 600)
     val tcbs = Quantization.trainedCodebooks(e, rounds = 2)
     val r = Quantization.opqRotation(e, rounds = 4, innerRounds = 1)
     val eR = Quantization.rotateEmbeddings(e, r)
@@ -108,5 +109,39 @@ class OpqSpec extends AnyFunSuite with SparkSpec with Matchers {
       Seq.tabulate(dim)(_.toDouble)
     out(2L) shouldBe None
     out(3L) shouldBe None
+  }
+}
+
+object OpqSpec {
+
+  /** The OPQ test shape (Ge et al. 2013's experiments live here): a
+    * deterministic mixture of `c` Gaussian clusters in `dim` dimensions,
+    * coordinate j scaled by `decay`^j (a sharply decaying spectrum —
+    * effective dimensionality ≈ 1/(1−decay²) ≈ 7 at the 0.92 default) and
+    * then spun by a HIDDEN random orthogonal rotation
+    * ([[Quantization.orthonormal]]), so the variance concentrates along
+    * directions the fixed subspace grid cannot see. Plain PQ slices this
+    * corpus across subspaces that each mix dominant and dead directions; a
+    * learned OPQ rotation can re-align and re-balance them. Real embeddings
+    * are this shape (decaying spectra under arbitrary orientation). Fixed
+    * seed: two calls on the same arguments see the same corpus. */
+  def anisoEmbeddings(spark: SparkSession, n: Int = 2000, dim: Int = 64,
+      c: Int = 20, sigma: Double = 0.05, decay: Double = 0.92,
+      seed: Long = 11L): DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val q = Quantization.orthonormal(dim, rnd)
+    val centers = Array.fill(c, dim)(rnd.nextGaussian() / math.sqrt(dim))
+    val scale = Array.tabulate(dim)(j => math.pow(decay, j))
+    (0 until n).map { i =>
+      val k = rnd.nextInt(c)
+      val raw = Array.tabulate(dim)(j =>
+        (centers(k)(j) + sigma * rnd.nextGaussian()) * scale(j))
+      (i.toLong, Seq.tabulate(dim) { jj =>
+        var s = 0.0; var j = 0
+        while (j < dim) { s += q(jj)(j) * raw(j); j += 1 }
+        s.toFloat
+      }, k)
+    }.toDF("vec_id", "embedding", "label")
   }
 }

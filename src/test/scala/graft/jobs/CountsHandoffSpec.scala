@@ -45,4 +45,33 @@ class CountsHandoffSpec extends AnyFunSuite with SparkSpec with Matchers {
       .toSeq shouldBe Seq(("b1", 1L, 1L))
     new java.io.File(dir).listFiles().count(_.getName.startsWith("epoch-")) shouldBe 2
   }
+
+  test("a handoff whose journal rename fails throws and leaves the epoch unjournaled") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failrename.impl", classOf[FailingRenameFileSystem].getName)
+    val dir = java.nio.file.Files.createTempDirectory("counts4").toString
+    val e = intercept[java.io.IOException](
+      ValidationJob.countsHandoff(s"failrename://$dir")(counts("b1" -> true), 3L))
+    e.getMessage should include("epoch 3")
+    // no epoch file: the retried epoch journals instead of skipping as a replay
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("epoch-")) shouldBe empty
+  }
+
+  test("an epoch with no counts still journals its (empty) delta file") {
+    val dir = java.nio.file.Files.createTempDirectory("counts5").toString
+    ValidationJob.countsHandoff(dir)(counts("b1" -> true).limit(0), 4L)
+    new java.io.File(dir).listFiles().map(_.getName)
+      .count(_.startsWith("epoch-")) shouldBe 1
+  }
+}
+
+/** The local file system under the `failrename` scheme, with Hadoop's
+  * failure signal for a rename (`false`) on every move into the journal. */
+class FailingRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failrename:///")
+  override def getScheme: String = "failrename"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !dst.getName.startsWith("epoch-") && super.rename(src, dst)
 }

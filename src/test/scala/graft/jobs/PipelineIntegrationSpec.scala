@@ -19,6 +19,8 @@ import scala.collection.mutable.ArrayBuffer
   * stream → transformWithState tracker (RocksDB state on the control-plane
   * session, real completion timer) → terminal COMPLETED. This is the
   * integration the reference pins with its mini-cluster ValidationJobIntTest.
+  * The timed replay runs the reference's terminate-then-late-record
+  * scenario through the same wiring at the job's own 1 s cadence.
   * Then the job's lifecycle: `ValidationJob.main` waits on ALL of its queries,
   * so the first to die takes the job down for `RestartSupervisor` to restart
   * whole, and a start that fails part-way stops what it started. */
@@ -97,6 +99,108 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
       out.head.status shouldBe Status.Completed
       out.head.actualRecordCount shouldBe 2
       out.head.invalidRecordCount shouldBe 1
+    } finally stopAll(running)
+  }
+
+  test("timed replay: a record after TERMINATED is dropped and no terminal notification duplicates " +
+      "(reference ValidationJobIntTest.scala:220-279)") {
+    val dir = java.nio.file.Files.createTempDirectory("vreplay").toString
+    val countsDir = s"$dir/counts"
+    val records = MemoryStream[Rec]
+    val notifications = MemoryStream[String]
+    val validOffsets = ArrayBuffer.empty[Long]
+    val invalidRows = ArrayBuffer.empty[org.apache.spark.sql.Row]
+    val countedIds = ArrayBuffer.empty[String]
+    val sinks = new ValidationSinks {
+      def valid(df: DataFrame, epochId: Long): Unit =
+        validOffsets ++= df.select("offset").as[Long].collect()
+      def invalid(df: DataFrame, epochId: Long): Unit = invalidRows ++= df.collect()
+      def counts(df: DataFrame, epochId: Long): Unit = {
+        countedIds ++= df.select("batchId").as[String].collect()
+        ValidationJob.countsHandoff(countsDir)(df, epochId)
+      }
+    }
+    // 10 s, not the reference's 3 s: the tracker runs at the job's 1 s
+    // cadence and a trigger of it takes 1-2 s on a 4-core host, so
+    // TERMINATED reaches it 3-5 s after the timers are armed
+    val (trackerIn, terminal, plane) = trackerPlane(countsDir, completionDelayMs = 10000L)
+    val running = ValidationJob.start(spark, records.toDF(), notifications.toDF(),
+      new JsonValidator, sinks, dir, tracker = Some(plane))
+    val tracker = running.trackerQuery.get
+    // every notification reaches both planes (two consumers of one topic in
+    // production)
+    def announce(ns: String*): Unit = {
+      notifications.addData(ns: _*)
+      trackerIn.addData(ns: _*)
+      running.notificationQuery.processAllAvailable()
+    }
+    def status(id: String): Option[String] =
+      running.snapshot.get(id).map(_.getAs[String]("status"))
+    def await(what: String, timeoutMs: Long = 30000)(cond: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis + timeoutMs
+      while (!cond) {
+        if (System.currentTimeMillis > deadline) fail(s"timed out waiting for $what")
+        Thread.sleep(25)
+      }
+    }
+    // a tracker trigger that started after this call has finished, so it read
+    // every notification added and every epoch journaled before it (a
+    // processing-time transformWithState query never settles for
+    // processAllAvailable)
+    def trackerTick(): Unit = {
+      val since = System.currentTimeMillis
+      await("a tracker trigger")(tracker.recentProgress.exists(p =>
+        java.time.Instant.parse(p.timestamp).toEpochMilli > since))
+    }
+    def emitted: List[BatchNotification] = terminal.synchronized(terminal.toList)
+    try {
+      // phase 1: announce both batches (expected=2 each)
+      announce(notifJson("b-term", Status.Started, 2), notifJson("b-ctrl", Status.Started, 2))
+      status("b-term") shouldBe Some(Status.Started)
+      status("b-ctrl") shouldBe Some(Status.Started)
+      // phase 2: two valid records per batch, journaled and read by the tracker
+      records.addData(
+        rec(0, "b-term", """{"ok":1}"""), rec(1, "b-term", """{"ok":2}"""),
+        rec(2, "b-ctrl", """{"ok":1}"""), rec(3, "b-ctrl", """{"ok":2}"""))
+      running.recordQuery.processAllAvailable()
+      validOffsets should have size 4
+      trackerTick()
+      // phase 3: sendCompleted both — counts match expected, so the tracker
+      // arms each batch's completion-delay timer in the same trigger
+      announce(notifJson("b-term", Status.SendCompleted, 2),
+        notifJson("b-ctrl", Status.SendCompleted, 2))
+      status("b-term") shouldBe Some(Status.SendCompleted)
+      status("b-ctrl") shouldBe Some(Status.SendCompleted)
+      trackerTick()
+      // phase 4: TERMINATED lands on b-term well inside its completion delay
+      announce(notifJson("b-term", Status.Terminated, 2))
+      status("b-term") shouldBe Some(Status.Terminated)
+      trackerTick()
+      emitted shouldBe empty
+      // phase 5: b-ctrl's timer fires and emits COMPLETED; b-term's fires in
+      // the same trigger but TERMINATED got there first, so its re-check must
+      // emit NOTHING (reference Tracker.scala:93-103)
+      await("b-ctrl COMPLETED emission", 20000)(emitted.exists(n =>
+        n.id == "b-ctrl" && n.status == Status.Completed))
+      trackerTick()
+      emitted should have size 1
+      emitted.head.actualRecordCount shouldBe 2
+      emitted.head.invalidRecordCount shouldBe 0
+      // phase 6: late records — b-term's must be DROPPED (V6: not valid, not
+      // invalid, no count), b-ctrl's flows through as usual
+      records.addData(rec(10, "b-term", """{"late":1}"""), rec(11, "b-ctrl", """{"late":1}"""))
+      running.recordQuery.processAllAvailable()
+      validOffsets should contain(11L)
+      validOffsets should not contain 10L
+      invalidRows shouldBe empty
+      countedIds.count(_ == "b-term") shouldBe 2
+      // phase 7: b-ctrl's late count (3 > expected 2) reaches the tracker
+      // AFTER its terminal latched — T8 end to end: no second emission ever
+      countedIds.count(_ == "b-ctrl") shouldBe 3
+      trackerTick()
+      trackerTick() // a further tracker trigger past the late count
+      tracker.exception shouldBe None
+      emitted should have size 1
     } finally stopAll(running)
   }
 

@@ -311,130 +311,6 @@ class ValidationStreamSpec extends AnyFunSuite with SparkSpec with Matchers {
     }
   }
 
-  test("timed replay: a record after TERMINATED is dropped and no terminal notification duplicates " +
-      "(reference ValidationJobIntTest.scala:220-279)") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    implicit val tiEnc: org.apache.spark.sql.Encoder[graft.tracker.TrackerInput] =
-      org.apache.spark.sql.Encoders.product[graft.tracker.TrackerInput]
-    implicit val bnEnc: org.apache.spark.sql.Encoder[BatchNotification] =
-      org.apache.spark.sql.Encoders.product[BatchNotification]
-    val records = MemoryStream[Rec]
-    val notifications = MemoryStream[String]
-    // the tracker runs on the control-plane session, as in production
-    val trackerIn = MemoryStream[graft.tracker.TrackerInput](tiEnc,
-      TrackerProcessor.controlPlaneSession(s).sqlContext)
-    val trackerOut = ArrayBuffer.empty[BatchNotification]
-    val dir = java.nio.file.Files.createTempDirectory("vreplay").toString
-
-    def intOr(r: Row, f: String, dflt: Int): Int =
-      if (r.isNullAt(r.fieldIndex(f))) dflt else r.getAs[Int](f)
-    // ONE notification source feeds BOTH planes here (production reads the
-    // topic with two consumers, one per plane): the compaction query updates
-    // the validation snapshot AND forwards each notification into the
-    // tracker's event stream
-    val store = new NotificationSnapshot(s, Some(dir)) {
-      override def update(df: DataFrame): Unit = {
-        super.update(df)
-        df.collect().foreach { r =>
-          trackerIn.addData(graft.tracker.TrackerInput.notification(BatchNotification(
-            r.getAs[String]("id"), r.getAs[String]("name"), r.getAs[String]("topic"),
-            r.getAs[String]("dataType"), r.getAs[String]("status"),
-            null, null, intOr(r, "expectedRecordCount", -1),
-            intOr(r, "actualRecordCount", -1), intOr(r, "invalidRecordCount", -1),
-            intOr(r, "invalidThreshold", -1), r.getAs[String]("failureMessage"),
-            r.getAs[String]("metadata"))))
-        }
-      }
-    }
-    // ... and the counts sink forwards the per-micro-batch deltas (the
-    // production intra-job handoff, pre-aggregated per batch)
-    val sinks = new CollectingSinks {
-      override def counts(df: DataFrame, epochId: Long): Unit = {
-        super.counts(df, epochId)
-        graft.jobs.ValidationJob.countsDeltas(df).collect().foreach(r => trackerIn.addData(graft.tracker.TrackerInput.count(
-          graft.model.CountsDelta(r.getString(0), r.getLong(1), r.getLong(2)))))
-      }
-    }
-    val tick = org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds")
-    val nq = ValidationStream.startNotificationQuery(
-      notifications.toDF(), store, dir, trigger = tick)
-    val rq = ValidationStream.startRecordQuery(
-      records.toDF(), store, new JsonValidator, sinks, dir, trigger = tick)
-    val tq = TrackerProcessor.track(trackerIn.toDS(), completionDelayMs = 3000L)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[BatchNotification], _: Long) =>
-        trackerOut.synchronized { trackerOut ++= b.collect() }; ()
-      }
-      .option("checkpointLocation", s"$dir/tracker")
-      .trigger(tick)
-      .start()
-    def await(what: String, timeoutMs: Long = 30000)(cond: => Boolean): Unit = {
-      val deadline = System.currentTimeMillis + timeoutMs
-      while (!cond) {
-        if (System.currentTimeMillis > deadline) fail(s"timed out waiting for $what")
-        Thread.sleep(25)
-      }
-    }
-    def status(id: String): Option[String] =
-      store.get(id).map(_.getAs[String]("status"))
-    try {
-      // phase 1: announce both batches (expected=2 each)
-      notifications.addData(
-        notifJson("b-term", Status.Started, 2), notifJson("b-ctrl", Status.Started, 2))
-      await("STARTED in snapshot")(
-        status("b-term").contains(Status.Started) && status("b-ctrl").contains(Status.Started))
-      // phase 2: two valid records per batch, wall-clock-paced triggers
-      records.addData(
-        rec(0, Some("b-term"), """{"ok":1}"""), rec(1, Some("b-term"), """{"ok":2}"""),
-        rec(2, Some("b-ctrl"), """{"ok":1}"""), rec(3, Some("b-ctrl"), """{"ok":2}"""))
-      await("4 valid records")(sinks.validRows.synchronized(sinks.validRows.size) == 4)
-      // phase 3: sendCompleted both — counts match expected, so the tracker
-      // arms each batch's 3 s completion-delay timer
-      notifications.addData(
-        notifJson("b-term", Status.SendCompleted, 2),
-        notifJson("b-ctrl", Status.SendCompleted, 2))
-      await("SEND_COMPLETED in snapshot")(
-        status("b-term").contains(Status.SendCompleted) &&
-          status("b-ctrl").contains(Status.SendCompleted))
-      // phase 4: TERMINATED lands on b-term well inside its completion delay
-      notifications.addData(notifJson("b-term", Status.Terminated, 2))
-      await("TERMINATED in snapshot")(status("b-term").contains(Status.Terminated))
-      // phase 5: b-ctrl's timer fires at +3 s and emits COMPLETED; b-term's
-      // fires too (same arming window) but TERMINATED got there first, so its
-      // re-check must emit NOTHING (reference Tracker.scala:93-103)
-      await("b-ctrl COMPLETED emission", 20000)(
-        trackerOut.synchronized(trackerOut.exists(n =>
-          n.id == "b-ctrl" && n.status == Status.Completed)))
-      Thread.sleep(500) // b-term's timer fired in the same window — let it land
-      trackerOut.synchronized(trackerOut.toList) should have size 1
-      val completed = trackerOut.synchronized(trackerOut.head)
-      completed.actualRecordCount shouldBe 2
-      completed.invalidRecordCount shouldBe 0
-      // phase 6: late records — b-term's must be DROPPED (V6: not valid, not
-      // invalid, no count), b-ctrl's flows through as usual
-      records.addData(
-        rec(10, Some("b-term"), """{"late":1}"""),
-        rec(11, Some("b-ctrl"), """{"late":1}"""))
-      await("late b-ctrl record validated")(sinks.validRows.synchronized(
-        sinks.validRows.exists(_.getAs[Long]("offset") == 11L)))
-      sinks.validRows.synchronized(sinks.validRows.map(_.getAs[Long]("offset"))) should
-        not contain 10L
-      sinks.invalidRows.synchronized(sinks.invalidRows.toList) shouldBe empty
-      sinks.countRows.synchronized(
-        sinks.countRows.count(_.getAs[String]("batchId") == "b-term")) shouldBe 2
-      // phase 7: b-ctrl's late count (3 > expected 2) reaches the tracker
-      // AFTER its terminal latched — T8 end to end: no second emission ever
-      await("late b-ctrl count forwarded")(sinks.countRows.synchronized(
-        sinks.countRows.count(_.getAs[String]("batchId") == "b-ctrl")) == 3)
-      Thread.sleep(1000) // several tracker triggers past the late count
-      trackerOut.synchronized(trackerOut.toList) should have size 1
-    } finally {
-      rq.stop(); nq.stop(); tq.stop()
-    }
-  }
-
   test("a malformed notification message cannot crash-loop the control plane") {
     val s = spark
     import s.implicits._
