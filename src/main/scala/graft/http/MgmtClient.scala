@@ -1,10 +1,18 @@
 package graft.http
 
-import graft.model.BatchNotification
+import com.fasterxml.jackson.core.{JsonEncoding, JsonParseException, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.model.{BatchNotification, Schemas}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.net.{URI, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
+import java.time.ZoneOffset
 import java.util.Base64
 import scala.util.{Failure, Success, Try}
 
@@ -33,7 +41,11 @@ class MapBatchLookup(batches: Map[String, BatchNotification]) extends BatchLooku
   * Any non-2xx response surfaces as [[RequestException]] — retry/404 policy is the
   * caller's (Retry / MgmtApiSink), exactly as in the reference.
   *
-  * Plain `java.net.http` — no Spark involvement; instances live driver-side.
+  * Plain `java.net.http`; instances live driver-side. Bodies go through one
+  * Jackson mapper per JVM: a batch body is read by the notification topic's
+  * rules ([[MgmtClient.parseNotification]]), and the PUT bodies are
+  * `{"actualRecordCount":N,"invalidRecordCount":M}`, plus `"failureMessage"`
+  * for `fail`, in that key order.
   */
 class MgmtClient(
     baseUri: String,
@@ -66,7 +78,8 @@ class MgmtClient(
       .header("Authorization", s"Basic $basic")
       .header("Content-Type", "application/x-www-form-urlencoded")
       .POST(HttpRequest.BodyPublishers.ofString(form)).build())
-    Json.strField(body, "access_token")
+    Try(MgmtClient.Mapper.readTree(body).get("access_token")).toOption
+      .collect { case t if t != null && t.isTextual => t.asText }
       .getOrElse(throw RequestException(500, "no access_token in token response"))
   }
 
@@ -75,35 +88,101 @@ class MgmtClient(
       URI.create(s"$baseUri/tenants/$tenantId/batches/$batchId"))
       .header("Authorization", s"Bearer ${token(tenantId)}")
       .GET().build())
-    Json.parseNotification(body)
+    MgmtClient.parseNotification(body)
   }
 
   /** PUT …/action/processingComplete (reference MgmtClient.scala:44-63). */
   def processingComplete(tenantId: String, batchId: String,
-      actualRecordCount: Int, invalidRecordCount: Int): Unit = {
-    val body =
-      s"""{"actualRecordCount":$actualRecordCount,"invalidRecordCount":$invalidRecordCount}"""
-    put(tenantId, batchId, "processingComplete", body)
-  }
+      actualRecordCount: Int, invalidRecordCount: Int): Unit =
+    put(tenantId, batchId, "processingComplete", counts(actualRecordCount, invalidRecordCount))
 
   /** PUT …/action/fail (reference MgmtClient.scala:65-85). */
   def fail(tenantId: String, batchId: String, actualRecordCount: Int,
-      invalidRecordCount: Int, failureMessage: String): Unit = {
-    val body = s"""{"actualRecordCount":$actualRecordCount,""" +
-      s""""invalidRecordCount":$invalidRecordCount,""" +
-      s""""failureMessage":${Json.quote(failureMessage)}}"""
-    put(tenantId, batchId, "fail", body)
-  }
+      invalidRecordCount: Int, failureMessage: String): Unit =
+    put(tenantId, batchId, "fail",
+      counts(actualRecordCount, invalidRecordCount).put("failureMessage", failureMessage))
 
-  private def put(tenantId: String, batchId: String, action: String, body: String): Unit =
+  private def counts(actual: Int, invalid: Int): ObjectNode =
+    MgmtClient.Mapper.createObjectNode()
+      .put("actualRecordCount", actual).put("invalidRecordCount", invalid)
+
+  private def put(tenantId: String, batchId: String, action: String, body: ObjectNode): Unit =
     send(HttpRequest.newBuilder(
       URI.create(s"$baseUri/tenants/$tenantId/batches/$batchId/action/$action"))
       .header("Authorization", s"Bearer ${token(tenantId)}")
       .header("Content-Type", "application/json")
-      .PUT(HttpRequest.BodyPublishers.ofString(body)).build())
+      .PUT(HttpRequest.BodyPublishers.ofString(MgmtClient.Mapper.writeValueAsString(body)))
+      .build())
 }
 
 object MgmtClient {
+
+  /** The JVM's one mapper for Mgmt API bodies. Like `from_json`'s defaults,
+    * it accepts single-quoted strings and NaN/Infinity. */
+  private val Mapper: JsonMapper = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES, JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
+
+  /** A batch body as a [[BatchNotification]], by the rules the notification
+    * topic applies (`from_json` under `Schemas.batchNotification`, then the
+    * tracker's `na.fill(-1)`):
+    *  - only top-level keys are read, so a key nested in the opaque
+    *    `metadata` cannot shadow a notification field; unknown keys are
+    *    skipped, and the last duplicate key wins;
+    *  - a string field takes a JSON string as is and any other value as its
+    *    compact JSON text;
+    *  - an int field takes an integer that fits in an Int, else -1;
+    *  - a timestamp takes ISO-8601 text, UTC (the job's session zone) when
+    *    it has no offset, or integer epoch seconds, else null;
+    *  - a JSON null gives null (-1 for an int), and a value that does not
+    *    convert leaves the field as an earlier duplicate key set it.
+    * A body that is not a JSON object throws a `JsonProcessingException`. */
+  private[graft] def parseNotification(body: String): BatchNotification = {
+    val fields = scala.collection.mutable.HashMap.empty[String, Any]
+    val p = Mapper.createParser(body)
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT)
+        throw new JsonParseException(p, "a batch body must be a JSON object")
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName()
+        p.nextToken()
+        Schemas.batchNotification.find(_.name == name) match {
+          case Some(f) => convert(p, f.dataType).foreach(fields(name) = _)
+          case None => p.skipChildren()
+        }
+      }
+    } finally p.close()
+    def str(f: String) = fields.get(f).orNull.asInstanceOf[String]
+    def ts(f: String) = fields.get(f).orNull.asInstanceOf[java.sql.Timestamp]
+    def int(f: String) = fields.get(f) match { case Some(i: Int) => i; case _ => -1 }
+    BatchNotification(str("id"), str("name"), str("topic"), str("dataType"), str("status"),
+      ts("startDate"), ts("endDate"), int("expectedRecordCount"), int("actualRecordCount"),
+      int("invalidRecordCount"), int("invalidThreshold"), str("failureMessage"),
+      str("metadata"))
+  }
+
+  /** The value at `p` as `from_json` converts it to `dt`; None when it does
+    * not convert. Timestamps go through Spark's own string parse. */
+  private def convert(p: JsonParser, dt: DataType): Option[Any] = (p.currentToken, dt) match {
+    case (JsonToken.VALUE_NULL, _) => Some(null)
+    case (JsonToken.VALUE_STRING, StringType) => Some(p.getText)
+    case (_, StringType) =>
+      // a UTF-8 generator, as in from_json: it escapes a surrogate pair
+      // that a Writer-backed one would copy raw
+      val out = new java.io.ByteArrayOutputStream()
+      val g = Mapper.getFactory.createGenerator(out, JsonEncoding.UTF8)
+      try g.copyCurrentStructure(p) finally g.close()
+      Some(out.toString(StandardCharsets.UTF_8))
+    case (JsonToken.VALUE_NUMBER_INT, IntegerType)
+        if p.getNumberType == JsonParser.NumberType.INT => Some(p.getIntValue)
+    case (JsonToken.VALUE_STRING, TimestampType) =>
+      DateTimeUtils.stringToTimestamp(UTF8String.fromString(p.getText), ZoneOffset.UTC)
+        .map(micros => DateTimeUtils.toJavaTimestamp(micros))
+    case (JsonToken.VALUE_NUMBER_INT, TimestampType)
+        if p.getNumberType != JsonParser.NumberType.BIG_INTEGER =>
+      Some(DateTimeUtils.toJavaTimestamp(p.getLongValue * 1000000L))
+    case _ => p.skipChildren(); None
+  }
 
   val TrustStoreEnv = "HRI_TRUSTSTORE"
   val TrustStorePasswordEnv = "HRI_TRUSTSTORE_PASSWORD"
@@ -137,166 +216,5 @@ object MgmtClient {
         ctx.init(null, tmf.getTrustManagers, null)
         HttpClient.newBuilder().sslContext(ctx).build()
     }
-  }
-}
-
-/** Minimal JSON helpers for the two fixed control payloads — driver-side only; the
-  * data plane parses JSON with Spark's codegen'd `from_json`, never this. */
-private[http] object Json {
-
-  def quote(s: String): String =
-    if (s == null) "null"
-    else "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private val str = """"%s"\s*:\s*"((?:[^"\\]|\\.)*)""""
-  private val num = """"%s"\s*:\s*(-?\d+)"""
-
-  /** Index of `"field"` as a TOP-LEVEL key (depth 1, outside string content,
-    * followed by optional whitespace and ':'), or -1. Depth-aware so a
-    * user-controlled NESTED object — the opaque `metadata` passthrough — can
-    * never shadow a notification field: in `{"metadata":{"status":
-    * "COMPLETED"},"status":"STARTED"}` the notification's status is STARTED
-    * regardless of server field order; a whole-document regex scan would
-    * have matched the nested key first and e.g. marked a live batch
-    * COMPLETED (routing every record invalid) or corrupted
-    * expectedRecordCount in the tracker. */
-  private def topLevelKeyIndex(json: String, field: String): Int = {
-    val key = "\"" + field + "\""
-    var depth = 0; var inStr = false; var esc = false; var k = 0
-    while (k < json.length) {
-      val c = json.charAt(k)
-      if (esc) esc = false
-      else if (inStr) { if (c == '\\') esc = true else if (c == '"') inStr = false }
-      else c match {
-        case '"' =>
-          if (depth == 1 && json.regionMatches(k, key, 0, key.length)) {
-            var j = k + key.length
-            while (j < json.length && json.charAt(j).isWhitespace) j += 1
-            if (j < json.length && json.charAt(j) == ':') return k
-          }
-          // not this field's key (or a string VALUE that merely equals it):
-          // enter the string and keep scanning
-          inStr = true
-        case '{' | '[' => depth += 1
-        case '}' | ']' => depth -= 1
-        case _ =>
-      }
-      k += 1
-    }
-    -1
-  }
-
-  def strField(json: String, field: String): Option[String] = {
-    val i = topLevelKeyIndex(json, field)
-    if (i < 0) None
-    // prefix-anchored at the located key: a later (possibly nested)
-    // same-named key must not be picked up when THIS value isn't a string
-    else str.format(java.util.regex.Pattern.quote(field)).r
-      .findPrefixMatchOf(json.substring(i)).map(m => unescape(m.group(1)))
-  }
-
-  def intField(json: String, field: String): Option[Int] = {
-    val i = topLevelKeyIndex(json, field)
-    if (i < 0) None
-    else num.format(java.util.regex.Pattern.quote(field)).r
-      .findPrefixMatchOf(json.substring(i)).map(_.group(1).toInt)
-  }
-
-  /** Raw text of `field`'s JSON value — balanced-brace scan, string-aware. Used
-    * for the opaque `metadata` passthrough: an object/array/number/bool comes
-    * back byte-for-byte; a quoted string comes back unescaped (matching what
-    * Spark's `from_json` yields for a StringType field); absent or `null` →
-    * None. */
-  def rawField(json: String, field: String): Option[String] = {
-    // the same depth-1 key location as strField/intField: a nested object's
-    // same-named key (or the key text as a string VALUE) never matches
-    val i = topLevelKeyIndex(json, field)
-    if (i < 0) None
-    else {
-      var j = i + field.length + 2
-      while (j < json.length && json(j).isWhitespace) j += 1
-      rawValueAt(json, j + 1, field, i)
-    }
-  }
-
-  private def rawValueAt(json: String, from: Int, field: String, keyPos: Int): Option[String] = {
-    var j = from
-    while (j < json.length && json(j).isWhitespace) j += 1
-    if (j >= json.length) return None
-    json(j) match {
-      case '"' => // string value: unescape, prefix-anchored at THIS key
-        str.format(java.util.regex.Pattern.quote(field)).r
-          .findPrefixMatchOf(json.substring(keyPos)).map(m => unescape(m.group(1)))
-      case '{' | '[' =>
-        val open = json(j); val close = if (open == '{') '}' else ']'
-        var depth = 0; var k = j; var inStr = false; var esc = false
-        while (k < json.length) {
-          val c = json(k)
-          if (esc) esc = false
-          else if (inStr) { if (c == '\\') esc = true else if (c == '"') inStr = false }
-          else if (c == '"') inStr = true
-          else if (c == open) depth += 1
-          else if (c == close) { depth -= 1; if (depth == 0) return Some(json.substring(j, k + 1)) }
-          k += 1
-        }
-        None // unbalanced
-      case _ =>
-        var k = j
-        while (k < json.length && !",}]".contains(json(k)) && !json(k).isWhitespace) k += 1
-        Some(json.substring(j, k)).filter(v => v.nonEmpty && v != "null")
-    }
-  }
-
-  private def unescape(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => b.append('\n'); i += 2
-          case 'r' => b.append('\r'); i += 2
-          case 't' => b.append('\t'); i += 2
-          case 'u' if i + 5 < s.length =>
-            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case o => b.append(o); i += 2
-        }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
-
-  /** Parse the notification payload's known fields (open-world: unknown fields
-    * ignored, like the reference's FAIL_ON_UNKNOWN_PROPERTIES=false Jackson setup,
-    * NotificationDeserializer.scala:26-29). */
-  def parseNotification(json: String): BatchNotification = {
-    def ts(f: String): java.sql.Timestamp =
-      strField(json, f).map(v =>
-        java.sql.Timestamp.from(java.time.OffsetDateTime.parse(v).toInstant)).orNull
-    BatchNotification(
-      id = strField(json, "id").orNull,
-      name = strField(json, "name").orNull,
-      topic = strField(json, "topic").orNull,
-      dataType = strField(json, "dataType").orNull,
-      status = strField(json, "status").orNull,
-      startDate = ts("startDate"),
-      endDate = ts("endDate"),
-      expectedRecordCount = intField(json, "expectedRecordCount").getOrElse(-1),
-      actualRecordCount = intField(json, "actualRecordCount").getOrElse(-1),
-      invalidRecordCount = intField(json, "invalidRecordCount").getOrElse(-1),
-      invalidThreshold = intField(json, "invalidThreshold").getOrElse(-1),
-      failureMessage = strField(json, "failureMessage").orNull,
-      // opaque passthrough — the reference carries metadata byte-for-byte
-      // (TestBatchNotification.scala:45); a remotely-resolved batch must not
-      // lose user metadata on its way into a terminal notification
-      metadata = rawField(json, "metadata").orNull)
   }
 }

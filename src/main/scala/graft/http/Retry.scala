@@ -1,5 +1,7 @@
 package graft.http
 
+import com.fasterxml.jackson.core.JsonProcessingException
+
 /** HTTP request failed with a status code (reference MgmtClient.scala's
   * `RequestException(status)` surface, thrown on any non-2xx response). */
 case class RequestException(status: Int, body: String)
@@ -52,9 +54,12 @@ object Retry {
     * DELIBERATE deviation, not the reference policy: this client follows no
     * redirects, so a 3xx is as deterministic as a 4xx, and a misconfigured
     * base URI behind a redirecting load balancer would otherwise back off
-    * for the full 24 h ceiling on an error that can never succeed. */
+    * for the full 24 h ceiling on an error that can never succeed. A body
+    * that is not JSON (a proxy's HTML page, say) fails fast too: the
+    * exception is an IOException, so its case comes first. */
   val serverSideOnly: Throwable => Boolean = {
     case RequestException(status, _) => status >= 500
+    case _: JsonProcessingException => false
     case _ => true
   }
 }

@@ -285,8 +285,9 @@ object ValidationJob {
       .as[CountsDelta]
     val notifications = ValidationStream.parseNotifications(t.notifications)
       // an absent Int field would NPE the non-nullable encoder fields and
-      // crash-loop the tracker from its checkpoint. Absent counts default -1,
-      // matching MgmtClient.parseNotification's open-world convention
+      // crash-loop the tracker from its checkpoint. Absent counts default -1;
+      // MgmtClient.parseNotification reads lookup bodies by this same parse
+      // and fill
       .na.fill(-1L, Seq("expectedRecordCount", "actualRecordCount",
         "invalidRecordCount", "invalidThreshold"))
       .as[BatchNotification]

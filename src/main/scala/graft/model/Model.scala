@@ -14,7 +14,6 @@ object Status {
   val Completed     = "COMPLETED"
   val Failed        = "FAILED"
   val Terminated    = "TERMINATED"
-  val All: Seq[String] = Seq(Started, SendCompleted, Completed, Failed, Terminated)
   /** Statuses for which incoming records are silently dropped
     * (reference ValidationProcessFunction.scala:114-118). */
   val Dropped: Seq[String] = Seq(Failed, Terminated)
@@ -58,10 +57,6 @@ case class InvalidRecord(
     offset: Long,
     batchId: String)
 
-/** Counts message emitted per validated record for live batches
-  * (reference ValidationProcessFunction.scala:152-158). */
-case class CountsMessage(batchId: String, isValid: Boolean)
-
 /** Per-epoch pre-aggregated counts handed from the validation plane to the
   * tracker: one row per (epoch, batch), not per record. Pre-aggregation keeps the
   * tracker shuffle proportional to live-batch cardinality at any data volume, and
@@ -100,30 +95,15 @@ object Schemas {
     StructField("partition", IntegerType),
     StructField("offset", LongType)))
 
-  /** JSON wire schema for `from_json` on the notification topic. The reference parses
-    * with Jackson `FAIL_ON_UNKNOWN_PROPERTIES` disabled (NotificationDeserializer
-    * .scala:26-29); `from_json`'s permissive default matches that open-world stance. */
-  val batchNotification: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("name", StringType),
-    StructField("topic", StringType),
-    StructField("dataType", StringType),
-    StructField("status", StringType),
-    StructField("startDate", TimestampType),
-    StructField("endDate", TimestampType),
-    StructField("expectedRecordCount", IntegerType),
-    StructField("actualRecordCount", IntegerType),
-    StructField("invalidRecordCount", IntegerType),
-    StructField("invalidThreshold", IntegerType),
-    StructField("failureMessage", StringType),
-    StructField("metadata", StringType)))
-
-  val invalidRecord: StructType = StructType(Seq(
-    StructField("failure", StringType),
-    StructField("topic", StringType),
-    StructField("partition", IntegerType),
-    StructField("offset", LongType),
-    StructField("batchId", StringType)))
+  /** JSON wire schema for `from_json` on the notification topic: the
+    * [[BatchNotification]] fields, every one nullable (a JSON payload may omit
+    * any of them). The reference parses with Jackson
+    * `FAIL_ON_UNKNOWN_PROPERTIES` disabled (NotificationDeserializer
+    * .scala:26-29); `from_json`'s permissive default matches that open-world
+    * stance, and `MgmtClient.parseNotification` reads lookup bodies by the
+    * same rules. */
+  val batchNotification: StructType = StructType(
+    org.apache.spark.sql.Encoders.product[BatchNotification].schema.map(_.copy(nullable = true)))
 }
 
 /** Canonical error strings (reference ValidationProcessFunction.scala:43-45). */

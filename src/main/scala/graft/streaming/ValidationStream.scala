@@ -49,12 +49,17 @@ class NotificationSnapshot(spark: SparkSession, persistDir: Option[String]) exte
 
   persistDir.flatMap(journalVersions(_).lastOption).foreach { case (v, p) =>
     journalVersion.set(v)
-    spark.read.parquet(p.toString).collect().foreach(r => byId(r.getAs[String]("id")) = r)
+    spark.read.parquet(p.toString).collect().foreach { r =>
+      val id = r.getAs[String]("id")
+      if (id != null) byId(id) = r
+    }
   }
 
   /** Last-write-wins upsert of a notification micro-batch (V2). Rows must carry
     * Schemas.batchNotification columns; null-id rows (malformed upstream JSON)
-    * are skipped — a TrieMap null key would NPE and poison the batch. */
+    * are skipped. A TrieMap takes a null key, and a null in [[knownIds]]
+    * would turn the miss scan's `NOT IN` null for every candidate, so no
+    * unannounced batch would ever be looked up again. */
   def update(notifications: DataFrame): Unit = {
     val rows = notifications.collect().filter(_.getAs[String]("id") != null)
     if (rows.nonEmpty) {
@@ -77,7 +82,7 @@ class NotificationSnapshot(spark: SparkSession, persistDir: Option[String]) exte
   def knownIds: Set[String] = byId.keySet.toSet
 
   /** Direct upsert (remote-lookup path). The id is explicit because rows built
-    * positionally with `Row(...)` carry no schema for name-based access. */
+    * positionally (`Row.fromTuple`) carry no schema for name-based access. */
   def put(id: String, row: Row): Unit = byId(id) = row
 
   /** The snapshot as a `LocalRelation` over the in-memory rows: the
@@ -301,10 +306,9 @@ object ValidationStream {
           val tenant = scala.util.Try(Topics.tenantId(topic)).getOrElse("unknown")
           try {
             val n = retry.run(lookup.getBatchId(tenant, batchId).get)
-            store.put(n.id, Row(
-              n.id, n.name, n.topic, n.dataType, n.status, n.startDate, n.endDate,
-              n.expectedRecordCount, n.actualRecordCount, n.invalidRecordCount,
-              n.invalidThreshold, n.failureMessage, n.metadata))
+            // an answer about another id, or an id-less body, counts as a
+            // 404 for this epoch
+            if (n.id == batchId) store.put(batchId, Row.fromTuple(n))
           } catch {
             case RequestException(404, _) => // stays unknown → invalid (V5)
             case e @ RequestException(s, _) if s >= 400 && s <= 499 => throw e

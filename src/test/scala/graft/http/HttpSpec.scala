@@ -47,6 +47,8 @@ class HttpSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
                "dataType":"claims","startDate":"2020-12-08T03:02:23Z",
                "metadata":{"compression":"gzip","nested":{"a":[1,2]},"note":"x}y"},
                "expectedRecordCount":7,"invalidThreshold":-1,"ignoredNewField":true}""")
+    case "/badoauth/token" => (200, "<html>sign in</html>")
+    case "/mgmt/tenants/t1/batches/b-html" => (200, "<html>proxy error</html>")
     case "/mgmt/tenants/t1/batches/b-missing" => (404, """{"error":"not found"}""")
     case "/mgmt/tenants/t1/batches/b-flaky" =>
       if (failuresBeforeSuccess > 0) { failuresBeforeSuccess -= 1; (503, "busy") }
@@ -76,40 +78,40 @@ class HttpSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     get.auth shouldBe "Bearer tok-123"
   }
 
-  test("getBatchId: opaque metadata passes through raw (objects byte-for-byte)") {
+  test("getBatchId: opaque metadata passes through as compact JSON text") {
     val n = client.getBatchId("t1", "b-found").get
     n.metadata shouldBe """{"compression":"gzip","nested":{"a":[1,2]},"note":"x}y"}"""
   }
 
-  test("rawField: key text appearing earlier as a string VALUE does not end the scan") {
-    val j = """{"name":"metadata", "note":"the \"metadata\" field", "metadata":{"x":1}}"""
-    Json.rawField(j, "metadata") shouldBe Some("""{"x":1}""")
-    Json.rawField("""{"metadata":"plain"}""", "metadata") shouldBe Some("plain")
-    Json.rawField("""{"metadata":null}""", "metadata") shouldBe None
-    Json.rawField("""{"other":1}""", "metadata") shouldBe None
+  test("metadata: key text earlier as a string VALUE does not hide the field") {
+    def metadata(body: String) = MgmtClient.parseNotification(body).metadata
+    metadata("""{"name":"metadata", "note":"the \"metadata\" field", "metadata":{"x":1}}""") shouldBe
+      """{"x":1}"""
+    metadata("""{"metadata":"plain"}""") shouldBe "plain"
+    metadata("""{"metadata":null}""") shouldBe null
+    metadata("""{"other":1}""") shouldBe null
   }
 
   test("user-controlled metadata keys cannot shadow top-level notification fields") {
     // metadata is an opaque user passthrough and server field order is not
     // guaranteed: nested keys named like notification fields, appearing
-    // FIRST, must not win — a whole-document regex scan would read the
-    // batch as COMPLETED (routing every live record invalid) and corrupt
+    // FIRST, must not win — a whole-document scan would read the batch as
+    // COMPLETED (routing every live record invalid) and corrupt
     // expectedRecordCount in the tracker
-    val j = """{"metadata":{"status":"COMPLETED","expectedRecordCount":0,
-               "id":"evil","deeper":{"invalidThreshold":99}},
-               "id":"b9","status":"STARTED","expectedRecordCount":500000,
-               "invalidThreshold":-1}"""
-    Json.strField(j, "status") shouldBe Some("STARTED")
-    Json.strField(j, "id") shouldBe Some("b9")
-    Json.intField(j, "expectedRecordCount") shouldBe Some(500000)
-    Json.intField(j, "invalidThreshold") shouldBe Some(-1)
+    val n = MgmtClient.parseNotification(
+      """{"metadata":{"status":"COMPLETED","expectedRecordCount":0,
+         "id":"evil","deeper":{"invalidThreshold":99}},
+         "id":"b9","status":"STARTED","expectedRecordCount":500000,
+         "invalidThreshold":-1}""")
+    n.status shouldBe "STARTED"
+    n.id shouldBe "b9"
+    n.expectedRecordCount shouldBe 500000
+    n.invalidThreshold shouldBe -1
     // a top-level NUMBER followed by a deeper same-named STRING key: the
-    // string regex anchored at the top-level key must not skip ahead
-    val k = """{"status":5,"nested":{"status":"COMPLETED"}}"""
-    Json.strField(k, "status") shouldBe None
-    Json.intField(k, "status") shouldBe Some(5)
-    // and rawField locates top-level only
-    Json.rawField(j, "id") shouldBe Some("b9")
+    // number is the status (as its JSON text, like from_json), never the
+    // nested string
+    MgmtClient.parseNotification("""{"status":5,"nested":{"status":"COMPLETED"}}""")
+      .status shouldBe "5"
   }
 
   test("retry policy: 3xx and 4xx fail fast; only 5xx/transport retry") {
@@ -117,6 +119,9 @@ class HttpSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     Retry.serverSideOnly(RequestException(404, "nf")) shouldBe false
     Retry.serverSideOnly(RequestException(503, "busy")) shouldBe true
     Retry.serverSideOnly(new java.io.IOException("conn reset")) shouldBe true
+    // a body that is not JSON will not parse on a retry either
+    Retry.serverSideOnly(new com.fasterxml.jackson.core.JsonParseException(
+      null, "<html>")) shouldBe false
   }
 
   test("token form URL-encodes credentials and audience (reserved chars survive)") {
@@ -163,6 +168,15 @@ class HttpSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     f.delete()
   }
 
+  test("a body that is not JSON: no token is a 500; a batch body fails without a retry") {
+    new MgmtClient(s"$base/mgmt", s"$base/badoauth", "cid", "csecret", "aud")
+      .getBatchId("t1", "b-found").failed.get shouldBe RequestException(500,
+        "no access_token in token response")
+    val f = client.getBatchId("t1", "b-html").failed.get
+    f shouldBe a[com.fasterxml.jackson.core.JsonProcessingException]
+    Retry.serverSideOnly(f) shouldBe false
+  }
+
   test("getBatchId: 404 surfaces as RequestException(404) in the Try") {
     val f = client.getBatchId("t1", "b-missing").failed.get
     f shouldBe a[RequestException]
@@ -207,10 +221,12 @@ class HttpSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
 
   test("MgmtApiSink: FAILED → fail PUT incl. message; 409 tolerated; others throw") {
     reqs.clear()
-    new MgmtApiSink(client, noSleepRetry)
-      .send(terminal("b-bad", Status.Failed, "too many \"bad\" records"))
+    // a quote, a control character and non-ASCII text, escaped by JSON's rules
+    val message = "too many \"bad\" records" + 1.toChar + " in b-中"
+    new MgmtApiSink(client, noSleepRetry).send(terminal("b-bad", Status.Failed, message))
     reqs.last.path should endWith("/b-bad/action/fail")
-    reqs.last.body should include("\"failureMessage\":\"too many \\\"bad\\\" records\"")
+    reqs.last.body shouldBe "{\"actualRecordCount\":9,\"invalidRecordCount\":2," +
+      "\"failureMessage\":\"too many \\\"bad\\\" records\\u0001 in b-中\"}"
 
     noException should be thrownBy
       new MgmtApiSink(client, noSleepRetry).send(terminal("b-conflict", Status.Failed))

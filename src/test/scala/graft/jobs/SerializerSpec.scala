@@ -86,6 +86,44 @@ class SerializerSpec extends AnyFunSuite with SparkSpec with Matchers {
       .collect().toSeq shouldBe terminal
   }
 
+  test("a Mgmt API lookup body parses exactly as the notification topic does") {
+    import spark.implicits._
+    spark.conf.get("spark.sql.session.timeZone") shouldBe "UTC"
+    val payloads = Seq(
+      // HttpSpec's b-found body: nested metadata, an unknown field
+      """{"id":"b-found","name":"n1","topic":"ingest.t1.di.in","status":"STARTED",
+         "dataType":"claims","startDate":"2020-12-08T03:02:23Z",
+         "metadata":{"compression":"gzip","nested":{"a":[1,2]},"note":"x}y"},
+         "expectedRecordCount":7,"invalidThreshold":-1,"ignoredNewField":true}""",
+      // nested keys named like notification fields must not shadow them
+      """{"metadata":{"status":"COMPLETED","expectedRecordCount":0,
+         "id":"evil","deeper":{"invalidThreshold":99}},
+         "id":"b9","status":"STARTED","expectedRecordCount":500000,
+         "invalidThreshold":-1}""",
+      """{"id":"b-esc","name":"form\ffeed","failureMessage":"back\bspace"}""",
+      """{"id":"b-counts","expectedRecordCount":1e3,"actualRecordCount":7.9,
+         "invalidRecordCount":3000000000,"invalidThreshold":"7"}""",
+      """{"id":"b-dup","status":"STARTED","status":"COMPLETED"}""",
+      // a duplicate that does not convert keeps the earlier value
+      """{"id":"b-dup-int","expectedRecordCount":5,"expectedRecordCount":"x"}""",
+      """{"id":"b-num","status":5,"name":true,"topic":["a",1]}""",
+      """{"id":"b-ws","metadata":{ "a" : [ 1 , 2.50 ], "b" : "c" }}""",
+      """{"id":"b-str-meta","metadata":"plain \"text\""}""",
+      """{"id":"b-null-meta","metadata":null,"expectedRecordCount":null}""",
+      """{"id":"b-ts","startDate":"2020-12-08T03:02:23","endDate":"2020-12-08T03:02:23.5+02:00"}""",
+      """{"id":"b-ts-other","startDate":"2020-12-08","endDate":"not a date"}""",
+      """{"id":"b-ts-epoch","startDate":1607396543,"endDate":1.5}""",
+      """{"id":"b-ts-gmt","startDate":"2020-12-08T03:02:23GMT+01:00","endDate":"2020-12-08 03:02:23GMT"}""",
+      // a surrogate pair, escaped and raw (a plain literal keeps the escapes)
+      "{\"id\":\"b-\\ud83d\\ude00\",\"name\":\"😀\",\"metadata\":{\"k\":\"\\ud83d\\ude00\"}}",
+      """{'id':'b-quoted','expectedRecordCount':NaN}""")
+    payloads.foreach { p =>
+      val topic = graft.streaming.ValidationStream.parseNotifications(Seq(p).toDF("value"))
+        .na.fill(-1L).as[BatchNotification].collect().toSeq
+      withClue(p) { Seq(graft.http.MgmtClient.parseNotification(p)) shouldBe topic }
+    }
+  }
+
   test("kafkaSaslOptions: SASL_SSL exactly when a password is set; JAAS-escaped") {
     ValidationJob.kafkaSaslOptions(None) shouldBe empty
 

@@ -236,6 +236,34 @@ class ValidationStreamSpec extends AnyFunSuite with SparkSpec with Matchers {
     calls.get() shouldBe 1
   }
 
+  test("a lookup answer with no id or another id cannot poison the snapshot") {
+    val s = spark
+    import s.implicits._
+    org.apache.spark.sql.catalyst.encoders.OuterScopes.addOuterScope(this)
+    val dir = java.nio.file.Files.createTempDirectory("vnullid").toString
+    val store = new NotificationSnapshot(s, Some(dir))
+    def answer(id: String) = BatchNotification(id, "n", "ingest.t1.claims.in", "claims",
+      Status.Started, null, null, 10, -1, -1, -1, null, null)
+    // an id-less body parses to a null id
+    val lookup = new MapBatchLookup(Map(
+      "bad" -> answer(null), "wrong" -> answer("someone-else"), "good" -> answer("good")))
+    val retry = new Retry(initialBackoffMs = 1, giveUpAfterMs = 20)
+    ValidationStream.resolveMisses(
+      Seq(rec(0L, Some("bad"), "{}"), rec(1L, Some("wrong"), "{}")).toDF(), store, lookup, retry)
+    store.knownIds shouldBe empty
+    // a null among the known ids made the miss scan's NOT IN drop every
+    // candidate, so a later unannounced batch never resolved
+    ValidationStream.resolveMisses(Seq(rec(2L, Some("good"), "{}")).toDF(), store, lookup, retry)
+    store.knownIds shouldBe Set("good")
+
+    // a journal that already holds a null id reloads without it
+    val journal = java.nio.file.Files.createTempDirectory("vnulljournal").toString
+    s.createDataFrame(java.util.Arrays.asList(Row.fromTuple(answer(null)),
+      Row.fromTuple(answer("b1"))), graft.model.Schemas.batchNotification)
+      .write.parquet(s"$journal/snapshot-v0.parquet")
+    new NotificationSnapshot(s, Some(journal)).knownIds shouldBe Set("b1")
+  }
+
   test("the miss-scan chunk equals a plain-Scala distinct, hash-ordered take, in one narrow job") {
     val s = spark
     import s.implicits._
