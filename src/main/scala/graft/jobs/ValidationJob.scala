@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * producers (`:330-347`), 7-day state TTL (in TrackerProcessor), bounded remote
   * lookup instead of a 24 h operator-thread block (SURVEY.md §7.5).
   *
-  * The 1 s cadence is the record query's default trigger
+  * The 1 s cadence is the record query's fixed trigger
   * ([[ValidationStream.startRecordQuery]]) and the tracker query's trigger;
   * the notification query runs back to back so control outruns data. The
   * reference commits its exactly-once transactions on each 1 s checkpoint;

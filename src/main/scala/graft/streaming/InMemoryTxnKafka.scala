@@ -117,9 +117,8 @@ final case class InMemoryTxnFactory(brokerId: String) extends TxnProducerFactory
   override def open(transactionalId: String): TxnProducer =
     broker.open(transactionalId)
 
-  override def committedPartitions(markerTopic: String, txnIdBase: String,
-      epochId: Long): Set[Int] =
-    broker.committedKeys(markerTopic)
-      .flatMap(TransactionalEpochSink.parseMarker(_, txnIdBase, epochId))
-      .toSet
+  override def committed(markerTopic: String, txnIdBase: String,
+      epochId: Long, partitionId: Int): Boolean =
+    broker.committedKeys(markerTopic).exists(
+      TransactionalEpochSink.parseMarker(_, txnIdBase, epochId).contains(partitionId))
 }

@@ -9,18 +9,17 @@ package graft.streaming
   * from the build (and from this sandbox, which has no broker at all). The
   * reflective binding keeps the compile classpath connector-free while
   * remaining fully functional wherever the connector jars are present; a
-  * missing jar fails fast at [[open]]/[[committedPartitions]] with a clear
+  * missing jar fails fast at [[open]]/[[committed]] with a clear
   * ClassNotFoundException naming kafka-clients.
   *
   * Producer side (executors): `KafkaProducer` with `transactional.id`,
   * idempotence, `acks=all`, byte-array serializers;
   * `initTransactions()` runs in [[open]] — that IS the fencing handshake
   * [[TxnProducerFactory.open]] requires. Consumer side: `KafkaConsumer`
-  * pinned `isolation.level=read_committed` scanning the marker topic
-  * INCREMENTALLY from a JVM-wide offset watermark (each marker is read
-  * once per JVM, not once per epoch) — aborted markers are invisible, so
-  * the returned set contains exactly the partitions whose epoch
-  * transaction committed.
+  * pinned `isolation.level=read_committed` scanning one marker-topic
+  * partition INCREMENTALLY from a JVM-wide offset watermark (each marker is
+  * read once per JVM, not once per epoch) — aborted markers are invisible,
+  * so a marker is found exactly when its epoch transaction committed.
   *
   * `clientOptions` uses the same `kafka.`-prefixed convention as the rest of
   * `ValidationJob` (e.g. `kafka.compression.type`), so the SASL_SSL and
@@ -108,19 +107,11 @@ final case class KafkaTxnProducerFactory(
     }
   }
 
-  override def committedPartitions(markerTopic: String, txnIdBase: String,
-      epochId: Long): Set[Int] =
-    scanMarkers(markerTopic, txnIdBase, epochId, None)
-
-  /** The authoritative post-fence check: scan ONLY the marker-topic
-    * partition this pid's marker was routed to — the one partition whose
-    * LSO the caller's open() has just cleared of unresolved transactions. */
-  override def committed(markerTopic: String, txnIdBase: String,
-      epochId: Long, partitionId: Int): Boolean =
-    scanMarkers(markerTopic, txnIdBase, epochId, Some(partitionId))
-      .contains(partitionId)
-
-  /** Scan marker partitions INCREMENTALLY: a JVM-wide watermark cache per
+  /** The post-fence check: scan ONLY the marker-topic partition this pid's
+    * marker was routed to — the one partition whose LSO the caller's open()
+    * has just cleared of unresolved transactions.
+    *
+    * The scan is INCREMENTAL: a JVM-wide watermark cache per
     * (cluster, topic, partition) remembers the next offset to read and
     * every marker key seen, so a long-lived job reads each marker exactly
     * once per JVM instead of re-reading the whole retention window on every
@@ -136,8 +127,8 @@ final case class KafkaTxnProducerFactory(
     * cache self-heals rather than answering from the pruned (empty) view —
     * [[MarkerScanCache.ensureAnswerable]] resets the watermark to 0 and the
     * scan re-reads the partition from the beginning. */
-  private def scanMarkers(markerTopic: String, txnIdBase: String,
-      epochId: Long, onlyPartition: Option[Int]): Set[Int] = {
+  override def committed(markerTopic: String, txnIdBase: String,
+      epochId: Long, partitionId: Int): Boolean = {
     val props = new java.util.Properties()
     props.put("bootstrap.servers", bootstrapServers)
     props.put("key.deserializer",
@@ -159,7 +150,7 @@ final case class KafkaTxnProducerFactory(
     try {
       val infos = cls.getMethod("partitionsFor", classOf[String])
         .invoke(consumer, markerTopic).asInstanceOf[java.util.List[AnyRef]]
-      if (infos == null || infos.isEmpty) return Set.empty // topic not created yet
+      if (infos == null || infos.isEmpty) return false // topic not created yet
       val tpCls = Class.forName("org.apache.kafka.common.TopicPartition")
       val tpCtor = tpCls.getConstructor(classOf[String], classOf[Int])
       val assignM = cls.getMethod("assign", classOf[java.util.Collection[_]])
@@ -167,74 +158,62 @@ final case class KafkaTxnProducerFactory(
       val endOffsetsM = cls.getMethod("endOffsets", classOf[java.util.Collection[_]])
       val positionM = cls.getMethod("position", tpCls)
       val pollM = cls.getMethod("poll", classOf[java.time.Duration])
-      // single-partition mode clamps exactly like the producer's routing,
-      // so check and send always agree on the marker's home partition
-      val wanted = onlyPartition.map(p => p % infos.size)
-      val pids = scala.collection.mutable.ArrayBuffer.empty[Int]
-      infos.forEach { info =>
-        val p = info.getClass.getMethod("partition").invoke(info)
-          .asInstanceOf[Integer].intValue()
-        if (wanted.forall(_ == p)) pids += p
-      }
-      val found = scala.collection.mutable.Set.empty[Int]
-      pids.foreach { pid =>
-        val cacheKey = s"$bootstrapServers|$markerTopic|$pid"
-        val tp = tpCtor.newInstance(markerTopic, Integer.valueOf(pid))
-          .asInstanceOf[AnyRef]
-        val one = java.util.Collections.singletonList(tp)
-        assignM.invoke(consumer, one)
-        // the cache-choreography (answerability reset, watermark snapshot,
-        // merge, prune, post-validation retry) lives in scanWith — this
-        // closure only reads the broker's [start, end) key range
-        val keys = MarkerScanCache.scanWith(
-            cacheKey, txnIdBase, epochId, replayWindowEpochs) { start =>
-          val end = endOffsetsM.invoke(consumer, one)
-            .asInstanceOf[java.util.Map[AnyRef, java.lang.Long]].get(tp).longValue()
-          val fresh = scala.collection.mutable.Set.empty[String]
-          if (end > start) {
-            seekM.invoke(consumer, tp, java.lang.Long.valueOf(start))
-            // catch-up loop is bounded: a degraded broker connection returns
-            // empty polls forever — fail after MaxEmptyPolls consecutive
-            // STALLED polls so the Spark task retry re-establishes the
-            // consumer instead of spinning indefinitely. "Stalled" means no
-            // records AND no position progress: under read_committed a poll
-            // over an abort-dense segment legitimately returns zero records
-            // while the position leaps past the aborted batches, and such a
-            // scan is healthy — only a poll that moves nothing counts.
-            var emptyPolls = 0
-            var lastPos = positionM.invoke(consumer, tp)
-              .asInstanceOf[java.lang.Long].longValue()
-            while (lastPos < end) {
-              val records = pollM.invoke(consumer, java.time.Duration.ofMillis(500))
-                .asInstanceOf[java.lang.Iterable[AnyRef]]
-              var any = false
-              records.forEach { rec =>
-                any = true
-                val key = rec.getClass.getMethod("key").invoke(rec)
-                  .asInstanceOf[Array[Byte]]
-                if (key != null)
-                  fresh += new String(key, java.nio.charset.StandardCharsets.UTF_8)
-              }
-              val pos = positionM.invoke(consumer, tp)
-                .asInstanceOf[java.lang.Long].longValue()
-              emptyPolls = if (any || pos > lastPos) 0 else emptyPolls + 1
-              lastPos = pos
-              if (emptyPolls >= KafkaTxnProducerFactory.MaxEmptyPolls)
-                throw new IllegalStateException(
-                  s"marker scan stalled: $cacheKey returned " +
-                    s"${KafkaTxnProducerFactory.MaxEmptyPolls} consecutive empty " +
-                    s"polls with no position progress before reaching end " +
-                    s"offset $end")
+      // clamp exactly like the producer's routing, so check and send
+      // always agree on the marker's home partition
+      val home = partitionId % infos.size
+      val cacheKey = s"$bootstrapServers|$markerTopic|$home"
+      val tp = tpCtor.newInstance(markerTopic, Integer.valueOf(home))
+        .asInstanceOf[AnyRef]
+      val one = java.util.Collections.singletonList(tp)
+      assignM.invoke(consumer, one)
+      // the cache-choreography (answerability reset, watermark snapshot,
+      // merge, prune, post-validation retry) lives in scanWith — this
+      // closure only reads the broker's [start, end) key range
+      val keys = MarkerScanCache.scanWith(
+          cacheKey, txnIdBase, epochId, replayWindowEpochs) { start =>
+        val end = endOffsetsM.invoke(consumer, one)
+          .asInstanceOf[java.util.Map[AnyRef, java.lang.Long]].get(tp).longValue()
+        val fresh = scala.collection.mutable.Set.empty[String]
+        if (end > start) {
+          seekM.invoke(consumer, tp, java.lang.Long.valueOf(start))
+          // catch-up loop is bounded: a degraded broker connection returns
+          // empty polls forever — fail after MaxEmptyPolls consecutive
+          // STALLED polls so the Spark task retry re-establishes the
+          // consumer instead of spinning indefinitely. "Stalled" means no
+          // records AND no position progress: under read_committed a poll
+          // over an abort-dense segment legitimately returns zero records
+          // while the position leaps past the aborted batches, and such a
+          // scan is healthy — only a poll that moves nothing counts.
+          var emptyPolls = 0
+          var lastPos = positionM.invoke(consumer, tp)
+            .asInstanceOf[java.lang.Long].longValue()
+          while (lastPos < end) {
+            val records = pollM.invoke(consumer, java.time.Duration.ofMillis(500))
+              .asInstanceOf[java.lang.Iterable[AnyRef]]
+            var any = false
+            records.forEach { rec =>
+              any = true
+              val key = rec.getClass.getMethod("key").invoke(rec)
+                .asInstanceOf[Array[Byte]]
+              if (key != null)
+                fresh += new String(key, java.nio.charset.StandardCharsets.UTF_8)
             }
+            val pos = positionM.invoke(consumer, tp)
+              .asInstanceOf[java.lang.Long].longValue()
+            emptyPolls = if (any || pos > lastPos) 0 else emptyPolls + 1
+            lastPos = pos
+            if (emptyPolls >= KafkaTxnProducerFactory.MaxEmptyPolls)
+              throw new IllegalStateException(
+                s"marker scan stalled: $cacheKey returned " +
+                  s"${KafkaTxnProducerFactory.MaxEmptyPolls} consecutive empty " +
+                  s"polls with no position progress before reaching end " +
+                  s"offset $end")
           }
-          (end, fresh.toSet)
         }
-        keys.foreach { k =>
-          TransactionalEpochSink.parseMarker(k, txnIdBase, epochId)
-            .foreach(found += _)
-        }
+        (end, fresh.toSet)
       }
-      found.toSet
+      keys.exists(TransactionalEpochSink.parseMarker(_, txnIdBase, epochId)
+        .contains(partitionId))
     } finally {
       cls.getMethod("close").invoke(consumer)
     }
@@ -257,7 +236,7 @@ object KafkaTxnProducerFactory {
     * lets the Spark task retry rebuild the consumer. */
   val MaxEmptyPolls: Int = 60
 
-  /** JVM-WIDE incremental-scan watermarks for `scanMarkers` (companion, not
+  /** JVM-WIDE incremental-scan watermarks for [[committed]] (companion, not
     * instance-nested: factories deserialize fresh into every task closure,
     * so per-instance state would never be shared): per (cluster, topic,
     * partition), the next offset to read and every marker key seen so far.

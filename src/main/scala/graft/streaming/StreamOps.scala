@@ -588,16 +588,43 @@ object StreamOps {
       watermarkDelay: String = "1 hour"): DataFrame = {
     graft.corpus.TextDedup.requireVocabMode(refGrams, hashGrams,
       "scrubSpansAgainst")
-    val base = docs.withWatermark("ts", watermarkDelay)
+    val base = spanTokenized(docs, watermarkDelay)
+    val toks = transform(col("ws"),
+      (tok, i) => struct((i + 1).as("tp"), tok.as("tok")))
+    val kept = filter(toks, s => !exists(col("hits"),
+      p => s("tp") >= p && s("tp") <= p + lit(spanTokens - 1)))
+    spanHits(base, refGrams, spanTokens, hashGrams)
+      .select(col("doc_id"), col("ts"),
+        array_join(transform(kept, s => s("tok")), " ").as("scrubbed"),
+        size(col("ws")).cast("long").as("n_tokens"),
+        (size(col("ws")) - size(kept)).cast("long").as("n_removed"))
+      .unionByName(spanlessUntouched(base, spanTokens))
+  }
+
+  /** The span twins' input: `(doc_id, ts, ws)` under the event-time
+    * watermark, `ws` the text's space-split tokens (NULL for NULL text). */
+  private def spanTokenized(docs: DataFrame, watermarkDelay: String): DataFrame =
+    docs.withWatermark("ts", watermarkDelay)
       .select(col("doc_id"), col("ts"), split(col("text"), " ").as("ws"))
-    // size(NULL ws) is NULL: coalesce so NULL-text docs route to the
-    // stateless branch rather than vanishing from both
-    val gramful = coalesce(size(col("ws")) >= spanTokens, lit(false))
-    val spanless = base.filter(!gramful).select(col("doc_id"), col("ts"),
-      when(col("ws").isNotNull, array_join(col("ws"), " ")).as("scrubbed"),
-      size(col("ws")).cast("long").as("n_tokens"),
-      when(col("ws").isNotNull, lit(0L)).as("n_removed"))
-    val grams = base.filter(gramful)
+
+  /** Has the document at least one `spanTokens` window? `size(NULL ws)` is
+    * NULL: coalesce so NULL-text docs land on the span-less side rather
+    * than vanishing from both (and `spanGrams`' sequence needs the
+    * pre-filter — its default step walks DOWNWARD when stop < start). */
+  private def hasWindow(spanTokens: Int) =
+    coalesce(size(col("ws")) >= spanTokens, lit(false))
+
+  /** The span twins' gram-hit step over [[spanTokenized]] rows: explode
+    * each windowed document's positional grams (the SHARED
+    * `TextDedup.spanGrams` definition), stream-static LEFT join the
+    * vocabulary for per-occurrence hit flags, and ONE watermarked
+    * aggregation per (doc_id, ts) collecting the SORTED matched start
+    * positions as `hits`. The token array rides only the pos-1 gram row
+    * (`first(ignoreNulls)`), so state carries O(tokens), not
+    * O(tokens × grams). Emits `(doc_id, ts, ws, hits)`. */
+  private def spanHits(base: DataFrame, refGrams: DataFrame,
+      spanTokens: Int, hashGrams: Boolean): DataFrame =
+    base.filter(hasWindow(spanTokens))
       .select(col("doc_id"), col("ts"), col("ws"),
         posexplode(graft.corpus.TextDedup.spanGrams(col("ws"), spanTokens))
           .as(Seq("i0", "g")))
@@ -605,21 +632,34 @@ object StreamOps {
         when(col("i0") === 0, col("ws")).as("ws1"),
         (col("i0") + 1).as("pos"),
         (if (hashGrams) xxhash64(col("g")) else col("g")).as("g"))
-    val starts = grams
       .join(refGrams.select(col("g"), lit(true).as("__hit")), Seq("g"), "left")
       .groupBy(col("doc_id"), col("ts"))
       .agg(first(col("ws1"), ignoreNulls = true).as("ws"),
-        collect_set(when(col("__hit"), col("pos"))).as("hit_starts"))
-    val toks = transform(col("ws"),
-      (tok, i) => struct((i + 1).as("tp"), tok.as("tok")))
-    val kept = filter(toks, s => !exists(col("hit_starts"),
-      p => s("tp") >= p && s("tp") <= p + lit(spanTokens - 1)))
-    starts.select(col("doc_id"), col("ts"),
-        array_join(transform(kept, s => s("tok")), " ").as("scrubbed"),
-        size(col("ws")).cast("long").as("n_tokens"),
-        (size(col("ws")) - size(kept)).cast("long").as("n_removed"))
-      .unionByName(spanless)
-  }
+        sort_array(collect_set(when(col("__hit"), col("pos")))).as("hits"))
+
+  /** The span scrubs' STATELESS branch: documents with no window (shorter
+    * than one span, NULL text) emit same-trigger and untouched, in the
+    * scrub output shape — NULL text gives NULL outputs, the batch
+    * conventions. */
+  private def spanlessUntouched(base: DataFrame, spanTokens: Int): DataFrame =
+    base.filter(!hasWindow(spanTokens)).select(col("doc_id"), col("ts"),
+      when(col("ws").isNotNull, array_join(col("ws"), " ")).as("scrubbed"),
+      size(col("ws")).cast("long").as("n_tokens"),
+      when(col("ws").isNotNull, lit(0L)).as("n_removed"))
+
+  /** The islands fold over the sorted `hits` column: the hit starts fold
+    * left into maximal consecutive runs `struct(s, e)` (a start one past
+    * the open run's end extends it, any other opens a new one — O(hits)
+    * per document), and only runs covering ≥ `minTokens` tokens
+    * (`e - s + spanTokens`) are kept. */
+  private def qualifyingRuns(spanTokens: Int, minTokens: Int) =
+    filter(expr(
+      "aggregate(hits, cast(array() as array<struct<s:int,e:int>>)," +
+        " (acc, p) -> if (size(acc) > 0 and element_at(acc, -1).e + 1 = p," +
+        " concat(slice(acc, 1, size(acc) - 1)," +
+        "   array(named_struct('s', element_at(acc, -1).s, 'e', p)))," +
+        " concat(acc, array(named_struct('s', p, 'e', p)))))"),
+      r => r.getField("e") - r.getField("s") + lit(spanTokens) >= minTokens)
 
   /** Streaming incremental line scrub —
     * [[graft.corpus.TextDedup.lineScrubAgainst]]'s ingest twin (x109):
@@ -704,48 +744,18 @@ object StreamOps {
     require(minTokens >= spanTokens,
       s"minTokens ($minTokens) below the window width ($spanTokens) cannot" +
         " gate anything — every matched window covers spanTokens tokens")
-    val base = docs.withWatermark("ts", watermarkDelay)
-      .select(col("doc_id"), col("ts"), split(col("text"), " ").as("ws"))
-    // size(NULL ws) is NULL: coalesce so NULL-text docs route to the
-    // stateless branch rather than vanishing from both
-    val gramful = coalesce(size(col("ws")) >= spanTokens, lit(false))
-    val spanless = base.filter(!gramful).select(col("doc_id"), col("ts"),
-      when(col("ws").isNotNull, array_join(col("ws"), " ")).as("scrubbed"),
-      size(col("ws")).cast("long").as("n_tokens"),
-      when(col("ws").isNotNull, lit(0L)).as("n_removed"))
-    val grams = base.filter(gramful)
-      .select(col("doc_id"), col("ts"), col("ws"),
-        posexplode(graft.corpus.TextDedup.spanGrams(col("ws"), spanTokens))
-          .as(Seq("i0", "g")))
-      .select(col("doc_id"), col("ts"),
-        when(col("i0") === 0, col("ws")).as("ws1"),
-        (col("i0") + 1).as("pos"),
-        (if (hashGrams) xxhash64(col("g")) else col("g")).as("g"))
-    val hits = grams
-      .join(refGrams.select(col("g"), lit(true).as("__hit")), Seq("g"), "left")
-      .groupBy(col("doc_id"), col("ts"))
-      .agg(first(col("ws1"), ignoreNulls = true).as("ws"),
-        sort_array(collect_set(when(col("__hit"), col("pos")))).as("hits"))
-    // the islands fold (shared shape with duplicatedSpansAgainst):
-    // consecutive starts extend the open run
-    val runs = expr(
-      "aggregate(hits, cast(array() as array<struct<s:int,e:int>>)," +
-        " (acc, p) -> if (size(acc) > 0 and element_at(acc, -1).e + 1 = p," +
-        " concat(slice(acc, 1, size(acc) - 1)," +
-        "   array(named_struct('s', element_at(acc, -1).s, 'e', p)))," +
-        " concat(acc, array(named_struct('s', p, 'e', p)))))")
-    val qruns = filter(runs,
-      r => r.getField("e") - r.getField("s") + lit(spanTokens) >= minTokens)
+    val base = spanTokenized(docs, watermarkDelay)
     val toks = transform(col("ws"),
       (tok, i) => struct((i + 1).as("tp"), tok.as("tok")))
     val kept = filter(toks, t => !exists(col("qr"),
       r => t("tp") >= r("s") && t("tp") <= r("e") + lit(spanTokens - 1)))
-    hits.withColumn("qr", qruns)
+    spanHits(base, refGrams, spanTokens, hashGrams)
+      .withColumn("qr", qualifyingRuns(spanTokens, minTokens))
       .select(col("doc_id"), col("ts"),
         array_join(transform(kept, s => s("tok")), " ").as("scrubbed"),
         size(col("ws")).cast("long").as("n_tokens"),
         (size(col("ws")) - size(kept)).cast("long").as("n_removed"))
-      .unionByName(spanless)
+      .unionByName(spanlessUntouched(base, spanTokens))
   }
 
   /** Streaming increment exact-substring spans —
@@ -779,36 +789,11 @@ object StreamOps {
     require(minTokens >= spanTokens,
       s"minTokens ($minTokens) below the window width ($spanTokens) cannot" +
         " be reported — every detected span covers at least one window")
-    val base = docs.withWatermark("ts", watermarkDelay)
-      .select(col("doc_id"), col("ts"), split(col("text"), " ").as("ws"))
-      // span-less / NULL-text docs carry no windows: absent by contract
-      // (coalesce: size(NULL) is NULL, and spanGrams' sequence needs the
-      // pre-filter — its default step walks DOWNWARD when stop < start)
-      .filter(coalesce(size(col("ws")) >= spanTokens, lit(false)))
-    val grams = base
-      .select(col("doc_id"), col("ts"), col("ws"),
-        posexplode(graft.corpus.TextDedup.spanGrams(col("ws"), spanTokens))
-          .as(Seq("i0", "g")))
-      .select(col("doc_id"), col("ts"),
-        when(col("i0") === 0, col("ws")).as("ws1"),
-        (col("i0") + 1).as("pos"),
-        (if (hashGrams) xxhash64(col("g")) else col("g")).as("g"))
-    val hits = grams
-      .join(refGrams.select(col("g"), lit(true).as("__hit")), Seq("g"), "left")
-      .groupBy(col("doc_id"), col("ts"))
-      .agg(first(col("ws1"), ignoreNulls = true).as("ws"),
-        sort_array(collect_set(when(col("__hit"), col("pos")))).as("hits"))
-    // the islands fold: consecutive starts extend the open run
-    val runs = expr(
-      "aggregate(hits, cast(array() as array<struct<s:int,e:int>>)," +
-        " (acc, p) -> if (size(acc) > 0 and element_at(acc, -1).e + 1 = p," +
-        " concat(slice(acc, 1, size(acc) - 1)," +
-        "   array(named_struct('s', element_at(acc, -1).s, 'e', p)))," +
-        " concat(acc, array(named_struct('s', p, 'e', p)))))")
+    // span-less / NULL-text docs carry no windows: absent by contract
     val span = col("r.e") - col("r.s") + lit(spanTokens)
-    hits.withColumn("r", explode(filter(runs,
-        r => r.getField("e") - r.getField("s") + lit(spanTokens) >=
-          minTokens)))
+    spanHits(spanTokenized(docs, watermarkDelay), refGrams, spanTokens,
+        hashGrams)
+      .withColumn("r", explode(qualifyingRuns(spanTokens, minTokens)))
       .select(col("doc_id"), col("ts"),
         col("r.s").cast("long").as("start_pos"),
         span.cast("long").as("n_span_tokens"),

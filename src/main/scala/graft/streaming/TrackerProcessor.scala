@@ -82,7 +82,7 @@ object TrackerProcessor {
     * makes every trigger tick runnable (timers may be due), and EVERY tick
     * commits every state partition's RocksDB store — at the data plane's
     * width (32) those idle-tick commits measurably drain the record query
-    * (StreamBench chunked throughput 2.6× worse). [[controlPlaneSession]]
+    * (chunked record throughput measured 2.6× worse). [[controlPlaneSession]]
     * also turns on RocksDB changelog checkpointing, so a tick writes one
     * small changelog instead of uploading a snapshot zip and its SST files.
     *

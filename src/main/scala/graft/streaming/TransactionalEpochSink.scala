@@ -36,24 +36,15 @@ trait TxnProducerFactory extends Serializable {
     * task-retry race safe: whichever attempt opened LAST owns the id. */
   def open(transactionalId: String): TxnProducer
 
-  /** Driver-side read-committed scan of `markerTopic`: the set of task
-    * partition ids whose `(txnIdBase, epochId)` commit marker is visible —
-    * i.e. whose transaction COMMITTED in a previous attempt of this epoch.
-    * A PREFILTER only — it may be stale (see the LSO note on
-    * [[TransactionalEpochSink]]); the correctness check is [[committed]],
-    * run in-task after the fencing point. */
-  def committedPartitions(markerTopic: String, txnIdBase: String,
-      epochId: Long): Set[Int]
-
-  /** Authoritative single-partition check, run on the EXECUTOR after
-    * [[open]] has fenced every earlier writer of this partition's
-    * transactional id: is `(txnIdBase, epochId, partitionId)`'s marker
-    * committed? Implementations scan ONLY the marker-topic partition the
-    * marker was routed to, where fencing has already resolved every
-    * in-flight transaction that could hide it. */
+  /** The commit check, run on the EXECUTOR after [[open]] has fenced every
+    * earlier writer of this partition's transactional id: is
+    * `(txnIdBase, epochId, partitionId)`'s marker committed, i.e. did a
+    * previous attempt of this epoch's partition COMMIT? Implementations
+    * scan ONLY the marker-topic partition the marker was routed to, where
+    * fencing has already resolved every in-flight transaction that could
+    * hide it. */
   def committed(markerTopic: String, txnIdBase: String, epochId: Long,
-      partitionId: Int): Boolean =
-    committedPartitions(markerTopic, txnIdBase, epochId).contains(partitionId)
+      partitionId: Int): Boolean
 }
 
 /** Exactly-once Kafka DATA sink — SURVEY §7.6 option (c), the equivalent of
@@ -75,18 +66,13 @@ trait TxnProducerFactory extends Serializable {
   *     to marker-topic PARTITION `partitionId` — see the LSO note) are sent
   *     in ONE transaction. Marker and data commit atomically — there is no
   *     window where data is committed but the marker is missing.
-  *  3. On entry, the driver scans `markerTopic` read-committed as a cheap
-  *     PREFILTER: partitions whose marker is already visible committed in a
-  *     previous attempt and are skipped without launching work.
-  *  4. In the task, AFTER opening the transactional id (the fencing point),
-  *     the authoritative [[TxnProducerFactory.committed]] check runs: if
-  *     this partition's marker is committed, the task closes and writes
-  *     nothing. This is what makes intra-epoch task retries and SPECULATIVE
-  *     duplicate attempts safe — the driver prefilter is computed once and
-  *     cannot see a commit that happens mid-epoch, but the in-task check is
-  *     linearized by the broker: by the time our open() returns, every
-  *     earlier same-id writer has either committed (marker visible) or been
-  *     fenced and aborted (we rewrite).
+  *  3. In the task, AFTER opening the transactional id (the fencing point),
+  *     the [[TxnProducerFactory.committed]] check runs: if this partition's
+  *     marker is committed, the task closes and writes nothing. This is what
+  *     makes epoch replays, intra-epoch task retries and SPECULATIVE
+  *     duplicate attempts safe — the check is linearized by the broker: by
+  *     the time our open() returns, every earlier same-id writer has either
+  *     committed (marker visible) or been fenced and aborted (we rewrite).
   *
   * Net effect: every row is visible to a read-committed consumer exactly
   * once — across epoch replays, task retries, and speculation. (Epoch-keyed
@@ -102,14 +88,13 @@ trait TxnProducerFactory extends Serializable {
   * `transaction.timeout.ms`) would hide OTHER partitions' already-committed
   * markers from the replay scan — and they would duplicate. Routing marker
   * `p` to marker-topic partition `p` confines the pinning to same-`p`
-  * writers, which the fencing in step 4 fully serializes: after open(),
+  * writers, which the fencing in step 3 fully serializes: after open(),
   * partition `p`'s marker partition has no unresolved transactions left.
   * Provision the marker topic with at least the sink's max task parallelism
   * in partitions; implementations clamp by modulo when it has fewer, which
-  * weakens the per-partition argument to per-residue-class (the driver
-  * prefilter may then be stale longer, but the in-task check still decides
-  * after its own residue class is fenced — correctness degrades only if a
-  * DIFFERENT pid in the same class holds a transaction open across this
+  * weakens the per-partition argument to per-residue-class (the check still
+  * decides after its own residue class is fenced — correctness degrades only
+  * if a DIFFERENT pid in the same class holds a transaction open across this
   * task's check, which epoch-ordered replay makes transient).
   *
   * Determinism assumption (same as the reference's checkpoint replay): a
@@ -122,8 +107,6 @@ trait TxnProducerFactory extends Serializable {
   * are unique, so compaction cannot reclaim them — bound the topic with
   * `retention.ms` instead, set comfortably above the longest conceivable
   * replay horizon (the job's own state TTL, 7 d, is a natural ceiling).
-  * The per-epoch driver scan is then bounded by
-  * partitions × epochs-in-retention, KB-scale traffic against the brokers.
   *
   * The COUNTS side output deliberately stays on the journal handoff
   * (§7.6 option b, `ValidationJob.countsHandoff`): it feeds the in-job
@@ -170,51 +153,48 @@ object TransactionalEpochSink {
     * Call from `foreachBatch` with the epoch id Spark hands over. */
   def write(df: DataFrame, topic: String, markerTopic: String,
       txnIdBase: String, epochId: Long, factory: TxnProducerFactory): Unit = {
-    val done = factory.committedPartitions(markerTopic, txnIdBase, epochId)
     df.select(col("key"), col("value"), col("headers"))
       .foreachPartition { (it: Iterator[Row]) =>
         // an empty partition publishes nothing, so replaying it is already
         // idempotent — skip the producer round-trip AND the marker
         if (it.hasNext) {
           val pid = TaskContext.get().partitionId()
-          if (!done.contains(pid)) {
-            // open FIRST (the fencing point), THEN run the authoritative
-            // committed check: a concurrent or earlier attempt of this very
-            // partition has, by now, either committed (marker visible) or
-            // been fenced (can never commit) — the driver prefilter alone
-            // would re-publish after an intra-epoch task retry/speculation
-            val p = factory.open(transactionalId(txnIdBase, epochId, pid))
-            var committed =
-              try factory.committed(markerTopic, txnIdBase, epochId, pid)
-              catch { case t: Throwable => p.close(); throw t }
-            if (committed) p.close()
-            else try {
-              p.begin()
-              it.foreach { r =>
-                // null ELEMENTS inside the headers array are skipped, not
-                // NPE'd on: the schema allows containsNull, and deterministic
-                // replay would re-poison the epoch on every retry otherwise
-                val headers: Seq[(String, Array[Byte])] =
-                  if (r.isNullAt(2)) Nil
-                  else r.getSeq[Row](2).filter(_ != null).map(h =>
-                    (h.getString(0), h.getAs[Array[Byte]](1)))
-                p.send(topic, None, r.getAs[Array[Byte]](0),
-                  r.getAs[Array[Byte]](1), headers)
-              }
-              p.send(markerTopic, Some(pid),
-                markerKey(txnIdBase, epochId, pid)
-                  .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                Array.emptyByteArray, Nil)
-              p.commit()
-              committed = true
-            } finally {
-              if (!committed) {
-                // surface the ORIGINAL failure, not a secondary abort error
-                // (an already-fenced handle aborts with an exception too)
-                try p.abort() catch { case _: Throwable => () }
-              }
-              try p.close() catch { case _: Throwable => () }
+          // open FIRST (the fencing point), THEN run the committed check: a
+          // concurrent or earlier attempt of this very partition has, by
+          // now, either committed (marker visible) or been fenced (can never
+          // commit) — a check before the fence could miss a commit that
+          // lands mid-epoch (task retry, speculation)
+          val p = factory.open(transactionalId(txnIdBase, epochId, pid))
+          var committed =
+            try factory.committed(markerTopic, txnIdBase, epochId, pid)
+            catch { case t: Throwable => p.close(); throw t }
+          if (committed) p.close()
+          else try {
+            p.begin()
+            it.foreach { r =>
+              // null ELEMENTS inside the headers array are skipped, not
+              // NPE'd on: the schema allows containsNull, and deterministic
+              // replay would re-poison the epoch on every retry otherwise
+              val headers: Seq[(String, Array[Byte])] =
+                if (r.isNullAt(2)) Nil
+                else r.getSeq[Row](2).filter(_ != null).map(h =>
+                  (h.getString(0), h.getAs[Array[Byte]](1)))
+              p.send(topic, None, r.getAs[Array[Byte]](0),
+                r.getAs[Array[Byte]](1), headers)
             }
+            p.send(markerTopic, Some(pid),
+              markerKey(txnIdBase, epochId, pid)
+                .getBytes(java.nio.charset.StandardCharsets.UTF_8),
+              Array.emptyByteArray, Nil)
+            p.commit()
+            committed = true
+          } finally {
+            if (!committed) {
+              // surface the ORIGINAL failure, not a secondary abort error
+              // (an already-fenced handle aborts with an exception too)
+              try p.abort() catch { case _: Throwable => () }
+            }
+            try p.close() catch { case _: Throwable => () }
           }
         }
       }

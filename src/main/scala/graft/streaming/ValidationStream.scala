@@ -135,41 +135,37 @@ object ValidationStream {
       .select(col("n.*"))
       .filter(col("id").isNotNull)
 
-  /** Start the notification-compaction query. `notifications` must be a streaming
-    * DataFrame of raw JSON `value` bytes/strings (Kafka shape). */
+  /** Start the notification-compaction query `graft-notifications`, back to
+    * back (`ProcessingTime(0)`) so control outruns data. `notifications` must
+    * be a streaming DataFrame of raw JSON `value` bytes/strings (Kafka shape). */
   def startNotificationQuery(
       notifications: DataFrame,
       store: NotificationSnapshot,
-      checkpointDir: String,
-      queryName: String = "graft-notifications",
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     parseNotifications(notifications)
       .writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", s"$checkpointDir/$queryName")
-      .trigger(trigger)
+      .queryName("graft-notifications")
+      .option("checkpointLocation", s"$checkpointDir/graft-notifications")
+      .trigger(Trigger.ProcessingTime(0L))
       .foreachBatch { (df: DataFrame, _: Long) => store.update(df) }
       .start()
 
-  /** Start the record-validation query over a streaming DataFrame in
-    * Schemas.hriRecord shape.
+  /** Start the record-validation query `graft-records` over a streaming
+    * DataFrame in Schemas.hriRecord shape.
     *
-    * `trigger` defaults to a 1 s processing-time cadence: the reference
-    * checkpoints every 1 s and commits its exactly-once Kafka transactions
-    * on that checkpoint (BaseValidationJob.scala:361-396), and each epoch
-    * here is likewise one exactly-once transaction. The cadence also fixes
-    * what a trigger's fixed cost (its Spark jobs, the snapshot broadcast,
-    * the miss scan, the sinks' commits) costs per record. Under
-    * `ProcessingTime(0)` the next trigger starts as soon as one finishes,
-    * so a cheaper trigger only makes the loop fire more often: on a 4-core
-    * host at 480 rec/s (perfbench `stream_steady`, seeds 101-103), the
-    * one-job miss scan, the job-free snapshot and the width-1 changelog
-    * tracker without this cadence raised record triggers from 33-39 to
-    * 47-63 per 30 s window and left CPU per record flat (3.13-3.26 →
-    * 2.99-3.15 ms); with it, CPU per record fell by a quarter. Pass
-    * `ProcessingTime(0)` to drain back to back (a backlog replay, a
-    * throughput bench); the notification query keeps that default so
-    * control outruns data. */
+    * It runs on a 1 s processing-time cadence: the reference checkpoints
+    * every 1 s and commits its exactly-once Kafka transactions on that
+    * checkpoint (BaseValidationJob.scala:361-396), and each epoch here is
+    * likewise one exactly-once transaction. The cadence also fixes what a
+    * trigger's fixed cost (its Spark jobs, the snapshot broadcast, the miss
+    * scan, the sinks' commits) costs per record. Under `ProcessingTime(0)`
+    * the next trigger starts as soon as one finishes, so a cheaper trigger
+    * only makes the loop fire more often: on a 4-core host at 480 rec/s
+    * (perfbench `stream_steady`, seeds 101-103), the one-job miss scan, the
+    * job-free snapshot and the width-1 changelog tracker without this
+    * cadence raised record triggers from 33-39 to 47-63 per 30 s window and
+    * left CPU per record flat (3.13-3.26 → 2.99-3.15 ms); with it, CPU per
+    * record fell by a quarter. */
   def startRecordQuery(
       records: DataFrame,
       store: NotificationSnapshot,
@@ -177,13 +173,12 @@ object ValidationStream {
       sinks: ValidationSinks,
       checkpointDir: String,
       lookup: Option[BatchLookup] = None,
-      lookupRetry: Retry = new Retry(initialBackoffMs = 100, giveUpAfterMs = 2000),
-      queryName: String = "graft-records",
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
+      lookupRetry: Retry = new Retry(initialBackoffMs = 100, giveUpAfterMs = 2000)
+      ): StreamingQuery =
     records.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", s"$checkpointDir/$queryName")
-      .trigger(trigger)
+      .queryName("graft-records")
+      .option("checkpointLocation", s"$checkpointDir/graft-records")
+      .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (df: DataFrame, epochId: Long) =>
         val spark = df.sparkSession
         // the micro-batch is scanned twice ONLY on the remote-lookup path

@@ -1,10 +1,10 @@
 package graft.util
 
-/** Locale-proof JSON number formatting, shared by every main that emits a
-  * JSON line (`Bench`, `StreamBench`): default-locale `"%f"` formatting
-  * writes comma decimals on e.g. de_DE JVMs, which is invalid JSON — every
-  * emitter must go through `Locale.ROOT`, and keeping the idiom in ONE
-  * place keeps the outputs from drifting. */
+/** Locale-proof JSON number formatting for the mains that emit a JSON line
+  * (`Bench`): default-locale `"%f"` formatting writes comma decimals on e.g.
+  * de_DE JVMs, which is invalid JSON — every emitter must go through
+  * `Locale.ROOT`, and keeping the idiom in ONE place keeps the outputs from
+  * drifting. */
 object JsonNum {
 
   /** Fixed `decimals` places, `Locale.ROOT`. */

@@ -2,8 +2,8 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local SparkSession every main (`Bench`, `Verify`, the scaling and
-  * recall harnesses, `StreamBench`, `tools.Diagnose`) and the test suite run
+/** The one local SparkSession every main (`Bench`, `Verify`,
+  * `tools.Diagnose`) and the test suite run
   * on, so a diagnosis always sees the plans the bench runs. The deployment
   * entry point, `jobs.ValidationJob.main`, builds its own: `spark-submit`
   * supplies its master.

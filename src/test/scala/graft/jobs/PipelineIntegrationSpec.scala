@@ -123,7 +123,8 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
     // 10 s, not the reference's 3 s: the tracker runs at the job's 1 s
     // cadence and a trigger of it takes 1-2 s on a 4-core host, so
     // TERMINATED reaches it 3-5 s after the timers are armed
-    val (trackerIn, terminal, plane) = trackerPlane(countsDir, completionDelayMs = 10000L)
+    val completionDelayMs = 10000L
+    val (trackerIn, terminal, plane) = trackerPlane(countsDir, completionDelayMs)
     val running = ValidationJob.start(spark, records.toDF(), notifications.toDF(),
       new JsonValidator, sinks, dir, tracker = Some(plane))
     val tracker = running.trackerQuery.get
@@ -143,14 +144,19 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
         Thread.sleep(25)
       }
     }
-    // a tracker trigger that started after this call has finished, so it read
-    // every notification added and every epoch journaled before it (a
-    // processing-time transformWithState query never settles for
-    // processAllAvailable)
-    def trackerTick(): Unit = {
+    def startMs(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Long =
+      java.time.Instant.parse(p.timestamp).toEpochMilli
+    def firstTriggerAfter(ms: Long) =
+      tracker.recentProgress.find(p => startMs(p) > ms)
+    // waits until a tracker trigger that started after this call has
+    // finished, so it read every notification added and every epoch
+    // journaled before it (a processing-time transformWithState query never
+    // settles for processAllAvailable); returns that trigger's end
+    def trackerTick(): Long = {
       val since = System.currentTimeMillis
-      await("a tracker trigger")(tracker.recentProgress.exists(p =>
-        java.time.Instant.parse(p.timestamp).toEpochMilli > since))
+      await("a tracker trigger")(firstTriggerAfter(since).nonEmpty)
+      val p = firstTriggerAfter(since).get
+      startMs(p) + p.durationMs.get("triggerExecution")
     }
     def emitted: List[BatchNotification] = terminal.synchronized(terminal.toList)
     try {
@@ -171,7 +177,9 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
         notifJson("b-ctrl", Status.SendCompleted, 2))
       status("b-term") shouldBe Some(Status.SendCompleted)
       status("b-ctrl") shouldBe Some(Status.SendCompleted)
-      trackerTick()
+      // the timers were armed by the time this trigger ended: it, or one
+      // before it, read SEND_COMPLETED
+      val armedBy = trackerTick()
       // phase 4: TERMINATED lands on b-term well inside its completion delay
       announce(notifJson("b-term", Status.Terminated, 2))
       status("b-term") shouldBe Some(Status.Terminated)
@@ -179,9 +187,13 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec with Matchers {
       emitted shouldBe empty
       // phase 5: b-ctrl's timer fires and emits COMPLETED; b-term's fires in
       // the same trigger but TERMINATED got there first, so its re-check must
-      // emit NOTHING (reference Tracker.scala:93-103)
-      await("b-ctrl COMPLETED emission", 20000)(emitted.exists(n =>
-        n.id == "b-ctrl" && n.status == Status.Completed))
+      // emit NOTHING (reference Tracker.scala:93-103). Any trigger that
+      // started a full completion delay after the arming has fired both
+      // timers, however slow the triggers run; the deadline only guards
+      // against a hung tracker
+      await("a tracker trigger past the completion delay", 60000)(
+        firstTriggerAfter(armedBy + completionDelayMs).nonEmpty)
+      emitted.exists(n => n.id == "b-ctrl" && n.status == Status.Completed) shouldBe true
       trackerTick()
       emitted should have size 1
       emitted.head.actualRecordCount shouldBe 2

@@ -51,10 +51,10 @@ final case class CrashAfterPartialCommit(brokerId: String, markerTopic: String,
     broker.open(transactionalId)
   }
 
-  override def committedPartitions(markerTopic: String, txnIdBase: String,
-      epochId: Long): Set[Int] =
-    broker.committedKeys(markerTopic)
-      .flatMap(TransactionalEpochSink.parseMarker(_, txnIdBase, epochId)).toSet
+  override def committed(markerTopic: String, txnIdBase: String,
+      epochId: Long, partitionId: Int): Boolean =
+    InMemoryTxnFactory(brokerId).committed(markerTopic, txnIdBase, epochId,
+      partitionId)
 }
 
 /** The seam no other spec drives end to end: Spark's OWN checkpoint/replay

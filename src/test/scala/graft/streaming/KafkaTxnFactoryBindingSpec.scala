@@ -67,15 +67,15 @@ class KafkaTxnFactoryBindingSpec extends AnyFunSuite with SparkSpec with Matcher
         Array.emptyByteArray, Nil)
       p.commit(); p.close()
     }
+    def committed(epoch: Long): Seq[Int] =
+      (0 until 4).filter(f.committed("markers", "base", epoch, _))
     writeMarker(1L, 0); writeMarker(1L, 2)
-    f.committedPartitions("markers", "base", 1L) shouldBe Set(0, 2)
-    f.committed("markers", "base", 1L, 0) shouldBe true
-    f.committed("markers", "base", 1L, 1) shouldBe false
+    committed(1L) shouldBe Seq(0, 2)
     val polledAfterFirst = cluster.recordsPolled
     // new epoch's marker lands; re-scans must read ONLY the new record
     writeMarker(2L, 1)
-    f.committedPartitions("markers", "base", 2L) shouldBe Set(1)
-    f.committedPartitions("markers", "base", 1L) shouldBe Set(0, 2)
+    committed(2L) shouldBe Seq(1)
+    committed(1L) shouldBe Seq(0, 2)
     (cluster.recordsPolled - polledAfterFirst) shouldBe 1L
   }
 
@@ -91,8 +91,8 @@ class KafkaTxnFactoryBindingSpec extends AnyFunSuite with SparkSpec with Matcher
     TransactionalEpochSink.write(df, "out", "markers", "job", 5L, f)
     cluster.committedValues("out").sorted shouldBe
       (0 until 8).map(i => s"v$i").sorted
-    // replay: the driver prefilter (or the in-task post-fence check) skips
-    // every committed partition — no duplicates through the real factory
+    // replay: the in-task post-fence check skips every committed
+    // partition — no duplicates through the real factory
     TransactionalEpochSink.write(df, "out", "markers", "job", 5L, f)
     cluster.committedValues("out").sorted shouldBe
       (0 until 8).map(i => s"v$i").sorted
@@ -112,24 +112,29 @@ class KafkaTxnFactoryBindingSpec extends AnyFunSuite with SparkSpec with Matcher
         Array.emptyByteArray, Nil)
       p.commit(); p.close()
     }
+    // both bases' markers share marker partition 0, so jobA's scans prune
+    // the very cache entry that holds jobB's key
     writeMarker("jobA", 1L, 0)
-    writeMarker("jobB", 1L, 1)
-    f.committedPartitions("markers", "jobA", 1L) shouldBe Set(0)
+    writeMarker("jobB", 1L, 0)
+    f.committed("markers", "jobA", 1L, 0) shouldBe true
     // a scan far ahead of the horizon prunes jobA's epoch-1 key from the
     // JVM cache (the topic itself is untouched — this models broker
     // retention outliving the cache's usefulness)
-    f.committedPartitions("markers", "jobA", 100L) shouldBe Set.empty
+    f.committed("markers", "jobA", 100L, 0) shouldBe false
+    // jobB's keys share the partition but belong to a different base —
+    // jobA's pruning must never touch them (epoch counters aren't
+    // comparable): the cache alone still answers for jobB
+    val polledAfterPrune = cluster.recordsPolled
+    f.committed("markers", "jobB", 1L, 0) shouldBe true
+    cluster.recordsPolled shouldBe polledAfterPrune
     // a query BELOW the pruned horizon (a checkpoint rollback deeper than
     // the replay window) self-heals: the cache resets and the scan re-reads
     // the partition from offset 0 instead of answering from the pruned view
     // — which would report "nothing committed" and re-commit epoch 1
-    val polledBefore = cluster.recordsPolled
-    f.committedPartitions("markers", "jobA", 1L) shouldBe Set(0)
-    cluster.recordsPolled should be > polledBefore // re-read, not cache-answered
-    // jobB's keys share the topic but belong to a different base — jobA's
-    // pruning must never touch them (epoch counters aren't comparable), and
-    // the self-healing rescan repopulates them too
-    f.committedPartitions("markers", "jobB", 1L) shouldBe Set(1)
+    f.committed("markers", "jobA", 1L, 0) shouldBe true
+    cluster.recordsPolled should be > polledAfterPrune // re-read, not cache-answered
+    // and the self-healing rescan repopulates the other base's keys too
+    f.committed("markers", "jobB", 1L, 0) shouldBe true
   }
 
   test("a stalled broker connection fails the scan instead of spinning forever") {
@@ -143,12 +148,12 @@ class KafkaTxnFactoryBindingSpec extends AnyFunSuite with SparkSpec with Matcher
     p.commit(); p.close()
     cluster.stallPolls = true
     val ex = intercept[IllegalStateException] {
-      f.committedPartitions("markers", "base", 1L)
+      f.committed("markers", "base", 1L, 0)
     }
     ex.getMessage should include("consecutive empty")
     // once the connection recovers, a task retry's fresh scan succeeds
     cluster.stallPolls = false
-    f.committedPartitions("markers", "base", 1L) shouldBe Set(0)
+    f.committed("markers", "base", 1L, 0) shouldBe true
   }
 
   test("abort-dense segments never trip the stall guard: empty polls that advance the position are healthy") {
@@ -165,7 +170,7 @@ class KafkaTxnFactoryBindingSpec extends AnyFunSuite with SparkSpec with Matcher
     // advances one offset per poll — a healthy scan that the guard must
     // wait out, not kill (only no-records AND no-progress polls count)
     cluster.abortedTailOffsets = KafkaTxnProducerFactory.MaxEmptyPolls + 10L
-    f.committedPartitions("markers", "base", 1L) shouldBe Set(0)
+    f.committed("markers", "base", 1L, 0) shouldBe true
   }
 
   test("SASL options flow into producer props stripped of the kafka. prefix") {

@@ -85,13 +85,12 @@ class TransactionalEpochSinkSpec extends AnyFunSuite with SparkSpec with Matcher
     val (id, broker) = freshBroker("stale")
     TransactionalEpochSink.write(batch(), Topic, Markers, "base", 6L,
       InMemoryTxnFactory(id))
-    // a retried or speculative task runs with the DRIVER's prefilter already
-    // stale (it was computed before this partition committed). Simulate:
-    // prefilter reports nothing committed, so every task falls through to
-    // the authoritative in-task committed() check after its open() — which
-    // must skip, or the retry re-publishes a committed partition
+    // a retried or speculative task of an already-committed partition opens
+    // its transactional id and runs the in-task committed() check after
+    // that open() — which must skip, or the retry re-publishes a committed
+    // partition
     TransactionalEpochSink.write(batch(), Topic, Markers, "base", 6L,
-      StalePrefilterFactory(id))
+      InMemoryTxnFactory(id))
     values(broker).sorted shouldBe (0 until 12).map(i => s"v$i").sorted
   }
 
@@ -195,21 +194,6 @@ class TransactionalEpochSinkSpec extends AnyFunSuite with SparkSpec with Matcher
   }
 }
 
-/** [[InMemoryTxnFactory]] whose driver prefilter is ALWAYS stale (reports
-  * nothing committed) while the in-task check stays authoritative — the
-  * state a retried/speculative task actually sees mid-epoch. */
-final case class StalePrefilterFactory(brokerId: String)
-    extends TxnProducerFactory {
-  private def underlying = InMemoryTxnFactory(brokerId)
-  override def open(transactionalId: String): TxnProducer =
-    underlying.open(transactionalId)
-  override def committedPartitions(markerTopic: String, txnIdBase: String,
-      epochId: Long): Set[Int] = Set.empty
-  override def committed(markerTopic: String, txnIdBase: String,
-      epochId: Long, partitionId: Int): Boolean =
-    underlying.committed(markerTopic, txnIdBase, epochId, partitionId)
-}
-
 /** [[InMemoryTxnFactory]] that crashes ONE partition's commit, once: the
   * one-shot flag lives in a JVM-wide registry so executor tasks (same JVM in
   * local mode) and the driver agree on "already crashed". */
@@ -232,9 +216,9 @@ final case class CrashingFactory(brokerId: String, crashKey: String)
       def close(): Unit = p.close()
     }
   }
-  override def committedPartitions(markerTopic: String, txnIdBase: String,
-      epochId: Long): Set[Int] =
-    underlying.committedPartitions(markerTopic, txnIdBase, epochId)
+  override def committed(markerTopic: String, txnIdBase: String,
+      epochId: Long, partitionId: Int): Boolean =
+    underlying.committed(markerTopic, txnIdBase, epochId, partitionId)
 }
 
 object CrashingFactory {
