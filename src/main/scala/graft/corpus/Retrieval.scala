@@ -15,13 +15,13 @@ import org.apache.spark.sql.functions._
   * by construction (an eval suite, a task description sheet, a handful of
   * seed documents — X22's broadcast justification), so it is collected to
   * the driver and enters every plan as literals. The corpus pass counts each
-  * document's term frequencies inside its own row ([[termFreqs]]) and prunes
-  * them to the sheet vocabulary with one literal map probe per term, BEFORE
-  * any shuffle — the document-frequency window and the per-document score
-  * aggregate operate on the ~|query-vocab| slice of the postings, never the
-  * full corpus token stream. The only corpus-sized work is that narrow
-  * tokenize + count projection; corpus statistics (N, avgdl) collapse to one
-  * broadcast row. Nothing is quadratic in the corpus; candidate fan-out is
+  * document's term frequencies inside its own row and keeps only the sheet
+  * vocabulary's terms, in one kernel pass over its tokens ([[termFreqs]]),
+  * BEFORE any shuffle — the document-frequency window and the per-document
+  * score aggregate operate on the ~|query-vocab| slice of the postings,
+  * never the full corpus token stream. The only corpus-sized work is that
+  * narrow tokenize + count projection; corpus statistics (N, avgdl)
+  * collapse to one broadcast row. Nothing is quadratic in the corpus; candidate fan-out is
   * bounded by how many documents share a query term (the classic
   * inverted-index posting-list bound).
   *
@@ -126,29 +126,22 @@ object Retrieval {
 
   /** Per-document term frequencies: one row per (document, distinct term),
     * `(doc_id, dl, w, tf)` with `dl` the document's token count and `tf`
-    * every occurrence of `w` in it. Each distinct term is counted inside
-    * its own document row — `explode(array_distinct(tokens))`, then the
-    * optional `vocab` prune (a literal term map, [[sheetVocabLit]]; None
-    * keeps every term), then the term's count in the token array — so no
-    * (doc, term) shuffle runs. The count is `dl − size(array_remove(tokens,
-    * w))`: `array_remove` is code-generated, where the equivalent
-    * `size(filter(tokens, _ === w))` is an interpreted higher-order function
-    * (sf0.1 documents, all 116,231 (doc, term) rows in one task on a
-    * 4-core host, min-of-5: 0.19–0.22 s vs 0.96–1.10 s, identical rows).
+    * every occurrence of `w` in it. Each document's terms are counted inside
+    * its own row by the [[graft.functions.TermFreqs]] kernel — one hash-map
+    * pass over `split(text, " ")`'s tokens, pruned to `vocab` (a sheet's
+    * vocabulary, [[sheetVocab]]; None keeps every term) — so no (doc, term)
+    * shuffle runs, and the count is O(dl), where the declarative
+    * `dl − size(array_remove(tokens, w))` per distinct term it replaces was
+    * O(dl × distinct terms) and lived in per-query generated code.
     *
     * Precondition: `doc_id` is unique per row. A (doc, term) aggregate
     * would merge two rows sharing an id; this emits one row per copy. The
     * driver tables hold it: 500 distinct ids in 500 rows at sf0.01, 5000
     * in 5000 at sf0.1. */
-  private def termFreqs(docs: DataFrame, vocab: Option[Column]): DataFrame = {
-    val terms = docs
-      .select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"), size(col("ws")).as("dl"), col("ws"),
-        explode(array_distinct(col("ws"))).as("w"))
-    vocab.fold(terms)(v => terms.filter(map_contains_key(v, col("w"))))
-      .select(col("doc_id"), col("dl"), col("w"),
-        (col("dl") - size(array_remove(col("ws"), col("w")))).cast("long")
-          .as("tf"))
+  private def termFreqs(docs: DataFrame, vocab: Option[Set[String]]): DataFrame = {
+    import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+    docs.select(col("doc_id"), inline(column(
+      graft.functions.TermFreqs(expression(col("text")), vocab))))
   }
 
   /** [[bm25TopK]]'s core over an explicit corpus/sheet split, also both
@@ -160,7 +153,7 @@ object Retrieval {
   private def bm25TopKOn(corpus: DataFrame,
       sheet: Seq[(Long, Seq[(String, Long)])], k: Int,
       stats: Option[(Long, Double)], rm3Scale: Boolean = false): DataFrame = {
-    val tf = termFreqs(corpus, Some(sheetVocabLit(sheet)))
+    val tf = termFreqs(corpus, Some(sheetVocab(sheet)))
     // df over the pruned postings = df of exactly the query terms — computed
     // as a COUNT window over the tf stream itself, not a groupBy+join back:
     // the join form duplicates the whole tokenize→prune→tf subtree into a
@@ -177,36 +170,27 @@ object Retrieval {
     scoreTail(withStats, sheet, k, rm3Scale)
   }
 
-  /** The sheet vocabulary as ONE literal map (term → 1) for the term
-    * prune: `map_contains_key` is a codegen'd hash probe per term, with no
-    * broadcast build job and no join in the plan. */
-  private def sheetVocabLit(sheet: Seq[(Long, Seq[(String, Long)])]): Column =
-    typedLit(sheet.flatMap(_._2.map(_._1)).distinct.map(w => w -> 1).toMap)
+  /** The sheet vocabulary: every term of every query. */
+  private def sheetVocab(sheet: Seq[(Long, Seq[(String, Long)])]): Set[String] =
+    sheet.flatMap(_._2.map(_._1)).toSet
 
-  /** Chunk width of [[scoreTail]]: every document aggregates one
-    * fixed-width score/term-count slot pair per query — 2·|chunk| long
-    * buffer columns per group — so a wider sheet is scored in chunks of
-    * this many queries rather than generating a pathological 1000-column
-    * aggregate. The driver sheet is 32 queries ([[QueryCount]]); 64 leaves
-    * headroom. */
-  val MaxDenseSheetQueries: Int = 64
+  /** The sheet vocabulary as ONE literal map (term → 1) for pruning
+    * persisted postings: `map_contains_key` is a codegen'd hash probe per
+    * posting row, with no broadcast build job and no join in the plan. */
+  private def sheetVocabLit(sheet: Seq[(Long, Seq[(String, Long)])]): Column =
+    typedLit(sheetVocab(sheet).map(w => w -> 1).toMap)
 
   /** Shared scoring tail: input carries (doc_id, dl, w, tf, df, n, avgdl);
     * `sheet` holds per query its (term, weight) pairs — weight 1 for plain
     * BM25, exact micro units for RM3 pass 2 (`rm3Scale` adds that path's
-    * extra 10⁻⁶ rescale). Output: (query_id, doc_id, n_terms, score, rank).
-    *
-    * The queries are sorted by qid and scored by [[denseScoreTail]] in
-    * chunks of [[MaxDenseSheetQueries]]; the chunk results are unioned,
-    * exact because ranking is per query and the chunks' qids are disjoint.
-    * An empty sheet yields an empty frame with the output schema.
+    * extra 10⁻⁶ rescale). Output: (query_id, doc_id, n_terms, score, rank),
+    * rank 1..k per query by (score desc, doc_id). An empty sheet yields an
+    * empty frame with the output schema.
     *
     * Input precondition: rows pruned to the sheet vocabulary. It is a cost
-    * precondition, not a correctness one: an unpruned row's term misses the
-    * slot-vector maps, `element_at` returns NULL for a missing key (also
-    * under ANSI mode, Spark 4.1.2), and a NULL slot adds nothing to any
-    * score or term count — so such a row scores nothing and pruning only
-    * saves work.
+    * precondition, not a correctness one: an unpruned row's term is in no
+    * query's slot, and such a row scores nothing — so pruning only saves
+    * work.
     *
     * WHY a dense kernel (r20, guide §2.3/§2.4 — the round's biggest
     * single win): the sheet-join fan form it replaced multiplied each
@@ -214,22 +198,38 @@ object Retrieval {
     * 2.70 M fanned rows whose (qid, doc) partial aggregate collapsed only
     * to 2.06 M while paying avgHashProbe ≈ 160–373 and an 82 MB shuffle.
     * The dense form never fans: each posting row updates one score slot
-    * and one term-count slot per query in a doc_id-keyed aggregate — rows
-    * through the aggregate = postings (116 k), groups = documents (4.9 k),
-    * shuffle = docs × 2·|sheet| longs (~2.5 MB) — then one bounded unpivot
-    * emits the (qid, doc) pairs that share a term. Slot sums are exact
-    * long additions, commutative, so scores are order-independent, and
-    * (qid, doc) pairs with no shared term carry slot count 0 and are
-    * filtered. */
+    * and one term-count slot per query holding its term in a doc_id-keyed
+    * aggregate — rows through the aggregate = postings (116 k), groups =
+    * documents (4.9 k) — then emits the (qid, doc) pairs that share a term.
+    * The aggregate is the [[graft.functions.SheetSlotSums]] kernel: one
+    * `long[2·|sheet|]` buffer per document, compiled once per JVM. Its
+    * first form, a 2·|sheet|-column `sum(element_at(slot vector, i) · t)`
+    * aggregate, generated 70–100 KB of Java per scoring pass that Spark
+    * compiled again every pass (its codegen cache held fewer classes than
+    * a twins pass generates), and bounded the sheet to 64-query chunks to
+    * keep that code compilable; the kernel's width is memory only, so any
+    * sheet is one aggregate. Slot sums are exact long additions,
+    * commutative, so scores are order-independent. */
   private def scoreTail(tfd: DataFrame,
       sheet: Seq[(Long, Seq[(String, Long)])], k: Int,
       rm3Scale: Boolean): DataFrame = {
-    val chunks = sheet.sortBy(_._1).grouped(MaxDenseSheetQueries).toSeq
-    if (chunks.isEmpty)
-      // a term-less query scores nothing; limit(0) folds to an empty
-      // relation at optimization, so no job runs
-      denseScoreTail(tfd, Seq(0L -> Nil), k, rm3Scale).limit(0)
-    else chunks.map(denseScoreTail(tfd, _, k, rm3Scale)).reduce(_ union _)
+    import org.apache.spark.sql.expressions.Window
+    val ranked = tfd
+      .groupBy(col("doc_id"))
+      .agg(graft.functions.SheetSlotSums.sums(col("w"), microTerm, sheet)
+        .as("slots"))
+      .select(col("doc_id"), inline(col("slots")))
+      .select(col("qid"), col("doc_id"), col("nt").as("n_terms"),
+        microScore(col("sm"), rm3Scale).as("score"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("qid"))
+          .orderBy(col("score").desc, col("doc_id"))))
+      .filter(col("rank") <= k)
+      .select(col("qid").as("query_id"), col("doc_id"), col("n_terms"),
+        col("score"), col("rank"))
+    // a term-less sheet scores nothing; limit(0) folds to an empty relation
+    // at optimization, so no job runs
+    if (sheet.isEmpty) ranked.limit(0) else ranked
   }
 
   /** The BM25 per-posting contribution in exact integer MICRO units.
@@ -257,57 +257,6 @@ object Retrieval {
     val d = (sum.cast("decimal(20,0)") *
       lit(new java.math.BigDecimal("0.000001"))).cast("double")
     if (rm3Scale) d / 1e6 else d
-  }
-
-  /** The dense slot-kernel tail (see [[scoreTail]]): one doc_id-keyed
-    * aggregate with a (score, n_terms) long slot pair per sheet query,
-    * unpivoted to (qid, doc) rows, ranked. Slot order is the sorted qid
-    * list (determinism is moot — slots are independent — but a stable
-    * layout keeps generated code identical across runs). A term carrying
-    * weight 0 in a query still counts toward that query's n_terms when a
-    * posting matches (presence ≠ weight — the RM3 half-up division can
-    * legitimately produce a zero micro weight). */
-  private def denseScoreTail(tfd: DataFrame,
-      sheet: Seq[(Long, Seq[(String, Long)])], k: Int,
-      rm3Scale: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qids: Seq[Long] = sheet.map(_._1).sorted
-    val slot: Map[Long, Int] = qids.zipWithIndex.toMap
-    val nq = qids.size
-    val wvec = scala.collection.mutable.Map.empty[String, Array[Long]]
-    val pvec = scala.collection.mutable.Map.empty[String, Array[Long]]
-    for ((qid, tws) <- sheet; (w, wt) <- tws) {
-      val i = slot(qid)
-      wvec.getOrElseUpdate(w, new Array[Long](nq))(i) = wt
-      pvec.getOrElseUpdate(w, new Array[Long](nq))(i) = 1L
-    }
-    val wlit = typedLit(wvec.view.mapValues(_.toSeq).toMap)
-    val plit = typedLit(pvec.view.mapValues(_.toSeq).toMap)
-    val rows = tfd
-      .select(col("doc_id"), microTerm.as("t"),
-        element_at(wlit, col("w")).as("__g_qw"),
-        element_at(plit, col("w")).as("__g_qp"))
-    val aggs: Seq[Column] =
-      (0 until nq).map(i =>
-        sum(element_at(col("__g_qw"), i + 1) * col("t")).as(s"__g_s$i")) ++
-      (0 until nq).map(i =>
-        sum(element_at(col("__g_qp"), i + 1)).as(s"__g_n$i"))
-    val grouped = rows.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    val entries = array((0 until nq).map(i => struct(
-      lit(qids(i)).as("qid"), col(s"__g_s$i").as("sm"),
-      col(s"__g_n$i").as("nt"))): _*)
-    grouped
-      .select(col("doc_id"), explode(entries).as("e"))
-      .filter(col("e.nt") > 0)
-      .select(col("e.qid").as("qid"), col("doc_id"),
-        col("e.nt").as("n_terms"),
-        microScore(col("e.sm"), rm3Scale).as("score"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("score").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("doc_id"), col("n_terms"),
-        col("score"), col("rank"))
   }
 
   /** Corpus-side BM25 index: the FULL corpus vocabulary's document
@@ -342,7 +291,7 @@ object Retrieval {
     * parity discipline).
     *
     * Scale: the increment's tf is counted in-row and pruned narrowly (one
-    * literal map probe per term, [[termFreqs]]), then shuffle-joins the
+    * kernel pass per document, [[termFreqs]]), then shuffle-joins the
     * index on the term key — with a bucketed index every exchange is
     * INCREMENT-side and the index reads in place (spec-pinned plan shape).
     *
@@ -351,7 +300,7 @@ object Retrieval {
   def bm25TopKAgainst(newDocs: DataFrame, index: DataFrame,
       queryDocs: DataFrame, k: Int = DefaultTopK): DataFrame = {
     val sheet = collectSheet(queryDocs)
-    scoreTail(termFreqs(newDocs, Some(sheetVocabLit(sheet))).join(index, "w"),
+    scoreTail(termFreqs(newDocs, Some(sheetVocab(sheet))).join(index, "w"),
       sheet, k, rm3Scale = false)
   }
 
@@ -709,7 +658,7 @@ object Retrieval {
     * such documents still surface on lexical evidence alone.
     *
     * Scale shape: all the N-scale work lives in the two candidate
-    * generators, each already scale-shaped (BM25: literal-map-pruned in-row
+    * generators, each already scale-shaped (BM25: sheet-pruned in-row
     * postings; dense: the pluggable [[DenseCandidates]] generator —
     * [[exactDenseCandidates]] by default, [[ivfDenseCandidates]] /
     * [[ivfAdcDenseCandidates]] at larger N, same contract). The fusion
@@ -779,8 +728,8 @@ object Retrieval {
     * vocabulary, so pass 1's pruned postings cannot supply them); the
     * expanded weight sheet ((|sheet| × (qlen + fbTerms))-bounded) is
     * assembled driver-side and enters the second scoring pass as literals —
-    * the same pass as [[bm25TopK]]'s ([[bm25TopKOn]]: in-row tf, one
-    * map-contains probe per term, [[scoreTail]]'s dense slot kernel), with
+    * the same pass as [[bm25TopK]]'s ([[bm25TopKOn]]: in-row sheet-pruned
+    * tf, [[scoreTail]]'s dense slot kernel), with
     * the RM3 weight rescale.
     *
     * Determinism / oracle parity: RM1 contributions are rounded to 9 dp and

@@ -13,8 +13,9 @@ import scala.jdk.CollectionConverters._
   * optimization, physical planning, first execution, and a warm rerun timed
   * as `Bench` times it: construction + `count()`); the Spark jobs and stages
   * launched during construction and during execution, with each stage's
-  * wall time, task count and summed executor run time; the final adaptive
-  * plan; and every operator's metrics as the SQL tab renders them, read from
+  * wall time, task count and summed executor run time, and the Spark
+  * codegen compiles the phase caused; the final adaptive plan; and every
+  * operator's metrics as the SQL tab renders them, read from
   * the query's own execution in the SQL status store. Raw `SQLMetric.value`
   * misleads: an `average` metric is stored ×10 and summed over tasks, and an
   * `nsTiming` metric is in nanoseconds. The first execution runs the
@@ -29,8 +30,12 @@ object Diagnose {
   /** A completed stage: summed executor run time over its tasks. */
   final case class Stage(id: Int, name: String, tasks: Int, wallMs: Long, taskMs: Long)
 
-  /** Jobs started and stages completed inside one phase. */
-  final case class Work(jobs: Int, stages: Seq[Stage])
+  /** Jobs started and stages completed inside one phase, and the Spark
+    * codegen compiles it ran (`CodegenMetrics.METRIC_COMPILATION_TIME`'s
+    * count: one per generated class compiled, a codegen-cache hit adds
+    * none). The count is JVM-wide — unlike the jobs it is not tagged — so a
+    * compile on another thread during the phase counts too. */
+  final case class Work(jobs: Int, stages: Seq[Stage], compiles: Long)
 
   /** One operator metric, `value` as the SQL tab shows it. */
   final case class Metric(nodeId: Long, operator: String, accumulatorId: Long,
@@ -40,6 +45,9 @@ object Diagnose {
       exec: Work, executionId: Long, plan: String, metrics: Seq[Metric])
 
   private val PhaseKey = "graft.diagnose.phase"
+
+  private def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Counts the jobs and records the stages a phase launches. The phase
     * tags them with a local property of its thread, which Spark copies onto
@@ -64,11 +72,13 @@ object Diagnose {
     }
     def during[A](phase: String)(f: => A): (A, Work) = {
       val sc = spark.sparkContext
+      val compiles0 = codegenCompiles
       sc.setLocalProperty(PhaseKey, phase)
       val a = try f finally sc.setLocalProperty(PhaseKey, null)
+      val compiles = codegenCompiles - compiles0
       GraftExpressionBridge.drainListenerBus(spark)
       (a, Work(jobs.asScala.count(_ == phase),
-        stages.asScala.collect { case (`phase`, s) => s }.toSeq))
+        stages.asScala.collect { case (`phase`, s) => s }.toSeq, compiles))
     }
   }
 
@@ -118,7 +128,7 @@ object Diagnose {
     line(s"===== ${r.name} =====")
     line(r.seconds.map { case (k, v) => f"$k=$v%.3f" }.mkString("seconds: ", " ", ""))
     for ((phase, w) <- Seq("build" -> r.build, "exec" -> r.exec)) {
-      line(s"$phase: jobs=${w.jobs} stages=${w.stages.size} " +
+      line(s"$phase: jobs=${w.jobs} stages=${w.stages.size} compiles=${w.compiles} " +
         s"wallSum=${w.stages.map(_.wallMs).sum}ms taskTimeSum=${w.stages.map(_.taskMs).sum}ms")
       w.stages.sortBy(-_.wallMs).take(12).foreach { s =>
         line(f"  s${s.id}%-5d ${s.wallMs}%6dms tasks=${s.tasks}%-4d " +

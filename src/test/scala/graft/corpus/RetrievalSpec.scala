@@ -1,18 +1,42 @@
 package graft.corpus
 
 import graft.SparkSpec
+import graft.functions.TermFreqs
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** X60–X63: BM25 retrieval, BPE pair counts, stratified sampling, kNN label
   * transfer. */
-class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
+class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers
+    with AdaptiveSparkPlanHelper {
 
   private def docs(rows: (Long, String)*): DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "text")
+  }
+
+  /** The corpus tokens meet the collected sheet's vocabulary inside the
+    * [[TermFreqs]] kernel BEFORE any shuffle: the operator evaluating the
+    * vocabulary-pruned kernel has no exchange beneath it, and sits below
+    * the plan's first exchange. */
+  private def prunedTermFreqsBelowFirstExchange(plan: SparkPlan): Unit = {
+    def pruned(p: SparkPlan) = p.expressions.exists(_.exists {
+      case TermFreqs(_, Some(_)) => true
+      case _ => false
+    })
+    val sites = collect(plan) { case p if pruned(p) => p }
+    sites should not be empty
+    val exchanges = collect(plan) { case e: Exchange => e }
+    exchanges should not be empty
+    sites.foreach { site =>
+      collect(site) { case e: Exchange => e } shouldBe empty
+      exchanges.exists(e => find(e)(_ eq site).isDefined) shouldBe true
+    }
   }
 
   // doc_id 0 and 50 are queries under QueryMod = 50
@@ -69,25 +93,22 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
     row.getAs[Double]("score") shouldBe expected
   }
 
-  test("bm25 plan: tokens prune through a literal map probe before any " +
-      "shuffle; no sheet join, no sort-merge join anywhere") {
+  test("bm25 plan: the sheet-pruned TermFreqs runs before any shuffle") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("bm25plan").toString
     (0L to 120L).map(i => (i, s"tok${i % 13} tok${i % 7} filler$i"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    val plan = Retrieval.bm25TopK(spark.read.parquet(dir))
-      .queryExecution.executedPlan.toString
-    // corpus tokens meet the collected sheet's vocabulary as ONE literal
-    // map_contains_key filter before any shuffle (r20 dense kernel) — no
-    // broadcast build, no semi join, and the corpus-sized token stream
-    // must never sort-merge; the only join left is the one-row stats
-    // crossJoin
-    // Catalyst folds map_contains_key over a literal map into
-    // array_contains over the key array — accept either spelling
-    plan should (include("map_contains_key") or include("array_contains"))
+    val executed = Retrieval.bm25TopK(spark.read.parquet(dir))
+      .queryExecution.executedPlan
+    val plan = executed.toString
+    // corpus tokens meet the collected sheet's vocabulary inside the tf
+    // kernel before any shuffle — no broadcast build, no semi join, and
+    // the corpus-sized token stream must never sort-merge; the only join
+    // left is the one-row stats crossJoin
+    prunedTermFreqsBelowFirstExchange(executed)
     plan should not include "LeftSemi"
     plan should not include "SortMergeJoin"
-    // the sheet itself enters as slot literals, not a join: the fan
+    // the sheet itself enters the slot kernel, not a join: the fan
     // BroadcastHashJoin on the term key is gone
     plan should not include "BroadcastHashJoin"
     // tf is counted inside each document row: no (doc, dl, term) exchange
@@ -214,8 +235,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
     rm.head._2 should be > 0.0
   }
 
-  test("rm3 pass-2 plan: the weighted scoring pass prunes through a " +
-      "literal map probe; no sheet join, no sort-merge join") {
+  test("rm3 pass-2 plan: the sheet-pruned TermFreqs runs before any shuffle") {
     // what the returned frame's plan contains is ONLY pass 2: rm3TopK runs
     // pass 1 (bm25TopK — its plan is pinned by the bm25 plan test above)
     // and the bounded fbtf/weights chain eagerly, as separate jobs. Pass 2
@@ -228,9 +248,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
     val df = Retrieval.rm3TopK(spark.read.parquet(dir))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    // Catalyst folds map_contains_key over a literal map into
-    // array_contains over the key array — accept either spelling
-    plan should (include("map_contains_key") or include("array_contains"))
+    prunedTermFreqsBelowFirstExchange(df.queryExecution.executedPlan)
     plan should not include "LeftSemi"
     plan should not include "SortMergeJoin"
     plan should not include "BroadcastHashJoin"
@@ -478,16 +496,15 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
     key(viaIndex) shouldBe self
   }
 
-  test("a sheet wider than MaxDenseSheetQueries: bm25 and rm3 against " +
-      "the index equal the union of one-query runs") {
+  test("a 70-query sheet: bm25 and rm3 against the index equal one-query runs") {
     val rnd = new scala.util.Random(70)
     val vocab = Vector.tabulate(24)(i => s"t$i")
     def text(n: Int) =
       Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
     val corpus = docs((1000L until 1120L).map(i =>
       i -> text(3 + rnd.nextInt(10))): _*)
+    // wider than the 64-query chunks the slot aggregate once scored in
     val nq = 70L
-    Retrieval.MaxDenseSheetQueries.toLong should be < nq
     val queries = docs((0L until nq).map(i => i -> text(1 + rnd.nextInt(3))): _*)
     val postings = Retrieval.bm25Postings(corpus).localCheckpoint()
     val index = Retrieval.bm25Index(corpus).localCheckpoint()
@@ -507,7 +524,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers {
       finally pool.shutdown()
     }
     val bm = key(Retrieval.bm25TopKAgainst(corpus, index, queries))
-    // every query matches, so both sides of the 64-query boundary score
+    // every query matches, so slots past the 64th score too
     bm.map(_._1) shouldBe (0L until nq).toSet
     bm shouldBe perQuery(Retrieval.bm25TopKAgainst(corpus, index, _))
     val rm = key(Retrieval.rm3TopKAgainst(postings, index, queries))

@@ -83,7 +83,25 @@ class DiagnoseSpec extends AnyFunSuite with SparkSpec with Matchers
     r.exec.jobs should be > 0
     r.exec.jobs shouldBe jobs.toArray.count(_ == id)
     r.exec.stages.size shouldBe stages.toArray.count(_ == id)
-    r.build shouldBe Diagnose.Work(0, Nil)
+    r.build.jobs shouldBe 0
+    r.build.stages shouldBe Nil
     r.plan should include("== Final Plan ==")
+  }
+
+  test("report: codegen compiles per phase, a codegen-cache hit counts none") {
+    // a literal no other query holds makes the generated source new, so its
+    // first execution compiles; the same query built again generates the
+    // same source, which Spark's codegen cache serves
+    val salt = System.nanoTime()
+    def build() = spark.range(0, 1000, 1, 2)
+      .select((col("id") * salt % 7919).as("x")).filter(col("x") > 3)
+    val first = Diagnose.report(spark, "salted", () => build())
+    val again = Diagnose.report(spark, "salted", () => build())
+    first.exec.compiles should be >= 1L
+    again.exec.compiles should be < first.exec.compiles
+    val lines = Diagnose.render(first).linesIterator.toSeq
+    for ((phase, w) <- Seq("build" -> first.build, "exec" -> first.exec))
+      lines.exists(l => l.startsWith(s"$phase: ") &&
+        l.contains(s" compiles=${w.compiles} ")) shouldBe true
   }
 }
