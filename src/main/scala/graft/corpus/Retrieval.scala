@@ -1,7 +1,11 @@
 package graft.corpus
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.CollectMetricsExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Lexical retrieval over the corpus: Okapi BM25 top-k ranking of corpus
   * documents against a bounded query set. The retrieval twin of the embedding
@@ -20,8 +24,10 @@ import org.apache.spark.sql.functions._
   * BEFORE any shuffle — the document-frequency window and the per-document
   * score aggregate operate on the ~|query-vocab| slice of the postings,
   * never the full corpus token stream. The only corpus-sized work is that
-  * narrow tokenize + count projection; corpus statistics (N, avgdl)
-  * collapse to one broadcast row. Nothing is quadratic in the corpus; candidate fan-out is
+  * narrow tokenize + count projection; the corpus statistics (N, avgdl)
+  * are observed on the same narrow scan that reads the sheet
+  * ([[queryScan]]) and enter the scoring pass as two literals. Nothing is
+  * quadratic in the corpus; candidate fan-out is
   * bounded by how many documents share a query term (the classic
   * inverted-index posting-list bound).
   *
@@ -73,17 +79,85 @@ object Retrieval {
   def querySheetCol(queryMod: Long = QueryMod): Column =
     col("doc_id") % queryMod === 0 && col("doc_id") < queryMod * QueryCount
 
-  /** One-broadcast-row corpus statistics: document count and average doc
-    * length as `sum(dl)/count(*)` over exact integer sums — written out
-    * explicitly, NOT `avg`, to stay in lockstep with the oracle's
+  /** A document's token count; NULL for NULL text. */
+  private def docLen: Column = size(ws)
+
+  /** One-row corpus statistics: document count and average doc length as
+    * `sum(dl)/count(*)` over exact integer sums — written out explicitly,
+    * NOT `avg`, to stay in lockstep with the oracle's
     * `CAST(SUM(len) AS DOUBLE)/COUNT(*)`: `avg` skips NULL lengths in its
     * denominator (a NULL-text document would shift avgdl between the
     * engines) and accumulates integral input in DOUBLE rather than summing
-    * exactly first. */
-  private def corpusStats(corpus: DataFrame): DataFrame =
-    corpus.select(size(ws).as("dl"))
+    * exactly first. [[bm25Index]] denormalizes it onto every index row; the
+    * self-contained passes observe the same two sums on their query-side
+    * scan instead ([[queryScan]]). */
+  private[corpus] def corpusStats(corpus: DataFrame): DataFrame =
+    corpus.select(docLen.as("dl"))
       .agg(count(lit(1)).as("n"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
+
+  /** A query sheet: per query, its (term, weight) pairs. */
+  private[corpus] type Sheet = Seq[(Long, Seq[(String, Long)])]
+
+  /** One collected [[termFreqs]] row: `(doc_id, dl, w, tf)`. */
+  private[corpus] final case class TermRow(docId: Long, dl: Int, w: String,
+      tf: Long)
+
+  /** Collect a frame of [[termFreqs]]' columns, in its column order. */
+  private def collectTerms(tf: DataFrame): Seq[TermRow] =
+    tf.collect()
+      .map(r => TermRow(r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3)))
+      .toSeq
+
+  /** The query documents' term rows, unpruned: the one driver read every
+    * sheet consumer shares — the weight-1 sheet ([[sheetOf]]), RM3's
+    * original-query weights and [[bm25Model]]'s terms. One narrow job: a
+    * query sheet is definitionally sheet-sized (a corpus-scale "sheet" is
+    * a join, not a sheet, and belongs on [[bm25TopKAgainst]]'s corpus
+    * side). */
+  private def queryTerms(queryDocs: DataFrame): Seq[TermRow] =
+    collectTerms(termFreqs(queryDocs, None))
+
+  /** The self-contained passes' query side, in ONE narrow job over `docs`:
+    * the [[queryTerms]] of the rows `isQuery` keeps, and the corpus
+    * statistics of the rest, observed on the same scan — N = their count,
+    * avgdl = Σdl / N with Σdl the exact integer sum of [[docLen]], the
+    * [[corpusStats]] arithmetic (a NULL-text row counts in N, not in Σdl).
+    * The stats are absent where [[corpusStats]]'s avgdl is NULL: N = 0, or
+    * every corpus row has NULL text.
+    *
+    * Precondition, checked: the observed node runs in the collect's result
+    * stage, with no exchange above it. Spark applies an accumulator update
+    * exactly once only in a result stage; a retried task or stage of a map
+    * stage would count its partition again. */
+  private[corpus] def queryScan(docs: DataFrame, isQuery: Column)
+      : (Seq[TermRow], Option[(Long, Double)]) = {
+    val name = "retrieval_corpus_stats"
+    val tf = termFreqs(docs.observe(name, count(when(!isQuery, 1)),
+      sum(when(!isQuery, docLen))).filter(isQuery), None)
+    val rows = collectTerms(tf)
+    val qe = tf.queryExecution
+    val above = PlanWalk.collect(qe.executedPlan) {
+      case e: Exchange
+          if PlanWalk.find(e)(_.isInstanceOf[CollectMetricsExec]).isDefined => e
+    }
+    if (above.nonEmpty) throw new IllegalStateException(
+      s"queryScan: the corpus statistics were observed below an exchange, " +
+        s"where a stage retry would count a partition twice:\n${qe.executedPlan}")
+    val m = qe.observedMetrics(name)
+    val n = m.getLong(0)
+    (rows, if (n == 0L || m.isNullAt(1)) None
+      else Some((n, m.getLong(1).toDouble / n.toDouble)))
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** The weight-1 sheet of a query side: per query, its distinct terms
+    * (bag-of-words: a repeated term counts once). A query `doc_id` held by
+    * several rows pools their terms. */
+  private def sheetOf(terms: Seq[TermRow]): Sheet =
+    terms.groupBy(_.docId).toSeq.sortBy(_._1)
+      .map { case (q, ts) => q -> ts.map(_.w).distinct.map(_ -> 1L) }
 
   /** BM25 top-`k` corpus documents for each query document.
     *
@@ -98,31 +172,19 @@ object Retrieval {
     * Output: (query_id, doc_id, n_terms, score, rank), rank 1..k per query by
     * (score desc, doc_id asc); queries whose terms match nothing emit no rows.
     *
-    * Construction runs one Spark action: the collect of the query sheet's
-    * distinct (query, term) pairs ([[collectSheet]]). The returned frame is
-    * the scoring pass only.
+    * Construction runs one Spark action, [[queryScan]]: the query sheet and
+    * the corpus statistics (N, avgdl) in one narrow job. The returned frame
+    * is the scoring pass only, with both frozen into it as literals:
+    * EAGER-SNAPSHOT semantics (the [[rm3TopK]] contract) — if `docs`
+    * changes after construction, the pass scores the new corpus against
+    * the old sheet and the old N/avgdl.
     */
   def bm25TopK(docs: DataFrame, queryMod: Long = QueryMod,
       k: Int = DefaultTopK): DataFrame = {
     val isQuery = querySheetCol(queryMod)
-    bm25TopKOn(docs.filter(!isQuery),
-      collectSheet(docs.filter(isQuery)), k, None)
+    val (qterms, stats) = queryScan(docs, isQuery)
+    bm25TopKOn(docs.filter(!isQuery), sheetOf(qterms), k, stats)
   }
-
-  /** The collected query sheet: per query, its distinct terms with weight 1
-    * — the driver-held artifact every scoring tail below keys on (the
-    * [[bm25Model]] boundedness contract: a query sheet is definitionally
-    * sheet-sized; a corpus-scale "sheet" is a join, not a sheet, and
-    * belongs on [[bm25TopKAgainst]]'s corpus side). EAGER-SNAPSHOT
-    * semantics for every consumer (the [[rm3TopK]] contract, now shared by
-    * [[bm25TopK]]): the sheet freezes at construction. */
-  private def collectSheet(queryDocs: DataFrame)
-      : Seq[(Long, Seq[(String, Long)])] =
-    queryDocs
-      .select(col("doc_id").as("qid"), explode(ws).as("w")).distinct()
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-      .groupBy(_._1).toSeq
-      .map { case (q, rs) => (q, rs.map(r => (r._2, 1L))) }
 
   /** Per-document term frequencies: one row per (document, distinct term),
     * `(doc_id, dl, w, tf)` with `dl` the document's token count and `tf`
@@ -146,12 +208,10 @@ object Retrieval {
 
   /** [[bm25TopK]]'s core over an explicit corpus/sheet split, also both
     * scoring passes of [[rm3TopK]] (`rm3Scale` for its weighted second
-    * pass). RM3 passes PRE-COLLECTED corpus stats: letting each pass
-    * recompute the one-row (N, avgdl) aggregate re-scanned the corpus once
-    * per pass; the values are identical by construction, collected from
-    * the same aggregate the lazy crossJoin evaluates. */
-  private def bm25TopKOn(corpus: DataFrame,
-      sheet: Seq[(Long, Seq[(String, Long)])], k: Int,
+    * pass). The corpus stats come collected ([[queryScan]]), so they enter
+    * the plan as literals: no pass re-scans the corpus for them, and no
+    * join carries them. */
+  private def bm25TopKOn(corpus: DataFrame, sheet: Sheet, k: Int,
       stats: Option[(Long, Double)], rm3Scale: Boolean = false): DataFrame = {
     val tf = termFreqs(corpus, Some(sheetVocab(sheet)))
     // df over the pruned postings = df of exactly the query terms — computed
@@ -162,22 +222,24 @@ object Retrieval {
     // pruned per-(doc, term) rows on the term key
     val tfd = tf.withColumn("df", count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy(col("w"))))
-    val withStats = stats match {
-      case Some((n, avgdl)) =>
-        tfd.withColumn("n", lit(n)).withColumn("avgdl", lit(avgdl))
-      case None => tfd.crossJoin(broadcast(corpusStats(corpus)))
-    }
-    scoreTail(withStats, sheet, k, rm3Scale)
+    val (n, avgdl) = stats.getOrElse((0L, 1.0))
+    val scored = scoreTail(
+      tfd.withColumn("n", lit(n)).withColumn("avgdl", lit(avgdl)),
+      sheet, k, rm3Scale)
+    // absent stats mean no corpus row has text, so the pass has no
+    // postings and scores nothing; limit(0) folds to an empty relation at
+    // optimization, so no job runs
+    if (stats.isEmpty) scored.limit(0) else scored
   }
 
   /** The sheet vocabulary: every term of every query. */
-  private def sheetVocab(sheet: Seq[(Long, Seq[(String, Long)])]): Set[String] =
+  private def sheetVocab(sheet: Sheet): Set[String] =
     sheet.flatMap(_._2.map(_._1)).toSet
 
   /** The sheet vocabulary as ONE literal map (term → 1) for pruning
     * persisted postings: `map_contains_key` is a codegen'd hash probe per
     * posting row, with no broadcast build job and no join in the plan. */
-  private def sheetVocabLit(sheet: Seq[(Long, Seq[(String, Long)])]): Column =
+  private def sheetVocabLit(sheet: Sheet): Column =
     typedLit(sheetVocab(sheet).map(w => w -> 1).toMap)
 
   /** Shared scoring tail: input carries (doc_id, dl, w, tf, df, n, avgdl);
@@ -210,8 +272,7 @@ object Retrieval {
     * keep that code compilable; the kernel's width is memory only, so any
     * sheet is one aggregate. Slot sums are exact long additions,
     * commutative, so scores are order-independent. */
-  private def scoreTail(tfd: DataFrame,
-      sheet: Seq[(Long, Seq[(String, Long)])], k: Int,
+  private def scoreTail(tfd: DataFrame, sheet: Sheet, k: Int,
       rm3Scale: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ranked = tfd
@@ -295,11 +356,11 @@ object Retrieval {
     * index on the term key — with a bucketed index every exchange is
     * INCREMENT-side and the index reads in place (spec-pinned plan shape).
     *
-    * Construction runs one Spark action: the query-sheet collect
-    * ([[collectSheet]]). The returned frame is the scoring pass only. */
+    * Construction runs one Spark action: the query-sheet read
+    * ([[queryTerms]]). The returned frame is the scoring pass only. */
   def bm25TopKAgainst(newDocs: DataFrame, index: DataFrame,
       queryDocs: DataFrame, k: Int = DefaultTopK): DataFrame = {
-    val sheet = collectSheet(queryDocs)
+    val sheet = sheetOf(queryTerms(queryDocs))
     scoreTail(termFreqs(newDocs, Some(sheetVocab(sheet))).join(index, "w"),
       sheet, k, rm3Scale = false)
   }
@@ -316,11 +377,10 @@ object Retrieval {
 
   /** Build a [[Bm25Model]] from a (typically persisted) [[bm25Index]] and
     * the query sheet. Two driver collects, both sheet-bounded: the sheet's
-    * distinct terms, and the index rows for exactly those terms. */
+    * terms ([[queryTerms]], one narrow job), and the index rows for exactly
+    * those terms. */
   def bm25Model(index: DataFrame, queryDocs: DataFrame): Bm25Model = {
-    val qterms = queryDocs
-      .select(col("doc_id").as("qid"), explode(ws).as("w")).distinct()
-      .collect().map(r => (r.getLong(0), r.getString(1)))
+    val qterms = queryTerms(queryDocs).map(t => (t.docId, t.w)).distinct
     val qvocab = qterms.map(_._2).distinct
     val session = queryDocs.sparkSession
     import session.implicits._
@@ -328,7 +388,7 @@ object Retrieval {
     // the pruned collect already carries them; the separate stats query is
     // only needed when no sheet term exists in the index at all
     val pruned = index
-      .join(broadcast(qvocab.toSeq.toDF("w")), Seq("w"), "left_semi")
+      .join(broadcast(qvocab.toDF("w")), Seq("w"), "left_semi")
       .select(col("w"), col("df"), col("n"), col("avgdl")).collect()
     val dfByTerm = pruned.map(r => r.getString(0) -> r.getLong(1)).toMap
     val (n, avgdl) = pruned.headOption
@@ -721,16 +781,17 @@ object Retrieval {
     *
     * Scale shape — two pruned corpus passes plus pass 1's ranked scan,
     * nothing quadratic, every intermediate a BOUNDED driver artifact (the
-    * centroid/codebook pattern): pass 1 executes ONCE and collects the
-    * (|sheet| × fbDocs) feedback set; its doc-id list pushes down into the
-    * scan that reads the feedback documents' FULL term distributions (the
-    * expansion source — the whole point is terms OUTSIDE the query
-    * vocabulary, so pass 1's pruned postings cannot supply them); the
-    * expanded weight sheet ((|sheet| × (qlen + fbTerms))-bounded) is
-    * assembled driver-side and enters the second scoring pass as literals —
-    * the same pass as [[bm25TopK]]'s ([[bm25TopKOn]]: in-row sheet-pruned
-    * tf, [[scoreTail]]'s dense slot kernel), with
-    * the RM3 weight rescale.
+    * centroid/codebook pattern): the query side and the corpus stats come
+    * from one narrow scan ([[queryScan]]); pass 1 executes ONCE and
+    * collects the (|sheet| × fbDocs) feedback set; its doc-id list pushes
+    * down into the narrow scan that collects the feedback documents' FULL
+    * term distributions (the expansion source — the whole point is terms
+    * OUTSIDE the query vocabulary, so pass 1's pruned postings cannot
+    * supply them); the expanded weight sheet ((|sheet| × (qlen +
+    * fbTerms))-bounded) is assembled on the driver ([[rm3WeightSheet]])
+    * and enters the second scoring pass as literals — the same pass as
+    * [[bm25TopK]]'s ([[bm25TopKOn]]: in-row sheet-pruned tf,
+    * [[scoreTail]]'s dense slot kernel), with the RM3 weight rescale.
     *
     * Determinism / oracle parity: RM1 contributions are rounded to 9 dp and
     * DECIMAL-summed (x19's trick), then carried as exact integer NANO-units;
@@ -747,123 +808,120 @@ object Retrieval {
     * contributions are the exact DECIMAL product `bm25_term(14,6) ×
     * wt_micro`, summed exactly, divided by 10⁶ once at the end.
     *
-    * EAGER-SNAPSHOT SEMANTICS (API contract): the query-sheet collect, the
-    * one-row corpus stats, pass 1 and the weight sheet run as Spark jobs AT
-    * CONSTRUCTION TIME and freeze into plan literals — the returned frame
-    * is pass 2 only. Treat it as single-shot over an immutable input: if
-    * the `docs` source changes between construction and execution (or the
-    * frame is re-executed later over changed data), pass 2 scores the NEW
-    * corpus against the STALE frozen feedback/weights with
-    * no warning. Same contract as every bounded-driver-artifact operator
-    * here (centroids, codebooks, [[Similarity.mmrTopK]]'s pool). */
+    * EAGER-SNAPSHOT SEMANTICS (API contract): the query-side scan (sheet
+    * and corpus stats), pass 1 and the feedback documents' terms run as
+    * Spark jobs AT CONSTRUCTION TIME — three actions — and freeze into
+    * plan literals: the returned frame is pass 2 only. Treat it as
+    * single-shot over an immutable input: if the `docs` source changes
+    * between construction and execution (or the frame is re-executed later
+    * over changed data), pass 2 scores the NEW corpus against the STALE
+    * frozen stats/feedback/weights with no warning. Same contract as every
+    * bounded-driver-artifact operator here (centroids, codebooks,
+    * [[Similarity.mmrTopK]]'s pool). */
   def rm3TopK(docs: DataFrame, queryMod: Long = QueryMod,
       k: Int = DefaultTopK, fbDocs: Int = Rm3FbDocs,
       fbTerms: Int = Rm3FbTerms): DataFrame = {
     val isQuery = querySheetCol(queryMod)
     val corpus = docs.filter(!isQuery)
-    val sheet1 = collectSheet(docs.filter(isQuery))
-
-    // corpus stats collected ONCE (a one-row driver artifact): both scoring
-    // passes need (N, avgdl), and the lazy crossJoin form re-ran the narrow
-    // stats scan inside each pass's job — one full corpus scan of the ~5
-    // the chain pays, removed (r16 stage-count sweep). An EMPTY corpus has
-    // NULL avgdl (sum/count of nothing); fall back to the lazy crossJoin
-    // there so the degenerate input keeps returning an empty frame instead
-    // of NPE-ing at construction (r16 review find)
-    val statsRow = corpusStats(corpus).collect()(0)
-    val st = if (statsRow.isNullAt(1)) None
-      else Some((statsRow.getLong(0), statsRow.getDouble(1)))
-
-    // pass 1, executed ONCE: the feedback set is (|sheet| × fbDocs)-bounded,
-    // so it collects to a driver artifact (the centroid/codebook pattern) —
-    // leaving it lazy would re-run the whole ranked BM25 pass once per
-    // consumer below (measured: three instantiations in the physical plan).
-    val fbRows: Array[(Long, Long, Double)] =
-      bm25TopKOn(corpus, sheet1, fbDocs, st)
-        .select(col("query_id"), col("doc_id"), col("score"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-
-    // feedback docs' FULL term distributions (the expansion source): the
-    // bounded id list becomes an isin literal the parquet scan pushes down
-    val fbIds = fbRows.map(_._2).distinct.toSeq
-    val fbtf = termFreqs(corpus.filter(col("doc_id").isin(fbIds: _*)), None)
-
-    val wsheet = rm3WeightSheet(fbRows, fbtf,
-      origWeights(docs.filter(isQuery)), fbTerms)
-
+    val (qterms, stats) = queryScan(docs, isQuery)
+    val wsheet = rm3Feedback(
+      bm25TopKOn(corpus, sheetOf(qterms), fbDocs, stats),
+      ids => termFreqs(corpus.filter(col("doc_id").isin(ids: _*)), None),
+      qterms, fbTerms)
     // pass 2: the BM25 pass under the expanded, weighted sheet
-    bm25TopKOn(corpus, wsheet, k, st, rm3Scale = true)
+    bm25TopKOn(corpus, wsheet, k, stats, rm3Scale = true)
   }
 
-  /** The shared RM3 weight-sheet assembly ([[rm3TopK]] ↔
-    * [[rm3TopKAgainst]]): from the collected pass-1 feedback set, the
-    * feedback documents' full term distributions, and the original-query
-    * term weights, build the interpolated `(qid, w, wt)` micro-unit sheet
-    * as a COLLECTED driver artifact — (|sheet| × (qlen + fbTerms))-bounded,
-    * grouped per query for [[scoreTail]]'s dense kernel. Per-query score
-    * normalizers sum exactly in BigDecimal: each score is a
-    * DECIMAL(14,6)-cast double, ≤ 14 significant digits, so
-    * BigDecimal.valueOf (via Double.toString) recovers the exact decimal
-    * the oracle's SUM(CAST(score AS DECIMAL(14,6))) adds. RM1 mass is 9-dp
-    * rounded + DECIMAL-summed into exact integer nano-units; both
-    * interpolation halves are exact integer half-up micro divisions (see
-    * [[rm3TopK]]'s determinism note). */
-  private def rm3WeightSheet(
-      fbRows: Array[(Long, Long, Double)], fbtf: DataFrame,
-      orig: DataFrame, fbTerms: Int): Seq[(Long, Seq[(String, Long)])] = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = fbtf.sparkSession
-    import spark.implicits._
+  /** The RM3 feedback step [[rm3TopK]] and [[rm3TopKAgainst]] share, two
+    * driver collects: pass 1, executed ONCE — the feedback set is (|sheet| ×
+    * fbDocs)-bounded, so it collects to a driver artifact (leaving it lazy
+    * would re-run the whole ranked BM25 pass once per consumer; measured:
+    * three instantiations in the physical plan) — then the feedback
+    * documents' term rows, `feedbackTerms(ids)` (the bounded id list
+    * becomes an `isin` literal the scan pushes down), into the driver-built
+    * weight sheet. */
+  private def rm3Feedback(pass1: DataFrame,
+      feedbackTerms: Seq[Long] => DataFrame, qterms: Seq[TermRow],
+      fbTerms: Int): Sheet = {
+    val fbRows = pass1.select(col("query_id"), col("doc_id"), col("score"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val fbIds = fbRows.map(_._2).distinct
+    rm3WeightSheet(fbRows,
+      if (fbIds.isEmpty) Nil else collectTerms(feedbackTerms(fbIds)),
+      qterms, fbTerms)
+  }
+
+  /** The interpolated RM3 weight sheet, built on the driver from bounded
+    * inputs: the pass-1 feedback set `(qid, doc_id, score)`, the feedback
+    * documents' term rows and the query documents' term rows. Output: per
+    * query, its `(w, wt)` micro-unit weights, grouped for [[scoreTail]]'s
+    * dense kernel — (|sheet| × (qlen + fbTerms))-bounded.
+    *
+    * EXACTNESS RULES — every step is the integer or double operation the
+    * Spark chain this replaced (pinned against it, kept as a referee in
+    * test code) and the oracle evaluate:
+    *  - per-query score normalizers sum exactly in BigDecimal: each score
+    *    is a DECIMAL(14,6)-cast double, ≤ 14 significant digits, so
+    *    BigDecimal.valueOf (via Double.toString) recovers the exact
+    *    decimal the oracle's SUM(CAST(score AS DECIMAL(14,6))) adds;
+    *  - each RM1 contribution is `round(round(snorm·(tf/dl), 9)·10⁹, 0)`
+    *    nano-units, with `round` Spark's double rounding ([[roundHalfUp]]:
+    *    decimal HALF_UP on the double's shortest decimal form, not
+    *    `Math.round`, which rounds the binary value) and an ANSI-checked
+    *    long conversion; a feedback document shared by two queries counts
+    *    once for each;
+    *  - the top `fbTerms` terms per query rank by (mass desc, term asc)
+    *    with terms in UTF-8 byte order (`UTF8String.compareTo`, Spark's
+    *    string order; `String.compareTo` compares UTF-16 units, which
+    *    disagree past the BMP);
+    *  - the original side is `(10⁶·tf + dl) div (2·dl)` per query term row
+    *    (rows of a repeated query `doc_id` add up), the RM1 side
+    *    `(rw + 1000) div 2000`, and a term on both sides sums the two;
+    *  - every sum and product is `Math.addExact`/`multiplyExact`: an
+    *    overflow throws, as the ANSI arithmetic does. */
+  private[corpus] def rm3WeightSheet(fbRows: Seq[(Long, Long, Double)],
+      fbTf: Seq[TermRow], qterms: Seq[TermRow], fbTerms: Int): Sheet = {
     val ssum: Map[Long, Double] = fbRows.groupBy(_._1).map { case (q, rs) =>
       q -> rs.map(r => BigDecimal.valueOf(r._3)).sum.toDouble
     }
-    val fbSnorm = fbRows.toSeq
-      .map { case (q, d, s) => (q, d, s / ssum(q)) }
-      .toDF("qid", "doc_id", "snorm")
-    // RM1: per-(query, term) relevance-model mass, 9-dp rounded + exact
-    // sum, kept as exact integer nano-units (the half-micro tie note).
-    // Each contribution converts to its exact nano integer BEFORE the sum
-    // (the scoreAndRank long-kernel note: the 9-dp grid value ≤ 1 recovers
-    // exactly under round(·10⁹)), so the aggregate is a plain long sum —
-    // identical integers to the decimal(22,9) sum × 10⁹ it replaces,
-    // without the per-row BigDecimal adds. Bounds: ≤ fbDocs rows of ≤ 10⁹
-    // nano each per group.
-    val rm1 = fbtf.join(broadcast(fbSnorm), "doc_id")
-      .select(col("qid"), col("w"),
-        round(round(col("snorm") * (col("tf") / col("dl").cast("double")), 9)
-          * 1e9, 0).cast("long").as("c"))
-      .groupBy(col("qid"), col("w"))
-      .agg(sum(col("c")).as("rw_nano"))
-    val topm = rm1.withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("rw_nano").desc, col("w"))))
-      .filter(col("rn") <= fbTerms)
-      .select(col("qid"), col("w"), col("rw_nano"))
-    // interpolated weight sheet, collected to a DRIVER artifact in one
-    // action: topm is (|sheet| × fbTerms)-bounded and orig (|sheet| ×
-    // query-length)-bounded, and leaving the union lazy would re-run the
-    // fbtf chain once per consumer (the vocabulary prune AND the scoring
-    // join both read it). Built as a UNION + sum, not a full-outer join
-    // (full outer cannot broadcast — it would be the plan's only
-    // sort-merge join). The RM1 half is the integer half-up (rw_nano/2000)
-    // — never a double round.
-    orig.select(col("qid"), col("w"), col("om").as("m"))
-      .unionByName(topm.select(col("qid"), col("w"),
-        expr("(rw_nano + 1000L) div 2000L").as("m")))
-      .groupBy(col("qid"), col("w")).agg(sum(col("m")).as("wt"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-      .toSeq.groupBy(_._1).toSeq
-      .map { case (q, rs) => (q, rs.map(r => (r._2, r._3))) }
+    val tfByDoc = fbTf.groupBy(_.docId)
+    val rm1 = scala.collection.mutable.HashMap.empty[(Long, String), Long]
+    for ((q, d, s) <- fbRows; snorm = s / ssum(q); t <- tfByDoc.getOrElse(d, Nil)) {
+      val c = ansiLong(roundHalfUp(
+        roundHalfUp(snorm * (t.tf.toDouble / t.dl.toDouble), 9) * 1e9, 0))
+      rm1((q, t.w)) = Math.addExact(rm1.getOrElse((q, t.w), 0L), c)
+    }
+    val byMassThenBytes = Ordering.fromLessThan[(String, Long)] {
+      case ((a, ma), (b, mb)) => ma > mb || ma == mb &&
+        UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+    }
+    val wt = scala.collection.mutable.HashMap.empty[(Long, String), Long]
+    def add(q: Long, w: String, m: Long): Unit =
+      wt((q, w)) = Math.addExact(wt.getOrElse((q, w), 0L), m)
+    qterms.foreach { t =>
+      add(t.docId, t.w, Math.addExact(Math.multiplyExact(1000000L, t.tf),
+        t.dl.toLong) / (2L * t.dl))
+    }
+    rm1.toSeq.groupBy(_._1._1).foreach { case (q, ms) =>
+      ms.map { case ((_, w), m) => (w, m) }.sorted(byMassThenBytes).take(fbTerms)
+        .foreach { case (w, m) => add(q, w, Math.addExact(m, 1000L) / 2000L) }
+    }
+    wt.toSeq.groupBy(_._1._1).toSeq.sortBy(_._1)
+      .map { case (q, ws) => q -> ws.map { case ((_, w), m) => (w, m) }.sortBy(_._1) }
   }
 
-  /** Original-query term distribution as exact integer micro half-weights:
-    * `(10⁶·qtf + qlen) div (2·qlen)` with qtf = [[termFreqs]]' `tf` and
-    * qlen its `dl` — the integer half-up division (x78 discipline; a double
-    * `round(qtf/qlen/2, 6)` can land on a half-micro tie where the engines'
-    * rounding disagrees). */
-  private def origWeights(queryDocs: DataFrame): DataFrame =
-    termFreqs(queryDocs, None)
-      .select(col("doc_id").as("qid"), col("w"),
-        expr("(1000000L * tf + dl) div (2L * dl)").as("om"))
+  /** Spark's `round(x, scale)` on a double: HALF_UP on the decimal the
+    * double prints as (`BigDecimal.valueOf`), NaN and infinities as is. */
+  private def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** The ANSI double → long cast: out-of-range and NaN throw. */
+  private def ansiLong(x: Double): Long =
+    if (math.floor(x) <= Long.MaxValue.toDouble &&
+        math.ceil(x) >= Long.MinValue.toDouble) x.toLong
+    else throw new ArithmeticException(s"$x cannot be cast to BIGINT")
 
   /** Corpus-side BM25 POSTINGS — the classic inverted index: one row per
     * (document, term) with the term frequency and the document's length,
@@ -912,25 +970,23 @@ object Retrieval {
     * bounded aggregate/rank shuffles (spec-pinned plan shape).
     *
     * Construction runs three Spark actions, the [[rm3TopK]] eager-snapshot
-    * contract: the query-sheet collect, pass 1's feedback collect and the
-    * weight-sheet collect. The returned frame is pass 2 only. */
+    * contract: the query-sheet read ([[queryTerms]]), pass 1's feedback
+    * collect and the feedback documents' postings collect; the weight
+    * sheet is assembled on the driver ([[rm3WeightSheet]]). The returned
+    * frame is pass 2 only. */
   def rm3TopKAgainst(postings: DataFrame, index: DataFrame,
       queryDocs: DataFrame, k: Int = DefaultTopK, fbDocs: Int = Rm3FbDocs,
       fbTerms: Int = Rm3FbTerms): DataFrame = {
-    val sheet1 = collectSheet(queryDocs)
-    // pass 1, executed ONCE and collected (rm3TopK's bounded-artifact note)
-    val fbRows: Array[(Long, Long, Double)] =
-      scoreTail(postings
-          .filter(map_contains_key(sheetVocabLit(sheet1), col("w")))
-          .join(index, "w"), sheet1, fbDocs, rm3Scale = false)
-        .select(col("query_id"), col("doc_id"), col("score"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val fbIds = fbRows.map(_._2).distinct.toSeq
-    val fbtf = postings.filter(col("doc_id").isin(fbIds: _*))
-    val wsheet = rm3WeightSheet(fbRows, fbtf, origWeights(queryDocs), fbTerms)
-    val tf2 = postings
-      .filter(map_contains_key(sheetVocabLit(wsheet), col("w")))
+    val qterms = queryTerms(queryDocs)
+    def probe(sheet: Sheet) = postings
+      .filter(map_contains_key(sheetVocabLit(sheet), col("w")))
       .join(index, "w")
-    scoreTail(tf2, wsheet, k, rm3Scale = true)
+    val sheet1 = sheetOf(qterms)
+    val wsheet = rm3Feedback(
+      scoreTail(probe(sheet1), sheet1, fbDocs, rm3Scale = false),
+      ids => postings.filter(col("doc_id").isin(ids: _*))
+        .select(col("doc_id"), col("dl"), col("w"), col("tf")),
+      qterms, fbTerms)
+    scoreTail(probe(wsheet), wsheet, k, rm3Scale = true)
   }
 }

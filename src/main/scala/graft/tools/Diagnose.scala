@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.jdk.CollectionConverters._
 
@@ -13,8 +14,9 @@ import scala.jdk.CollectionConverters._
   * optimization, physical planning, first execution, and a warm rerun timed
   * as `Bench` times it: construction + `count()`); the Spark jobs and stages
   * launched during construction and during execution, with each stage's
-  * wall time, task count and summed executor run time, and the Spark
-  * codegen compiles the phase caused; the final adaptive plan; and every
+  * wall time, task count and summed executor run time, the SQL executions
+  * (actions) that launched them, and the Spark codegen compiles the phase
+  * caused; the final adaptive plan; and every
   * operator's metrics as the SQL tab renders them, read from
   * the query's own execution in the SQL status store. Raw `SQLMetric.value`
   * misleads: an `average` metric is stored ×10 and summed over tasks, and an
@@ -30,12 +32,15 @@ object Diagnose {
   /** A completed stage: summed executor run time over its tasks. */
   final case class Stage(id: Int, name: String, tasks: Int, wallMs: Long, taskMs: Long)
 
-  /** Jobs started and stages completed inside one phase, and the Spark
-    * codegen compiles it ran (`CodegenMetrics.METRIC_COMPILATION_TIME`'s
-    * count: one per generated class compiled, a codegen-cache hit adds
-    * none). The count is JVM-wide — unlike the jobs it is not tagged — so a
+  /** Jobs started and stages completed inside one phase, the SQL
+    * executions it started (`actions`: one per Dataset action such as a
+    * construction-time `collect`, however many jobs AQE splits it into),
+    * and the Spark codegen compiles it ran
+    * (`CodegenMetrics.METRIC_COMPILATION_TIME`'s count: one per generated
+    * class compiled, a codegen-cache hit adds none). The compile count is
+    * JVM-wide — unlike the jobs and actions it is not tagged — so a
     * compile on another thread during the phase counts too. */
-  final case class Work(jobs: Int, stages: Seq[Stage], compiles: Long)
+  final case class Work(jobs: Int, actions: Int, stages: Seq[Stage], compiles: Long)
 
   /** One operator metric, `value` as the SQL tab shows it. */
   final case class Metric(nodeId: Long, operator: String, accumulatorId: Long,
@@ -44,24 +49,35 @@ object Diagnose {
   final case class Report(name: String, seconds: Seq[(String, Double)], build: Work,
       exec: Work, executionId: Long, plan: String, metrics: Seq[Metric])
 
-  private val PhaseKey = "graft.diagnose.phase"
+  private val PhaseTag = "graft.diagnose."
+
+  /** The job property holding a job's tags (`SparkContext.SPARK_JOB_TAGS`,
+    * private to Spark), comma-separated. */
+  private val JobTagsKey = "spark.job.tags"
 
   private def codegenCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  /** Counts the jobs and records the stages a phase launches. The phase
-    * tags them with a local property of its thread, which Spark copies onto
-    * every job the phase submits (from AQE's and broadcast threads, and any
-    * thread the phase makes), so jobs that other threads run on the same
-    * context are not counted. */
+  /** Counts the jobs and SQL executions and records the stages a phase
+    * launches. The phase tags them with a job tag of its thread, which
+    * Spark copies onto every SQL execution and job the phase submits (from
+    * AQE's and broadcast threads, and any thread the phase makes), so work
+    * that other threads run on the same context is not counted. */
   private final class Recorder(spark: SparkSession) extends SparkListener {
     private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    private val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
     private val stageTags = new java.util.concurrent.ConcurrentHashMap[Int, String]
     private val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Stage)]
-    private def tag(p: java.util.Properties): Option[String] =
-      Option(p).flatMap(p => Option(p.getProperty(PhaseKey)))
+    private def phaseOf(tags: Iterable[String]): Option[String] =
+      tags.collectFirst { case t if t.startsWith(PhaseTag) => t.stripPrefix(PhaseTag) }
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      tag(e.properties).foreach { t => jobs.add(t); e.stageIds.foreach(stageTags.put(_, t)) }
+      phaseOf(Option(e.properties).flatMap(p => Option(p.getProperty(JobTagsKey)))
+          .toSeq.flatMap(_.split(",")))
+        .foreach { t => jobs.add(t); e.stageIds.foreach(stageTags.put(_, t)) }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => phaseOf(s.jobTags).foreach(actions.add)
+      case _ =>
+    }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val i = e.stageInfo
       val wall = (for (s <- i.submissionTime; c <- i.completionTime) yield c - s)
@@ -73,11 +89,11 @@ object Diagnose {
     def during[A](phase: String)(f: => A): (A, Work) = {
       val sc = spark.sparkContext
       val compiles0 = codegenCompiles
-      sc.setLocalProperty(PhaseKey, phase)
-      val a = try f finally sc.setLocalProperty(PhaseKey, null)
+      sc.addJobTag(PhaseTag + phase)
+      val a = try f finally sc.removeJobTag(PhaseTag + phase)
       val compiles = codegenCompiles - compiles0
       GraftExpressionBridge.drainListenerBus(spark)
-      (a, Work(jobs.asScala.count(_ == phase),
+      (a, Work(jobs.asScala.count(_ == phase), actions.asScala.count(_ == phase),
         stages.asScala.collect { case (`phase`, s) => s }.toSeq, compiles))
     }
   }
@@ -128,7 +144,8 @@ object Diagnose {
     line(s"===== ${r.name} =====")
     line(r.seconds.map { case (k, v) => f"$k=$v%.3f" }.mkString("seconds: ", " ", ""))
     for ((phase, w) <- Seq("build" -> r.build, "exec" -> r.exec)) {
-      line(s"$phase: jobs=${w.jobs} stages=${w.stages.size} compiles=${w.compiles} " +
+      line(s"$phase: jobs=${w.jobs} actions=${w.actions} stages=${w.stages.size} " +
+        s"compiles=${w.compiles} " +
         s"wallSum=${w.stages.map(_.wallMs).sum}ms taskTimeSum=${w.stages.map(_.taskMs).sum}ms")
       w.stages.sortBy(-_.wallMs).take(12).foreach { s =>
         line(f"  s${s.id}%-5d ${s.wallMs}%6dms tasks=${s.tasks}%-4d " +

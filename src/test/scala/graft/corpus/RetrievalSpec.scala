@@ -103,8 +103,8 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers
     val plan = executed.toString
     // corpus tokens meet the collected sheet's vocabulary inside the tf
     // kernel before any shuffle — no broadcast build, no semi join, and
-    // the corpus-sized token stream must never sort-merge; the only join
-    // left is the one-row stats crossJoin
+    // the corpus-sized token stream must never sort-merge; the corpus
+    // stats enter as literals, so no join is left
     prunedTermFreqsBelowFirstExchange(executed)
     plan should not include "LeftSemi"
     plan should not include "SortMergeJoin"
@@ -238,7 +238,8 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers
   test("rm3 pass-2 plan: the sheet-pruned TermFreqs runs before any shuffle") {
     // what the returned frame's plan contains is ONLY pass 2: rm3TopK runs
     // pass 1 (bm25TopK — its plan is pinned by the bm25 plan test above)
-    // and the bounded fbtf/weights chain eagerly, as separate jobs. Pass 2
+    // and the feedback documents' term collect eagerly, as separate jobs,
+    // and builds the weight sheet on the driver. Pass 2
     // is the one corpus-scale plan a caller executes, so it is the one a
     // sort-merge join must never enter.
     import spark.implicits._

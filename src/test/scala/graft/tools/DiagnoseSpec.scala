@@ -83,7 +83,9 @@ class DiagnoseSpec extends AnyFunSuite with SparkSpec with Matchers
     r.exec.jobs should be > 0
     r.exec.jobs shouldBe jobs.toArray.count(_ == id)
     r.exec.stages.size shouldBe stages.toArray.count(_ == id)
+    r.exec.actions shouldBe 1
     r.build.jobs shouldBe 0
+    r.build.actions shouldBe 0
     r.build.stages shouldBe Nil
     r.plan should include("== Final Plan ==")
   }
@@ -103,5 +105,22 @@ class DiagnoseSpec extends AnyFunSuite with SparkSpec with Matchers
     for ((phase, w) <- Seq("build" -> first.build, "exec" -> first.exec))
       lines.exists(l => l.startsWith(s"$phase: ") &&
         l.contains(s" compiles=${w.compiles} ")) shouldBe true
+  }
+
+  test("report: a construction collect counts as an action, apart from its jobs") {
+    // two collects during construction: a shuffle-free one, and a groupBy
+    // whose AQE stages run as separate jobs of one action
+    val df = spark.range(0, 100, 1, 2).toDF().filter(col("id") > 3)
+    val r = Diagnose.report(spark, "collects", () => {
+      spark.range(0, 10, 1, 2).collect()
+      spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count().collect()
+      df
+    })
+    r.build.actions shouldBe 2
+    r.build.jobs should be > r.build.actions
+    r.exec.actions shouldBe 1
+    val lines = Diagnose.render(r).linesIterator.toSeq
+    for ((phase, w) <- Seq("build" -> r.build, "exec" -> r.exec))
+      lines.exists(l => l.startsWith(s"$phase: jobs=${w.jobs} actions=${w.actions} ")) shouldBe true
   }
 }
