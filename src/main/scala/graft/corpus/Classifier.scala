@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions._
   * Weights are a driver-held `Array[Long]` (≤ 64 k entries by the same bound
   * [[TextStats.importanceWeights]] enforces). Scoring is ONE stateless narrow
   * codegen-friendly projection — zero shuffles, zero state — so it composes
-  * unchanged onto a streaming DataFrame
-  * ([[graft.streaming.StreamOps.gateByQuality]]).
+  * unchanged onto a streaming DataFrame ([[qualityGate]] and
+  * [[paretoResample]] are pinned through live queries in `ClassifierSpec`).
   */
 object Classifier {
 
@@ -156,9 +156,9 @@ object Classifier {
 
   /** Margin + probability columns under a frozen model, as one narrow
     * stateless projection over `text` — the streaming-safe kernel
-    * [[scoreQualityLr]] and [[graft.streaming.StreamOps.gateByQuality]]
-    * share. Margin is the exact fixed-point value surfaced as a 6-dp double;
-    * prob its sigmoid, 6-dp.
+    * [[scoreQualityLr]], [[qualityGate]] and [[paretoResample]] share.
+    * Margin is the exact fixed-point value surfaced as a 6-dp double; prob
+    * its sigmoid, 6-dp.
     *
     * The margin's 8-dp→6-dp rounding runs as INTEGER half-away-from-zero
     * division, never `round(double)`: the micro margin is an exact integer,
@@ -259,11 +259,11 @@ object Classifier {
   /** Persist a trained model — the classifier plane's member of the
     * persisted-artifact family (`writeBm25Index`, `writeIvfPqIndex`,
     * `writeAssignedIndex`, `writeDedupIndex`): train once on a corpus
-    * snapshot, then [[readLrModel]] + [[qualityGate]] /
-    * [[graft.streaming.StreamOps.gateByQuality]] score every later batch or
-    * stream without retraining. Layout: one row per bucket `(b, w)` plus the
-    * bias as pseudo-bucket −1 (the gradient aggregate's own convention) —
-    * `buckets + 1` rows total, a trivially small single-file table. */
+    * snapshot, then [[readLrModel]] + [[qualityGate]] score every later
+    * batch or stream without retraining. Layout: one row per bucket
+    * `(b, w)` plus the bias as pseudo-bucket −1 (the gradient aggregate's
+    * own convention) — `buckets + 1` rows total, a trivially small
+    * single-file table. */
   def writeLrModel(spark: org.apache.spark.sql.SparkSession,
       model: LrModel, path: String): Unit = {
     // fail at the point the invalid artifact would be CREATED, not in some

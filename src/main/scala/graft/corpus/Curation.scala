@@ -1171,26 +1171,6 @@ object Curation {
     bucketed.groupBy(col("lang"), col("bucket"))
       .agg(min(col("s")).as("min_s"))
 
-  /** Driver-side form of [[ccnetBoundaries]] for the streaming twin
-    * ([[graft.streaming.StreamOps.assignBuckets]]): language → boundary
-    * scores indexed by bucket (position i holds bucket i+1's minimum).
-    * Bounded (n_langs × k doubles) — NTILE fills tiles from 1 up, so the
-    * present buckets are a contiguous prefix, pinned loudly here. A NULL
-    * language group is dropped: a NULL-lang join key never matches in the
-    * batch assigner either (SQL null-join semantics), so both paths send
-    * such documents to the tail. */
-  def boundaryArtifact(bounds: DataFrame): Map[String, Seq[Double]] =
-    bounds.collect()
-      .filter(_.getAs[String]("lang") != null)
-      .groupBy(_.getAs[String]("lang"))
-      .map { case (lang, rows) =>
-        val sorted = rows.sortBy(_.getAs[Long]("bucket"))
-        require(sorted.map(_.getAs[Long]("bucket")).toSeq ==
-          (1L to sorted.length).toSeq,
-          s"boundaryArtifact: non-contiguous buckets for lang=$lang")
-        lang -> sorted.map(_.getAs[Double]("min_s")).toSeq
-      }
-
   /** X86 — incremental CCNet bucketing: assign ARRIVING documents to the
     * quality buckets of a frozen reference run without re-ranking the
     * reference corpus — the x40/x51/x84 incremental pattern applied to the
@@ -1422,8 +1402,8 @@ object Curation {
     * Scale shape: TWO codegen'd kernel calls per row
     * ([[graft.functions.UrlNormalize]] / [[graft.functions.UrlDomain]],
     * each one linear parse) — zero shuffles, zero state; composes
-    * unchanged under Structured Streaming
-    * ([[graft.streaming.StreamOps.gateByDomain]]).
+    * unchanged under Structured Streaming ([[domainGate]], which runs
+    * it, is pinned through a live query in `UrlPlaneSpec`).
     *
     * WHY fused expressions and not a declarative staged projection (the
     * [[graft.functions.Bm25GateScore]] doctrine, second sighting — full
@@ -1482,8 +1462,8 @@ object Curation {
     * scale). A crawl-scale blocklist (e.g. every domain seen in an abuse
     * feed) composes instead as a broadcast left-semi/anti join on
     * `domain` — same column, same dispositions, different build. Narrow
-    * and stateless, so it rides Structured Streaming unchanged
-    * ([[graft.streaming.StreamOps.gateByDomain]]). */
+    * and stateless, so it rides Structured Streaming unchanged (pinned
+    * through a live query in `UrlPlaneSpec`). */
   def domainGate(docs: DataFrame,
       blocklist: Seq[String] = DefaultDomainBlocklist,
       allowlist: Seq[String] = Seq.empty,

@@ -123,10 +123,10 @@ object Quantization {
   }
 
   /** (vec_id, [passthrough...,] codes ARRAY<INT>) for every non-degenerate,
-    * dimension-matching vector — one narrow stateless projection,
-    * streaming-safe ([[graft.streaming.StreamOps.encodeEmbeddings]] routes
-    * arriving vectors through it unchanged); `passthrough` columns ride the
-    * same projection. */
+    * dimension-matching vector — one narrow stateless projection, so it
+    * encodes arriving vectors on a streaming frame unchanged (pinned
+    * through a live query in `QuantizationSpec`); `passthrough` columns
+    * ride the same projection. */
   def encoded(emb: DataFrame, codebooks: Array[Array[Array[Double]]],
       dim: Int = DefaultDim): DataFrame = encoded(emb, codebooks, dim, Nil)
 
@@ -477,9 +477,9 @@ object Quantization {
 
   /** The IVF-PQ index table, (vec_id, cid, codes): ONE narrow pass computes
     * the cell id ([[graft.functions.BestMatch]]) and the PQ codes
-    * ([[graft.functions.PqEncode]]) — stateless and streaming-safe
-    * ([[graft.streaming.StreamOps.indexEmbeddings]] runs it per
-    * micro-batch to keep a persisted index current). */
+    * ([[graft.functions.PqEncode]]) — stateless, so it runs per
+    * micro-batch on a streaming frame unchanged and keeps a persisted
+    * index current (pinned through a live query in `QuantizationSpec`). */
   def ivfPqIndex(emb: DataFrame, cbs: Array[Array[Array[Double]]],
       centroids: Seq[(Long, Seq[Double])], dim: Int = DefaultDim): DataFrame = {
     require(centroids.nonEmpty, "ivfPqIndex: empty centroid table")
@@ -714,8 +714,8 @@ object Quantization {
   /** [[sq8Codes]]'s array-shaped production twin: (vec_id, passthrough…,
     * codes ARRAY<BIGINT>) per HEALTHY vector against caller-held stats —
     * the [[encoded]] shape for SQ8, one stateless narrow projection, so it
-    * composes unchanged onto a streaming frame
-    * ([[graft.streaming.StreamOps]]); degenerate/mis-dimensioned vectors
+    * composes unchanged onto a streaming frame (pinned through a live
+    * query in `QuantizationSpec`); degenerate/mis-dimensioned vectors
     * drop (nothing reconstructable can enter the code table). */
   def sq8Encoded(emb: DataFrame, mins: Array[Double], diffs: Array[Double],
       dim: Int = DefaultDim, passthrough: Seq[String] = Nil): DataFrame = {

@@ -147,8 +147,8 @@ object Robots {
     * per row — no per-rule row explosion on the corpus side, no
     * re-aggregation, no join-back; columns pass through untouched.
     * Stateless given the frozen rule table, so it rides Structured
-    * Streaming as a stream-static join unchanged
-    * ([[graft.streaming.StreamOps.gateByRobotsTxt]]). A curated-crawl
+    * Streaming as a stream-static join unchanged (pinned through a live
+    * query in `RobotsSpec`). A curated-crawl
     * rule table small enough to broadcast composes with a broadcast
     * hint on `rules`; web-scale (~10⁸ domains) stays a shuffle join. */
   def robotsTxtGate(docs: DataFrame, rules: DataFrame,
@@ -335,8 +335,8 @@ object Robots {
     * url_norm-keyed left join against the BUCKETED persisted index
     * (index side never re-shuffles — the x112 discipline); stateless
     * given the frozen index, so it rides Structured Streaming as a
-    * stream-static join unchanged ([[graft.streaming.StreamOps
-    * .discoverFromSitemaps]]). */
+    * stream-static join unchanged (pinned through a live query in
+    * `SitemapSpec`). */
   def sitemapDiscovery(entries: DataFrame, fetched: DataFrame): DataFrame =
     Curation.normalizeUrl(
         entries.withColumnRenamed("domain", "sm_domain"), "loc_raw")

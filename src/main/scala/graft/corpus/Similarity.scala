@@ -67,14 +67,9 @@ object Similarity {
 
   private def dotp(a: Column, b: Column): Column = graft.functions.VectorOps.dotp(a, b)
 
-  /** Public [[normalizedBase]] view for the streaming twins
-    * ([[graft.streaming.StreamOps.topKNeighbors]]): (vec_id, e) with `e`
+  /** Public [[normalizedBase]] view: (vec_id, e) with `e`
     * unit-normalized, degenerate vectors surfacing as NULL. */
   def normalizedCorpus(emb: DataFrame): DataFrame = normalizedBase(emb)
-
-  /** The shared embedding→ARRAY<DOUBLE> cast, public for streaming twins
-    * that normalize a query column outside [[normalizedBase]]'s shape. */
-  def toDoubleVec(c: Column): Column = toDouble(c)
 
   /** Exact top-k cosine neighbors for each query vector (vec_id < numQueries),
     * excluding self; rank ties broken by neighbor id. */

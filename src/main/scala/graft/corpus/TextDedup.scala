@@ -348,10 +348,8 @@ object TextDedup {
       .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
 
   /** The (band, bucket) struct array for a signature column — the ONE place
-    * banding geometry lives, shared by the batch index build and the
-    * streaming twin (`StreamOps.flagNearDupCandidates`) so their buckets can
-    * never drift. */
-  private[graft] def bandStructs(sig: org.apache.spark.sql.Column,
+    * banding geometry lives. */
+  private def bandStructs(sig: org.apache.spark.sql.Column,
       numHashes: Int, bands: Int): org.apache.spark.sql.Column = {
     // loud geometry guard: bands > numHashes gives rows = 0, making every
     // band's slice EMPTY — all documents hash to one constant bucket and the
@@ -372,9 +370,8 @@ object TextDedup {
   /** The persisted dedup index: every document's LSH band buckets,
     * `(doc_id, band, bucket)` — what a production deployment writes out
     * (bucketed by (band, bucket)) so that increments ([[incrementalDedup]])
-    * and ingest streams (`StreamOps.flagNearDupCandidates`) join against the
-    * index instead of recomputing the corpus side. Narrow end to end: the
-    * signature is a compiled per-row pass and the banding an explode of a
+    * join against the index instead of recomputing the corpus side. Narrow
+    * end to end: the signature is a compiled per-row pass and the banding an explode of a
     * per-row struct array — building the index never shuffles the corpus. */
   def dedupIndex(docs: DataFrame, n: Int = 3, numHashes: Int = 64,
       bands: Int = 16): DataFrame =
@@ -1115,8 +1112,8 @@ object TextDedup {
   /** A probe-mode/vocabulary mismatch must fail at CONSTRUCTION, not as an
     * ANSI cast error deep in the query (or, ANSI off, a silent zero-match
     * no-op scrub — the exact silent-degrade class this library loud-fails).
-    * Shared by the batch scrubber and the streaming twin. */
-  private[graft] def requireVocabMode(refGrams: DataFrame,
+    * Every `*Against` probe of a span or line vocabulary checks it. */
+  private def requireVocabMode(refGrams: DataFrame,
       hashGrams: Boolean, who: String): Unit = {
     val gType = refGrams.schema("g").dataType
     val expected: org.apache.spark.sql.types.DataType =
@@ -1128,12 +1125,10 @@ object TextDedup {
         " vocabulary was built")
   }
 
-  /** The span-window gram expression itself — ONE definition shared by the
-    * batch scrubbers (via [[positionalGrams]]) and the streaming twin
-    * (`StreamOps.scrubSpansAgainst`) so their gram universes cannot drift.
+  /** The span-window gram expression itself, behind [[positionalGrams]].
     * Caller must pre-filter `size(ws) >= spanTokens`: `sequence`'s default
     * step walks DOWNWARD when stop < start. */
-  private[graft] def spanGrams(ws: Column, spanTokens: Int): Column =
+  private def spanGrams(ws: Column, spanTokens: Int): Column =
     transform(sequence(lit(1), size(ws) - lit(spanTokens - 1)),
       i => array_join(slice(ws, i, lit(spanTokens)), " "))
 
@@ -1679,15 +1674,13 @@ object TextDedup {
         isDup.as("is_dup"): _*)
   }
 
-  /** The x80 verdict kernel, shared by [[editVerify]] and the streaming twin
-    * (`StreamOps.verifyNearDupsAgainst`) so the two can never drift —
-    * returns `(max_len, lev, is_dup)` for a text pair, with the loud
-    * out-of-sync gate (`missing` → `raise_error(msg)`) folded into EVERY
-    * returned column: Catalyst prunes unreferenced projections, so a gate
+  /** The x80 verdict kernel [[editVerify]] applies: `(max_len, lev,
+    * is_dup)` for a text pair, with the loud out-of-sync gate
+    * (`missing` → `raise_error(msg)`) folded into EVERY returned column: Catalyst prunes unreferenced projections, so a gate
     * riding only one column would silently vanish for consumers that read
     * the others. The verified-prefix cap and the length-difference
     * prefilter live in the banded twin, [[editVerdictColsBanded]]. */
-  private[graft] def editVerdictCols(newText: Column, oldText: Column,
+  private def editVerdictCols(newText: Column, oldText: Column,
       missing: Column, msg: Column): (Column, Column, Column) = {
     def gated(c: Column) =
       when(missing, raise_error(msg).cast("long")).otherwise(c)
@@ -1716,7 +1709,7 @@ object TextDedup {
     * verified-prefix cost cap for heavy-tailed document lengths; max_len,
     * lev, and is_dup all read on the capped texts (a documented
     * approximation, not a hidden one). */
-  private[graft] def editVerdictColsBanded(newText: Column, oldText: Column,
+  private def editVerdictColsBanded(newText: Column, oldText: Column,
       missing: Column, msg: Column, capChars: Int = 0): (Column, Column, Column) = {
     def capped(c: Column) =
       if (capChars > 0) substring(c, 1, capChars) else c

@@ -391,7 +391,7 @@ object WebGraph {
     * map (map-sized right side, bucketable/broadcastable by deployment
     * size) plus narrow verdict arithmetic — stateless given the frozen
     * map, so it rides Structured Streaming as a stream-static join
-    * unchanged ([[graft.streaming.StreamOps.resolveRedirectsAgainst]]). */
+    * unchanged (pinned through a live query in `WebGraphSpec`). */
   def resolveRedirectsAgainst(docs: DataFrame, compiled: DataFrame,
       urlCol: String = "url"): DataFrame = {
     val m = compiled.select(col("url_norm").as("__g_key"),
@@ -419,8 +419,8 @@ object WebGraph {
     * [[compileRedirects]] + [[resolveRedirectsAgainst]] in one call (the
     * driver-row contract; production compiles once per crawl snapshot
     * and persists the map — url_norm-bucketed, the [[TextDedup
-    * .writeUrlIndex]] layout — for every consumer including the
-    * streaming twin). */
+    * .writeUrlIndex]] layout — for every consumer, streaming ones
+    * included). */
   def resolveRedirects(docs: DataFrame, redirects: DataFrame,
       maxHops: Int = RedirectHopCap, urlCol: String = "url",
       srcCol: String = "src_url", dstCol: String = "dst_url"): DataFrame =

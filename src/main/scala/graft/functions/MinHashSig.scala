@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   *
   * Going narrow also makes the signature streamable: a stateless projection
   * composes onto a streaming DataFrame, which the groupBy build (a streaming
-  * aggregation) cannot — see `StreamOps.flagNearDupCandidates`.
+  * aggregation) cannot.
   */
 case class MinHashSig(child: Expression, numHashes: Int)
     extends UnaryExpression {

@@ -16,29 +16,35 @@ package graft.util
   *    first failure while siblings run would leave their jobs detached —
   *    consuming the cluster with nothing awaiting them (the r17 review
   *    find on the card futures, kept as the shared rule here).
-  *  - On the first failure, CANCEL the siblings' Spark job groups rather
+  *  - On the first failure, CANCEL the siblings' Spark jobs rather
   *    than letting them burn to completion (the other half of the r17
   *    advice): a Spark job can't be killed through a Thread handle, but
-  *    `setJobGroup` is thread-local and `cancelJobGroup` reclaims the
+  *    `addJobTag` is thread-local and `cancelJobsWithTag` reclaims the
   *    cluster mid-stage — on a 1000-executor deployment a failed plane
   *    must not keep its siblings computing results nobody will read. The
   *    rethrown error is the TEMPORALLY first failure, not the lowest
   *    index: after a cancellation, sibling threads die with
   *    SparkException cancellation artifacts, and surfacing one of those
   *    instead of the root cause would misdirect the caller. Cancellation
-  *    is best-effort reclamation of IN-FLIGHT work: `cancelJobGroup`
+  *    is best-effort reclamation of IN-FLIGHT work: `cancelJobsWithTag`
   *    kills running jobs, so a sibling still planning/compiling its first
   *    job (or one that submits another afterwards) runs that job to
   *    completion — the settle-all join below bounds the damage either
   *    way, and correctness never depends on the cancel landing.
+  *  - Keep the CALLER's job group: each thread inherits the caller's
+  *    Spark local properties (job group, description, tags), so its jobs
+  *    stay in the caller's group — a caller's `cancelJobGroup` reaches
+  *    them and per-group accounting counts them. The per-call tag is
+  *    ADDED beside the inherited ones; a job group would replace the
+  *    caller's.
   */
 object DriverPar {
 
-  /** Run every thunk on its own daemon thread (each under its own Spark
-    * job group when a SparkContext is live), join them all, and return
-    * results in input order. On failure: cancel every sibling's job
-    * group, still join everything, then rethrow the temporally-first
-    * failure. */
+  /** Run every thunk on its own daemon thread (each with its own Spark
+    * job tag, inside the caller's job group, when a SparkContext is live),
+    * join them all, and return results in input order. On failure: cancel
+    * every sibling's tagged jobs, still join everything, then rethrow the
+    * temporally-first failure. */
   def settleAll[A](thunks: Seq[() => A]): Seq[A] = {
     val results = new Array[scala.util.Try[A]](thunks.size)
     // a live context is the normal case; tests without one still work.
@@ -52,8 +58,10 @@ object DriverPar {
       new java.util.concurrent.atomic.AtomicReference[Throwable](null)
     val threads = thunks.zipWithIndex.map { case (t, i) =>
       val th = new Thread(() => {
-        sc.foreach(_.setJobGroup(s"$tag-$i",
-          "graft concurrent driver action", interruptOnCancel = true))
+        sc.foreach { c =>
+          c.addJobTag(s"$tag-$i")
+          c.setInterruptOnCancel(true)
+        }
         // catch Throwable, not Try's NonFatal: a fatal error (OOM,
         // LinkageError) must still record, cancel siblings, and surface
         // as ITSELF — a null results slot would NPE in the final map and
@@ -67,7 +75,7 @@ object DriverPar {
           if (firstFailure.compareAndSet(null, e))
             sc.foreach { c =>
               thunks.indices.filter(_ != i)
-                .foreach(j => c.cancelJobGroup(s"$tag-$j"))
+                .foreach(j => c.cancelJobsWithTag(s"$tag-$j"))
             }
         }
         results(i) = r

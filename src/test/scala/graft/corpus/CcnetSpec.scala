@@ -162,59 +162,8 @@ class CcnetSpec extends AnyFunSuite with SparkSpec {
     assert(got == want)
   }
 
-  test("streaming assignBuckets is batch-equal to ccnetAssign through a " +
-      "live query (incl. unseen-language and all-OOV records)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import java.sql.Timestamp
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val frozen = docsDf((1L to 9L).map(i =>
-      (i, (Seq.fill(i.toInt)("hot") ++ Seq.fill(10 - i.toInt)(s"rare$i"))
-        .mkString(" "), "en")))
-    val lm = Curation.unigramLm(frozen)
-    val boundsDf = Curation.ccnetBoundaries(Curation.ccnetBuckets(frozen))
-    val bounds = Curation.boundaryArtifact(boundsDf)
-    val incoming = Seq(
-      (20L, "hot hot hot hot", "en"),     // head-grade
-      (21L, "rare1 rare2 rare3", "en"),   // tail-grade
-      (22L, "hot rare5 hot", "en"),       // middle-ish
-      (23L, "hot hot", "xx"),             // unseen language -> tail
-      (24L, "oov oov", "en"))             // all-OOV -> absent
-    val input = MemoryStream[(Timestamp, Long, String, String)]
-    val out = graft.streaming.StreamOps.assignBuckets(
-      input.toDF().toDF("ts", "doc_id", "lang", "text"), lm, bounds)
-    assert(out.isStreaming)
-    val sink = s"ccnet_${System.nanoTime}"
-    val q = out.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ccnettwin").toString)
-      .start()
-    try {
-      val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
-      input.addData(incoming.map(r => (t0, r._1, r._3, r._2)): _*)
-      q.processAllAvailable()
-      // advance the watermark so the aggregated rows finalize
-      input.addData((Timestamp.valueOf("2026-01-01 02:00:00"), 99L, "en",
-        "hot"))
-      q.processAllAvailable()
-      def key(r: org.apache.spark.sql.Row) = r.getAs[Long]("doc_id") ->
-        ((r.getAs[String]("lang"), r.getAs[Long]("n_tokens"),
-          r.getAs[Long]("n_known"), r.getAs[Double]("s"),
-          r.getAs[Long]("bucket")))
-      val streamed = s.table(sink).collect().map(key).toMap
-      val batch = Curation.ccnetAssign(
-        docsDf(incoming.map(r => (r._1, r._2, r._3))), lm, boundsDf)
-        .collect().map(key).toMap
-      assert(streamed == batch)
-      assert(!streamed.contains(24L))
-      assert(streamed(23L)._5 == 3L)
-    } finally q.stop()
-  }
-
-  test("a boundary artifact from a wider-k reference run fails loudly in " +
-      "both assigners instead of mixing two bucket scales") {
+  test("a boundary artifact from a wider-k reference run fails ccnetAssign " +
+      "loudly instead of mixing two bucket scales") {
     val frozen = docsDf((1L to 9L).map(i =>
       (i, (Seq.fill(i.toInt)("hot") ++ Seq.fill(10 - i.toInt)(s"rare$i"))
         .mkString(" "), "en")))
@@ -227,12 +176,6 @@ class CcnetSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains("frozen run used more buckets") ||
       Option(e.getCause).exists(_.getMessage
         .contains("frozen run used more buckets")))
-    val art5 = Curation.boundaryArtifact(bounds5)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.streaming.StreamOps.assignBuckets(incoming,
-        Curation.unigramLm(frozen), art5)
-    }
-    assert(e2.getMessage.contains("frozen run used more buckets"))
   }
 
   test("ccnetAssign: unseen language and below-every-boundary scores land " +

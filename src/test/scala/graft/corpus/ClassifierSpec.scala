@@ -303,7 +303,7 @@ class ClassifierSpec extends AnyFunSuite with SparkSpec with Matchers {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val model = Classifier.trainQualityLr(docsDf(corpus))
     val input = MemoryStream[(Long, String, String)]
-    val out = graft.streaming.StreamOps.resampleIngest(
+    val out = Classifier.paretoResample(
       input.toDF().toDF("doc_id", "source", "text"), model)
     out.isStreaming shouldBe true
     val sink = s"resample_${System.nanoTime}"
@@ -335,7 +335,7 @@ class ClassifierSpec extends AnyFunSuite with SparkSpec with Matchers {
     val model = Classifier.trainQualityLr(docsDf(corpus),
       positiveSources = Seq("src0", "src1"), buckets = 64, iterations = 2)
     val input = MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamOps.gateByQuality(
+    val out = Classifier.qualityGate(
       input.toDF().toDF("doc_id", "text"), model, tau = 0.5)
     out.isStreaming shouldBe true
     val sink = s"quality_${System.nanoTime}"

@@ -3,6 +3,7 @@ package graft.corpus
 import graft.SparkSpec
 import graft.multimodal.{FakeCodec, Media}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -978,6 +979,67 @@ class CorpusSpec extends AnyFunSuite with SparkSpec with Matchers {
     moved shouldBe out.map { case (k, v) => k -> v._2 }
   }
 
+  test("stateless curation ops run unchanged on a stream (chunk -> split, append mode)") {
+    // chunkDocuments and assignSplits are narrow, stateless transforms — the
+    // SAME operator code must compose onto a streaming DataFrame with no
+    // adaptation and no state store. This pins that property: a regression
+    // that introduces an aggregate/sort into them would fail analysis here.
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val input = MemoryStream[(Long, String, String)]
+    val chunked = graft.corpus.Curation.chunkDocuments(
+      input.toDF().toDF("doc_id", "text", "source"), chunkTokens = 3, stride = 2)
+    val split = graft.corpus.Curation.assignSplits(
+      input.toDF().toDF("doc_id", "text", "source"))
+    val entropy = graft.corpus.TextStats.charClassEntropy(
+      input.toDF().toDF("doc_id", "text", "source"))
+    val gate = graft.corpus.TextStats.qualityGate(
+      input.toDF().toDF("doc_id", "text", "source"))
+    chunked.isStreaming shouldBe true
+    split.isStreaming shouldBe true
+    entropy.isStreaming shouldBe true
+    gate.isStreaming shouldBe true
+    val sink = s"curation_${System.nanoTime}"
+    val q = chunked.writeStream.format("memory").queryName(sink)
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("curation").toString)
+      .start()
+    try {
+      input.addData((1L, "a b c d e", "src0"), (2L, "x y", "src1"))
+      q.processAllAvailable()
+      val rows = s.table(sink).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(4))).toSet
+      // doc 1 (5 tokens, window 3 stride 2): chunks at 0, 2 -> "a b c", "c d e"
+      rows shouldBe Set((1L, 0L, "a b c"), (1L, 1L, "c d e"), (2L, 0L, "x y"))
+    } finally q.stop()
+  }
+
+  test("streaming mix sampling: frozen rates gate an ingest stream deterministically") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val rates = Seq(("s0", 1.0), ("s1", 0.0)).toDF("source", "rate")
+    val input = MemoryStream[(Long, String, String)]
+    val out = graft.corpus.Curation.applyMixRates(
+      input.toDF().toDF("doc_id", "text", "source")
+        .join(org.apache.spark.sql.functions.broadcast(rates), "source"))
+    out.isStreaming shouldBe true
+    val sink = s"mixgate_${System.nanoTime}"
+    val q = out.writeStream.format("memory").queryName(sink)
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("mixgate").toString)
+      .start()
+    try {
+      input.addData((1L, "keep me", "s0"), (2L, "drop me", "s1"))
+      q.processAllAvailable()
+      // rate 1.0 keeps everything, rate 0.0 drops everything
+      s.table(sink).collect().map(_.getLong(0)).toSeq shouldBe Seq(1L)
+    } finally q.stop()
+  }
+
   test("PMI ranks an engineered collocation first and matches a brute-force referee") {
     import spark.implicits._
     // "aa bb" always adjacent (perfect collocation); "cc"/"dd" frequent but
@@ -1573,6 +1635,35 @@ class CorpusSpec extends AnyFunSuite with SparkSpec with Matchers {
     }
   }
 
+  test("per-epoch drift monitoring: unigramDrift runs unchanged in foreachBatch") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    // frozen reference snapshot (in production: the persisted current release)
+    val ref = Seq((1L, "a b c", "s0")).toDF("doc_id", "text", "source")
+    val input = MemoryStream[(Long, String, String)]
+    val epochs =
+      scala.collection.mutable.ArrayBuffer.empty[(Long, Map[String, Double])]
+    val q = input.toDF().toDF("doc_id", "text", "source").writeStream
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("driftmon").toString)
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, epochId: Long) =>
+        epochs += epochId -> graft.corpus.Profiling.unigramDrift(ref, df)
+          .collect().map(r => r.getString(0) -> r.getDouble(5)).toMap
+        ()
+      }
+      .start()
+    try {
+      input.addData((10L, "a b c", "s0")) // identical distribution
+      q.processAllAvailable()
+      input.addData((11L, "x y z", "s0")) // fully disjoint vocabulary
+      q.processAllAvailable()
+      val bySrc = epochs.toMap
+      bySrc(0L)("s0") shouldBe 0.0
+      bySrc(1L)("s0") shouldBe 1.0
+    } finally q.stop()
+  }
+
   test("embeddingDrift: identical snapshots are zero-shift, known moves hit closed forms") {
     import spark.implicits._
     def e(rows: (Long, Seq[Float], Int)*) =
@@ -1762,6 +1853,31 @@ class CorpusSpec extends AnyFunSuite with SparkSpec with Matchers {
         graft.functions.BloomGate.build(items, "s", 10, 0.01)
       graft.functions.BloomGate.build(items, "S", 10, 0.01).length should be > 8
     } finally spark.conf.set("spark.sql.caseSensitive", prev)
+  }
+
+  test("the bloom gate composes onto a stream as a stateless narrow filter") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    // blocklist folded to driver-held bytes once (batch side)
+    val blocked = Seq("bad line one", "bad line two").toDF("s")
+    val bloom = graft.functions.BloomGate.build(blocked, "s", 2, 0.01)
+    val input = MemoryStream[(Long, String)]
+    val out = input.toDF().toDF("doc_id", "text")
+      .filter(!graft.functions.BloomGate.mightContain(bloom,
+        org.apache.spark.sql.functions.col("text")))
+    out.isStreaming shouldBe true // a literal-foldable gate needs no state
+    val sink = s"bloomgate_${System.nanoTime}"
+    val q = out.writeStream.format("memory").queryName(sink)
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("bloomgate").toString)
+      .start()
+    try {
+      input.addData((1L, "bad line one"), (2L, "clean text"), (3L, "bad line two"))
+      q.processAllAvailable()
+      s.table(sink).collect().map(_.getLong(0)).toSeq shouldBe Seq(2L)
+    } finally q.stop()
   }
 
   test("lineScrub removes cross-document lines, keeps order, and matches a referee") {

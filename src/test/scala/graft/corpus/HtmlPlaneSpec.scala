@@ -384,7 +384,7 @@ class HtmlPlaneSpec extends AnyFunSuite with SparkSpec with Matchers {
     val rows = Seq(
       (1L, "<p>one two three four five six</p>" +
         "<nav><a href=\"/a\">all link words here now</a></nav>"))
-    val out = graft.streaming.StreamOps.extractContentBlocks(
+    val out = Html.contentBlocks(
       input.toDF().toDF("doc_id", "html"))
     out.isStreaming shouldBe true
     val sink = s"cblocks_${System.nanoTime}"
@@ -423,8 +423,7 @@ class HtmlPlaneSpec extends AnyFunSuite with SparkSpec with Matchers {
       (2L, "https://b.org/q", "<p>plain</p>"),
       (3L, "broken", "<META CONTENT=\"none\" NAME=\"ROBOTS\">"))
     def chain(df: org.apache.spark.sql.DataFrame) =
-      graft.streaming.StreamOps.gateByRobots(
-        graft.streaming.StreamOps.canonicalizeUrls(df))
+      Html.robotsGate(Html.canonicalKey(df))
     val out = chain(input.toDF().toDF("doc_id", "url", "html"))
     out.isStreaming shouldBe true
     val sink = s"robocanon_${System.nanoTime}"
@@ -460,7 +459,7 @@ class HtmlPlaneSpec extends AnyFunSuite with SparkSpec with Matchers {
     val rows = Seq(
       (1L, "<p>a &amp; b</p><script>x()</script>"),
       (2L, "<!-- gone --><p>c</p>"))
-    val out = graft.streaming.StreamOps.extractHtml(input.toDF()
+    val out = Html.extractText(input.toDF()
       .toDF("doc_id", "html"))
     out.isStreaming shouldBe true
     val sink = s"htmlx_${System.nanoTime}"

@@ -2,6 +2,7 @@ package graft.corpus
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -75,6 +76,94 @@ class QuantizationSpec extends AnyFunSuite with SparkSpec with Matchers {
     val cbs = Quantization.sliceCodebooks(d, 2, 2, 4)
     Quantization.encoded(d, cbs, 4).collect().map(_.getLong(0)).sorted shouldBe
       Array(0L, 1L, 4L)
+  }
+
+  test("streaming PQ encoding emits batch-equal codes and drops degenerates") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val corpus = (0L until 12L).map { i =>
+      (i, Array.tabulate(8)(j => (1.0 + ((i + j) % 5)).toFloat), 0)
+    }.toDF("vec_id", "embedding", "label")
+    val cbs = graft.corpus.Quantization.sliceCodebooks(corpus, 2, 4, 8)
+    val input = MemoryStream[(Long, Array[Float], String)]
+    val out = Quantization.encoded(
+      input.toDF().toDF("vec_id", "embedding", "source"), cbs, 8, Seq("source"))
+    out.isStreaming shouldBe true
+    val sink = s"pqenc_${System.nanoTime}"
+    val q = out.writeStream.format("memory").queryName(sink)
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("pqenc").toString)
+      .start()
+    try {
+      input.addData(
+        (100L, Array.tabulate(8)(j => (2.0 + j % 3).toFloat), "srcA"),
+        (101L, Array.fill(8)(0.0f), "srcB"),      // zero norm → dropped
+        (102L, Array.fill(4)(1.0f), "srcC"),      // wrong dim → dropped
+        (103L, Array.tabulate(8)(j => (1.0 + j % 5).toFloat), "srcD"))
+      q.processAllAvailable()
+      val rows = s.table(sink).collect()
+        .map(r => r.getAs[Long]("vec_id") ->
+          ((r.getAs[String]("source"), r.getSeq[Int](r.fieldIndex("codes")))))
+        .toMap
+      rows.keySet shouldBe Set(100L, 103L)
+      rows(100L)._1 shouldBe "srcA"
+      // streaming codes equal the BATCH encoder's bit-for-bit
+      val batch = graft.corpus.Quantization.encoded(
+        Seq((100L, Array.tabulate(8)(j => (2.0 + j % 3).toFloat), 0),
+          (103L, Array.tabulate(8)(j => (1.0 + j % 5).toFloat), 0))
+          .toDF("vec_id", "embedding", "label"), cbs, 8).collect()
+        .map(r => r.getAs[Long]("vec_id") -> r.getSeq[Int](1)).toMap
+      rows(100L)._2 shouldBe batch(100L)
+      rows(103L)._2 shouldBe batch(103L)
+    } finally q.stop()
+  }
+
+  test("streaming SQ8 encoding emits batch-equal codes and drops degenerates") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val corpus = (0L until 12L).map { i =>
+      (i, Array.tabulate(8)(j => (1.0 + ((i + j) % 5)).toFloat), 0)
+    }.toDF("vec_id", "embedding", "label")
+    val (mins, diffs) = graft.corpus.Quantization.sq8Stats(corpus, 8)
+    val input = MemoryStream[(Long, Array[Float], String)]
+    val out = Quantization.sq8Encoded(
+      input.toDF().toDF("vec_id", "embedding", "source"), mins, diffs, 8,
+      Seq("source"))
+    out.isStreaming shouldBe true
+    val sink = s"sq8enc_${System.nanoTime}"
+    val q = out.writeStream.format("memory").queryName(sink)
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("sq8enc").toString)
+      .start()
+    try {
+      input.addData(
+        (100L, Array.tabulate(8)(j => (2.0 + j % 3).toFloat), "srcA"),
+        (101L, Array.fill(8)(0.0f), "srcB"),      // zero norm → dropped
+        (102L, Array.fill(4)(1.0f), "srcC"),      // wrong dim → dropped
+        (103L, Array.tabulate(8)(j => (1.0 + j % 5).toFloat), "srcD"))
+      q.processAllAvailable()
+      val rows = s.table(sink).collect()
+        .map(r => r.getAs[Long]("vec_id") ->
+          ((r.getAs[String]("source"), r.getSeq[Long](r.fieldIndex("codes")))))
+        .toMap
+      rows.keySet shouldBe Set(100L, 103L)
+      rows(100L)._1 shouldBe "srcA"
+      // streaming codes equal the BATCH encoder's bit-for-bit
+      val batch = graft.corpus.Quantization.sq8Encoded(
+        Seq((100L, Array.tabulate(8)(j => (2.0 + j % 3).toFloat), 0),
+          (103L, Array.tabulate(8)(j => (1.0 + j % 5).toFloat), 0))
+          .toDF("vec_id", "embedding", "label"), mins, diffs, 8).collect()
+        .map(r => r.getAs[Long]("vec_id") -> r.getSeq[Long](1)).toMap
+      rows(100L)._2 shouldBe batch(100L)
+      rows(103L)._2 shouldBe batch(103L)
+      // codes must be in byte range — the storage contract
+      rows.values.flatMap(_._2).foreach { c =>
+        c should be >= 0L; c should be <= 255L }
+    } finally q.stop()
   }
 
   test("a degenerate seed inside the window compacts codeword indices") {
@@ -260,6 +349,47 @@ class QuantizationSpec extends AnyFunSuite with SparkSpec with Matchers {
     val scan = against.queryExecution.executedPlan.toString
     scan should include("PartitionFilters: [")
     scan should not include "PartitionFilters: []"
+  }
+
+  test("streaming IVF-PQ index maintenance emits batch-equal (cid, codes) rows") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val corpus = (0L until 12L).map { i =>
+      (i, Array.tabulate(8)(j => (1.0 + ((i + 2 * j) % 5)).toFloat), 0)
+    }.toDF("vec_id", "embedding", "label")
+    val Q = graft.corpus.Quantization
+    val cbs = Q.sliceCodebooks(corpus, 2, 4, 8)
+    val cents = Q.centroidSeeds(corpus, numCentroids = 4, dim = 8)
+    val input = MemoryStream[(Long, Array[Float])]
+    val out = Q.ivfPqIndex(
+      input.toDF().toDF("vec_id", "embedding"), cbs, cents, 8)
+    out.isStreaming shouldBe true
+    val sink = s"pqidx_${System.nanoTime}"
+    val q = out.writeStream.format("memory").queryName(sink)
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("pqidx").toString)
+      .start()
+    try {
+      val v200 = Array.tabulate(8)(j => (3.0 + j % 4).toFloat)
+      val v201 = Array.tabulate(8)(j => (1.0 + (j * j) % 5).toFloat)
+      input.addData((200L, v200), (201L, v201),
+        (202L, Array.fill(8)(0.0f)))   // degenerate → dropped
+      q.processAllAvailable()
+      val rows = s.table(sink).collect()
+        .map(r => r.getAs[Long]("vec_id") ->
+          ((r.getAs[Long]("cid"), r.getSeq[Int](r.fieldIndex("codes")))))
+        .toMap
+      rows.keySet shouldBe Set(200L, 201L)
+      val batch = Q.ivfPqIndex(
+        Seq((200L, v200, 0), (201L, v201, 0))
+          .toDF("vec_id", "embedding", "label"), cbs, cents, 8).collect()
+        .map(r => r.getAs[Long]("vec_id") ->
+          ((r.getAs[Long]("cid"), r.getSeq[Int](r.fieldIndex("codes")))))
+        .toMap
+      rows shouldBe batch
+    } finally q.stop()
   }
 
   test("recall universe keeps degenerate queries visible at recall 0") {

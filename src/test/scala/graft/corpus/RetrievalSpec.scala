@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -435,6 +436,41 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers
     applied(1L) shouldBe ((1, 1, "ab"))
   }
 
+  test("streaming BPE segmentation is batch-equal through a live query") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    def ts(t: String) = java.sql.Timestamp.valueOf(t)
+    val merges = Seq("t" -> "o", "to" -> "k") // frozen cascading list
+    val data = Seq(
+      (ts("2024-01-01 10:00:00"), 1L, "tok tokto  x"), // cascades + empty word
+      (ts("2024-01-01 10:01:00"), 2L, ""),
+      (ts("2024-01-01 10:02:00"), 3L, null: String))
+    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
+    val out = TextStats.applyBpe(
+      input.toDF().toDF("ts", "doc_id", "text"), merges)
+    val sink = s"bpeseg_${System.nanoTime}"
+    val q = out.writeStream.format("memory").queryName(sink)
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("bpeseg").toString)
+      .start()
+    try {
+      input.addData(data: _*)
+      q.processAllAvailable()
+      def key(r: org.apache.spark.sql.Row) = r.getAs[Long]("doc_id") ->
+        ((Option(r.get(r.fieldIndex("n_tokens"))),
+          Option(r.get(r.fieldIndex("n_subwords"))),
+          Option(r.get(r.fieldIndex("subword_text")))))
+      val streamed = s.table(sink).collect().map(key).toMap
+      val batch = graft.corpus.TextStats.applyBpe(
+        data.toDF("ts", "doc_id", "text"), merges).collect().map(key).toMap
+      streamed shouldBe batch
+      // and the cascade actually merged: "tok" → one subword
+      streamed(1L)._3.get.asInstanceOf[String] should startWith("tok ")
+    } finally q.stop()
+  }
+
   test("empty query sheet gates everything out; empty index fails loudly") {
     val corpus = docs(1L -> "alpha beta")
     val model = Retrieval.bm25Model(Retrieval.bm25Index(corpus),
@@ -664,6 +700,49 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers
       .toSeq shouldBe Seq((2L, 2L))
   }
 
+  test("streaming relevance gate keeps task-relevant docs with batch-equal scores") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val corpus = Seq((10L, "alpha beta gamma"), (11L, "beta beta delta"),
+      (12L, "gamma delta")).toDF("doc_id", "text")
+    val queries = Seq((0L, "alpha"), (1L, "delta")).toDF("doc_id", "text")
+    val model = graft.corpus.Retrieval.bm25Model(
+      graft.corpus.Retrieval.bm25Index(corpus), queries)
+    val input = MemoryStream[(Long, String, String)]
+    val out = Retrieval.bm25IngestGate(
+      input.toDF().toDF("doc_id", "text", "source"), model, "source")
+    out.isStreaming shouldBe true
+    val sink = s"relevance_${System.nanoTime}"
+    val q = out.writeStream.format("memory").queryName(sink)
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("relevance").toString)
+      .start()
+    try {
+      input.addData(
+        (7L, "alpha alpha", "src0"),     // matches query 0
+        (8L, "unrelated text", "src1"),  // gated out
+        (9L, "alpha delta", "src2"))     // matches both; best wins
+      q.processAllAvailable()
+      val rows = s.table(sink).collect()
+        .map(r => r.getAs[Long]("doc_id") ->
+          ((r.getAs[String]("source"), r.getAs[Long]("query_id"),
+            r.getAs[Double]("score")))).toMap
+      rows.keySet shouldBe Set(7L, 9L)
+      rows(7L)._1 shouldBe "src0"
+      rows(7L)._2 shouldBe 0L
+      // the streaming score equals the BATCH gate's score bit-for-bit
+      val batch = graft.corpus.Retrieval.bm25IngestGate(
+        Seq((7L, "alpha alpha"), (9L, "alpha delta")).toDF("doc_id", "text"),
+        model).collect()
+        .map(r => r.getAs[Long]("doc_id") ->
+          ((r.getAs[Long]("query_id"), r.getAs[Double]("score")))).toMap
+      (rows(7L)._2, rows(7L)._3) shouldBe batch(7L)
+      (rows(9L)._2, rows(9L)._3) shouldBe batch(9L)
+    } finally q.stop()
+  }
+
   private def vecs(rows: (Long, Seq[Double], Int)*): DataFrame = {
     import spark.implicits._
     rows.map { case (id, v, l) => (id, v.map(_.toFloat).toArray, l) }
@@ -800,6 +879,50 @@ class RetrievalSpec extends AnyFunSuite with SparkSpec with Matchers
       Seq(100L -> Seq(1.0, 0.0)), tau = 0.3).collect()
       .map(r => (r.getAs[Boolean]("relevant"), r.getAs[Boolean]("keep")))
     noSheet.toSet shouldBe Set((false, false))
+  }
+
+  test("streaming hybrid ingest screen decides batch-equal over a live query") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val corpus = Seq((10L, "alpha beta"), (11L, "beta gamma"))
+      .toDF("doc_id", "text")
+    val model = graft.corpus.Retrieval.bm25Model(
+      graft.corpus.Retrieval.bm25Index(corpus),
+      Seq((50L, "alpha")).toDF("doc_id", "text"))
+    val bench = Seq(100L -> Seq(1.0, 0.0))
+    val input = MemoryStream[(Long, String, Array[Float])]
+    val out = Retrieval.hybridIngestGate(
+      input.toDF().toDF("doc_id", "text", "embedding"), model, bench,
+      tau = 0.3)
+    out.isStreaming shouldBe true
+    val sink = s"screen_${System.nanoTime}"
+    val q = out.writeStream.format("memory").queryName(sink)
+      .outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("screen").toString)
+      .start()
+    try {
+      val batchIn = Seq(
+        (7L, "alpha alpha", Array(0.1f, 1f)),   // keep
+        (8L, "alpha", Array(1f, 0.1f)),         // contaminated
+        (9L, "nothing", Array(0f, 1f)),         // irrelevant
+        (6L, "alpha", Array(0f, 0f)))           // unscreenable
+      input.addData(batchIn: _*)
+      q.processAllAvailable()
+      def key(r: org.apache.spark.sql.Row) = r.getAs[Long]("doc_id") ->
+        ((r.getAs[Long]("query_id"), r.getAs[Double]("score"),
+          r.getAs[Long]("bench_id"), r.getAs[Double]("bench_cosine"),
+          r.getAs[Boolean]("relevant"), r.getAs[Boolean]("contaminated"),
+          r.getAs[Boolean]("screenable"), r.getAs[Boolean]("keep")))
+      val streamed = s.table(sink).collect().map(key).toMap
+      val batch = graft.corpus.Retrieval.hybridIngestGate(
+        batchIn.toDF("doc_id", "text", "embedding"), model, bench,
+        tau = 0.3).collect().map(key).toMap
+      streamed shouldBe batch
+      streamed(7L)._8 shouldBe true
+      streamed.filterNot(_._1 == 7L).values.map(_._8).toSet shouldBe Set(false)
+    } finally q.stop()
   }
 
   test("gate kernel: a zero-ROUNDED matching score still beats a matchless query on the tie") {

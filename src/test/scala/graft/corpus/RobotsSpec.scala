@@ -224,7 +224,7 @@ class RobotsSpec extends AnyFunSuite with SparkSpec with Matchers {
       2L -> "https://a.com/p/ok/y",
       3L -> "https://b.org/free",
       4L -> "junk")
-    val out = graft.streaming.StreamOps.gateByRobotsTxt(
+    val out = Robots.robotsTxtGate(
       input.toDF().toDF("doc_id", "url"), static)
     out.isStreaming shouldBe true
     val sink = s"robotstxt_${System.nanoTime}"

@@ -202,7 +202,7 @@ class SitemapSpec extends AnyFunSuite with SparkSpec with Matchers {
       .withColumn("lastmod", lit(null).cast("string"))
       .withColumn("changefreq", lit(null).cast("string"))
       .withColumn("priority_milli", lit(null).cast("long"))
-    val out = graft.streaming.StreamOps.discoverFromSitemaps(
+    val out = Robots.sitemapDiscovery(
       widen(input.toDF()), index)
     out.isStreaming shouldBe true
     val sink = s"sitemap_${System.nanoTime}"

@@ -103,7 +103,7 @@ class UrlDedupAgainstSpec extends AnyFunSuite with SparkSpec with Matchers {
     val rows = Seq(
       (1L, "HTTPS://WWW.a.com/p?gclid=z"), (2L, "https://new.site/"),
       (3L, "broken"))
-    val out = graft.streaming.StreamOps.dedupUrlsAgainst(
+    val out = TextDedup.urlDedupAgainst(
       input.toDF().toDF("doc_id", "url"), index)
     out.isStreaming shouldBe true
     val sink = s"urldedup_${System.nanoTime}"

@@ -193,7 +193,7 @@ class UrlPlaneSpec extends AnyFunSuite with SparkSpec with Matchers {
     val rows = Seq(
       (1L, "HTTPS://WWW.Brand1.COM:443/p?utm_source=x&id=2#f"),
       (2L, "http://fine.org/a/"), (3L, "broken"))
-    val out = graft.streaming.StreamOps.gateByDomain(
+    val out = Curation.domainGate(
       input.toDF().toDF("doc_id", "url"))
     out.isStreaming shouldBe true
     val sink = s"urlgate_${System.nanoTime}"

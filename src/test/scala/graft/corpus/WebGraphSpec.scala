@@ -423,7 +423,7 @@ class WebGraphSpec extends AnyFunSuite with SparkSpec with Matchers {
       .toDF("src_url", "dst_url")).localCheckpoint()
     val rows = Seq(1L -> "http://a.com/1?utm_source=f",
       2L -> "http://c.com/3", 3L -> "http://x.com/", 4L -> "bad")
-    val out = graft.streaming.StreamOps.resolveRedirectsAgainst(
+    val out = WebGraph.resolveRedirectsAgainst(
       input.toDF().toDF("doc_id", "url"), compiled)
     out.isStreaming shouldBe true
     val sink = s"redirects_${System.nanoTime}"

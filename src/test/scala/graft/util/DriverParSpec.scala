@@ -47,9 +47,10 @@ class DriverParSpec extends AnyFunSuite with Matchers {
 }
 
 /** The Spark half of the [[DriverPar]] contract: the first failure CANCELS
-  * sibling job groups mid-stage instead of letting them burn to
-  * completion — on a real cluster a failed plane must not keep its
-  * siblings computing results nobody will read. */
+  * sibling jobs mid-stage instead of letting them burn to completion — on
+  * a real cluster a failed plane must not keep its siblings computing
+  * results nobody will read — and the thunks' jobs stay in the CALLER's
+  * job group, so the caller's own cancellation and accounting reach them. */
 class DriverParCancelSpec extends AnyFunSuite with graft.SparkSpec
     with Matchers {
   test("first failure cancels a sibling's running Spark job group and the " +
@@ -81,6 +82,75 @@ class DriverParCancelSpec extends AnyFunSuite with graft.SparkSpec
     withClue(s"rows folded from successful tasks: ${seen.value} of 12000 — " +
         "an uncancelled sibling runs to completion and folds them all: ") {
       seen.value.longValue should be < 12000L
+    }
+  }
+
+  test("thunk jobs run in the CALLER's job group: they carry its id, and " +
+      "the caller's cancelJobGroup stops a running thunk job") {
+    val s = spark
+    val sc = s.sparkContext
+    import org.apache.spark.sql.functions.{col, udf}
+    val group = s"driverpar-caller-${System.nanoTime}"
+    // jobs are found by a caller-set local property that every spawned
+    // thread inherits, whatever job group or tags the threads carry
+    val marker = "graft.spec.driverpar.marker"
+    val sentinel = s"$group-sentinel"
+    val jobGroups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    @volatile var sentinelSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty(marker) == group) jobGroups.put(e.jobId,
+            String.valueOf(p.getProperty("spark.jobGroup.id")))
+          if (p.getProperty(marker) == sentinel) sentinelSeen = true
+        }
+    }
+    val seen = sc.longAccumulator("driverpar-caller-rows")
+    val slow = udf((_: Long) => { seen.add(1); Thread.sleep(10); true })
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "driverpar caller group")
+    try {
+      sc.setLocalProperty(marker, group)
+      DriverPar.settleAll(Seq(() => s.range(10).count(),
+        () => s.range(20).repartition(2).count())) shouldBe Seq(10L, 20L)
+      // the listener bus delivers in order: once a later caller job's start
+      // is seen, every thunk job's start has been seen
+      sc.setLocalProperty(marker, sentinel)
+      s.range(1).count()
+      val deadline = System.nanoTime + 30000000000L
+      while (!sentinelSeen && System.nanoTime < deadline) Thread.sleep(20)
+      sentinelSeen shouldBe true
+      withClue("job groups of the thunks' jobs: ") {
+        jobGroups.isEmpty shouldBe false
+        jobGroups.values.toArray.toSet shouldBe Set(group)
+      }
+      // the caller cancels its own group while the thunk's job runs. It
+      // keeps cancelling until settleAll returns, so a cancel that lands
+      // between two of the action's jobs (AQE stages) cannot let the next
+      // one run; cancelJobGroup never touches jobs not yet submitted
+      @volatile var settled = false
+      val canceller = new Thread(() => {
+        while (!settled) { sc.cancelJobGroup(group); Thread.sleep(50) }
+      })
+      canceller.setDaemon(true)
+      canceller.start()
+      val e = try intercept[Exception] {
+        // 4 tasks × 3 000 rows × 10 ms ≈ 30 s natural runtime
+        DriverPar.settleAll(Seq(() => s.range(12000).repartition(4)
+          .filter(slow(col("id"))).count()))
+      } finally { settled = true; canceller.join() }
+      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+        .toLowerCase should include("cancel")
+      withClue(s"rows folded from successful tasks: ${seen.value} of " +
+          "12000 — a job outside the caller's group runs to completion: ") {
+        seen.value.longValue should be < 12000L
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty(marker, null)
+      sc.removeSparkListener(listener)
     }
   }
 }
